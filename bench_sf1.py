@@ -200,6 +200,11 @@ def _cpu_scaling_pass(sf1_results: dict) -> dict | None:
         [sys.executable, os.path.abspath(__file__)],
         env=env, capture_output=True, text=True, timeout=3600,
     )
+    if proc.returncode != 0:
+        tail = "\n".join(proc.stderr.strip().splitlines()[-20:])
+        print(f"# cpu-scaling pass exited {proc.returncode}; stderr tail:\n"
+              f"{tail}", file=sys.stderr)
+        return None
     line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "{}"
     try:
         low_secs = json.loads(line)

@@ -23,7 +23,9 @@ from __future__ import annotations
 
 import json
 import math
+import re
 from datetime import datetime, timedelta, timezone
+from itertools import accumulate
 from typing import Any, Iterable, Iterator
 
 # naive-UTC epoch anchor for the hot timestamp conversion (extract_timestamp)
@@ -35,6 +37,33 @@ except ImportError:  # pragma: no cover - env without orjson
     _fastjson = None
 
 
+# Lines nested deeper than this are rejected before any parser sees them.
+# orjson's parser recurses on the C stack: a line of ~150k open brackets
+# (300 KB) overflows the worker's 8 MB stack and the process dies with
+# SIGSEGV, failing the whole micro-batch on every replay. Deep but sane
+# nesting (thousands of levels) still decodes on the fast path.
+MAX_JSON_DEPTH = 10_000
+# One match per string, never a backtrack: the closing quote is optional,
+# so an unterminated string runs to the end of the line in the same match
+# (with a required quote, every escaped quote of such a line would start
+# a failing scan to the end: quadratic time on one malformed line).
+_JSON_STRING = re.compile(r'"[^"\\]*(?:\\.[^"\\]*)*"?', re.S)
+_BRACKET = re.compile(r"[\[\]{}]")
+_BRACKET_STEP = {"[": 1, "{": 1, "]": -1, "}": -1}
+
+
+def _too_deep(line: str) -> bool:
+    """Whether ``line`` nests past :data:`MAX_JSON_DEPTH`. Lines shorter
+    than the bound (nearly all) cannot, and are answered by ``len``."""
+    if len(line) <= MAX_JSON_DEPTH or (
+        line.count("[") + line.count("{") <= MAX_JSON_DEPTH
+    ):
+        return False
+    steps = map(_BRACKET_STEP.__getitem__,
+                _BRACKET.findall(_JSON_STRING.sub("", line)))
+    return max(accumulate(steps), default=0) > MAX_JSON_DEPTH
+
+
 def _loads(line: str) -> Any:
     """json.loads with an orjson fast path.
 
@@ -42,8 +71,12 @@ def _loads(line: str) -> Any:
     NaN/Infinity literals, deep nesting beyond its fixed limit) — on ANY
     orjson failure, fall back to stdlib so accepted-input semantics are
     byte-identical with or without the fast path; only genuinely bad lines
-    pay the double parse.
+    pay the double parse. Lines past :data:`MAX_JSON_DEPTH` raise
+    ``JSONDecodeError`` without being parsed.
     """
+    if _too_deep(line):
+        raise json.JSONDecodeError(
+            f"nested deeper than {MAX_JSON_DEPTH} levels", line, 0)
     if _fastjson is not None:
         try:
             return _fastjson.loads(line)
@@ -52,6 +85,7 @@ def _loads(line: str) -> Any:
     return json.loads(line)
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .config import EngineConfig
 from .schema import (
@@ -431,6 +465,7 @@ def decode_dataframe(
     config: EngineConfig | None = None,
     value_column: str = "value",
     ensure_width: bool = True,
+    reject_column: str | None = None,
 ) -> DataFrame:
     """Vectorized decode: DataFrame[value: string] -> DataFrame[LOG_SCHEMA].
 
@@ -443,10 +478,23 @@ def decode_dataframe(
     already repartitioned upstream: ``raw.rdd.getNumPartitions()`` forces a
     full physical plan of the input (measured ~0.3 s of driver time per
     invocation), pure waste when the width is known.
+
+    ``reject_column`` keeps the lines :func:`decode_json_lines` rejects
+    (non-JSON, non-object, nested past :data:`MAX_JSON_DEPTH`) from the same
+    pass: the output gains that nullable string column, null on decoded
+    rows and the raw line on reject rows, whose other columns are
+    placeholders (null, and the batch clock as ``timestamp``). Callers
+    split the two row kinds on it (``stream``'s dead-letter channel).
     """
     cfg = config or _DEFAULT_CONFIG
     # pre-resolve the force-number membership set once (hot loop: per record)
     cfg._force_set = set(cfg.force_number_fields)
+    names = LOG_SCHEMA.fieldNames()
+    schema = LOG_SCHEMA
+    if reject_column is not None:
+        schema = StructType(
+            LOG_SCHEMA.fields + [StructField(reject_column, StringType())]
+        )
 
     if not raw.isStreaming and ensure_width:
         # batch inputs often arrive as a handful of large files; the decode
@@ -460,11 +508,18 @@ def decode_dataframe(
         import pandas as pd
 
         for batch in batches:
-            rows = list(decode_json_lines(batch[value_column].tolist(), cfg))
-            if not rows:
+            now = datetime.now(timezone.utc).replace(tzinfo=None)
+            rejects: list[str] | None = [] if reject_column else None
+            rows = list(decode_json_lines(
+                batch[value_column].tolist(), cfg, now, rejects))
+            if not rows and not rejects:
                 continue
-            yield pd.DataFrame(
-                {name: [r[name] for r in rows] for name in LOG_SCHEMA.fieldNames()}
-            )
+            out = {name: [r[name] for r in rows] for name in names}
+            if rejects is not None:
+                for name in names:
+                    fill = now if name == "timestamp" else None
+                    out[name] += [fill] * len(rejects)
+                out[reject_column] = [None] * len(rows) + rejects
+            yield pd.DataFrame(out)
 
-    return raw.mapInPandas(_decode, schema=LOG_SCHEMA)
+    return raw.mapInPandas(_decode, schema=schema)

@@ -55,6 +55,11 @@ class ClickHouseSink:
     pool bounds map to max_open_conns, clickhouse.go:137-139).
     """
 
+    # write_batch runs foreachPartition on the RDD, which fires no Dataset
+    # Observation: ingest metrics count the batch from a cache instead
+    # (stream._make_batch_processor)
+    counts_from_cache = True
+
     def __init__(
         self,
         config: EngineConfig,

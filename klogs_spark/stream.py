@@ -6,7 +6,9 @@ buffer -> size-or-time flush -> batched INSERT. Spark mapping (SURVEY §3.2):
     readStream (json-lines files / any streaming source)        <- S1/S7
       -> foreachBatch:
            decode_dataframe (flatten+dispatch, Arrow batches)   <- P1,P2,S2
+             rejects leave the same pass for the dead-letter dir
            sink.write(batch)                                    <- S3
+             ingest metrics ride the sink's job as Observations
       trigger(processingTime=flush_interval)                    <- T1
       checkpointLocation=...                                    <- T2/T4
 
@@ -244,6 +246,44 @@ def _resolve_sink(
     return sink
 
 
+# Column of decode_dataframe's output that carries a rejected line
+_REJECT = "_reject"
+
+
+def _count_observations(spark: SparkSession) -> tuple | None:
+    """Two Observations (raw lines, decoded rows) that ride the sink's own
+    job, or None under ``spark.speculation``, where Observation counts
+    would double."""
+    from .manifest import _retry_safe_observation
+
+    try:
+        return _retry_safe_observation(spark), _retry_safe_observation(spark)
+    except ValueError:
+        return None
+
+
+def _observed_rows(obs, df: DataFrame) -> int:
+    """The row count ``obs`` observed on ``df``, or ``df.count()`` when no
+    Dataset action over ``df`` ran (a sink that takes no action, such as
+    a replayed batch that is already published). Observations complete on
+    the listener bus after the action returns; once the bus is drained an
+    incomplete one will not complete, so ``get`` never blocks. A bus that
+    does not drain within its 10 s bound also gets the direct count."""
+    from py4j.protocol import Py4JError
+
+    if obs is not None:
+        done = obs._jo.future().isCompleted
+        if not done():
+            bus = df.sparkSession.sparkContext._jsc.sc().listenerBus()
+            try:
+                bus.waitUntilEmpty()
+            except Py4JError:  # TimeoutException
+                pass
+        if done():
+            return int(obs.get["n"])
+    return df.count()
+
+
 def _make_batch_processor(
     cfg: EngineConfig,
     sink_fn: Callable[[DataFrame, int], None],
@@ -257,11 +297,28 @@ def _make_batch_processor(
     dead-letter directory makes them replayable instead — each micro-batch
     appends its reject lines so nothing is silently lost.
 
+    A JSON batch is parsed once: the decode pass emits each rejected line
+    in a nullable reject column, and the sink gets the rows whose reject
+    column is null, without the column. With a dead-letter directory the
+    decoded frame is persisted, so the dead-letter write reads the other
+    rows back from the cache instead of parsing the input again; without
+    one nothing is persisted.
+
     ``metrics`` hooks the flush path inline, exactly where the reference
     instruments (main.go:246, 371-373) — ``input_records_total`` counts the
     RAW received lines before decode (reference semantics: rejects/blanks
     are received records too), ``batch_size`` summarizes the decoded rows
-    actually flushed, and ``flush_time_seconds`` times decode+sink. (A
+    actually flushed, and ``flush_time_seconds`` times decode+sink. Both
+    counts are Observations on the sink's own job (raw lines below the
+    decode, decoded rows above it), so they add no Spark job. The first
+    Dataset action over the batch completes them, which is exact when that
+    action reads the whole batch. A sink for which that does not hold sets
+    a true ``counts_from_cache`` attribute: one whose first action reads
+    only part of its batch (an ``isEmpty()`` early return), or one that
+    leaves the Dataset API (``foreachPartition`` runs on the RDD and fires
+    no Observation). For such a sink, and under ``spark.speculation``,
+    the raw and decoded frames are persisted and both counts read the
+    caches after the sink, so the batch is still decoded once. (A
     StreamingQueryListener would need the py4j callback server, which
     headless drivers may not run.)
 
@@ -279,20 +336,48 @@ def _make_batch_processor(
         raise ValueError("dead_letter_dir is json-only (msgpack chunks are "
                          "warn-and-drop, reference main.go:251-254)")
 
+    # set on a sink function, or on the object behind a callable instance
+    # or bound method (ClickHouseSink)
+    counts_from_cache = getattr(
+        getattr(sink_fn, "__self__", sink_fn), "counts_from_cache", False)
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time
+
+        from pyspark.sql import functions as F
 
         from .decode import decode_msgpack_dataframe
 
         t0 = _time.perf_counter()
-        if metrics is not None:
-            batch_df = batch_df.persist()
+        obs = None
+        if metrics is not None and not counts_from_cache:
+            obs = _count_observations(batch_df.sparkSession)
+        from_cache = metrics is not None and obs is None
+        raw_obs, rows_obs = obs or (None, None)
+        persisted: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            persisted.append(df.persist())
+            return persisted[-1]
+
+        raw = cache(batch_df) if from_cache else batch_df
+        if raw_obs is not None:
+            raw = raw.observe(raw_obs, F.count(F.lit(1)).alias("n"))
+        dead = None
         if input_format == "msgpack":
-            decoded = decode_msgpack_dataframe(batch_df, cfg)
+            decoded = decode_msgpack_dataframe(raw, cfg)
+            if from_cache:
+                decoded = cache(decoded)
         else:
-            decoded = decode_dataframe(batch_df, cfg)
-        if metrics is not None:
-            decoded = decoded.persist()
+            split = decode_dataframe(raw, cfg, reject_column=_REJECT)
+            if dead_letter_dir or from_cache:
+                split = cache(split)
+            decoded = split.filter(F.col(_REJECT).isNull()).drop(_REJECT)
+            if dead_letter_dir:
+                dead = split.filter(F.col(_REJECT).isNotNull()).select(
+                    F.col(_REJECT).alias("value"))
+        if rows_obs is not None:
+            decoded = decoded.observe(rows_obs, F.count(F.lit(1)).alias("n"))
         try:
             try:
                 sink_fn(decoded, batch_id)
@@ -300,54 +385,19 @@ def _make_batch_processor(
                 if metrics is not None:
                     metrics.observe_error()
                 raise
+            elapsed = _time.perf_counter() - t0
+            if dead is not None:
+                dead.write.mode("append").text(dead_letter_dir)
             if metrics is not None:
-                # elapsed captured BEFORE the counts so the count jobs'
-                # runtime is not folded into the flush duration; both counts
-                # read persisted data instead of re-scanning the source
-                elapsed = _time.perf_counter() - t0
                 metrics.observe_batch(
-                    batch_df.count(), elapsed, decoded_rows=decoded.count()
+                    _observed_rows(raw_obs, batch_df), elapsed,
+                    decoded_rows=_observed_rows(rows_obs, decoded),
                 )
         finally:
             # unpersist even when the sink raises — a long-running stream
             # must not leak one cached DataFrame per failed micro-batch
-            if metrics is not None:
-                decoded.unpersist()
-                batch_df.unpersist()
-        if dead_letter_dir:
-            def _find_rejects(batches):
-                import json as _json
-
-                import pandas as pd
-
-                # the SAME parser as the decode stage (orjson fast path with
-                # stdlib fallback) — accept/reject decisions must agree or a
-                # line could be both decoded and dead-lettered
-                from .decode import _loads
-
-                for batch in batches:
-                    rejects = []
-                    for line in batch["value"].tolist():
-                        line = line.strip()
-                        if not line:
-                            continue
-                        try:
-                            obj = _loads(line)
-                        except (_json.JSONDecodeError, RecursionError):
-                            rejects.append(line)
-                            continue
-                        record = (
-                            obj.get("record")
-                            if isinstance(obj, dict) and "record" in obj
-                            else obj
-                        )
-                        if not isinstance(record, dict):
-                            rejects.append(line)
-                    if rejects:
-                        yield pd.DataFrame({"value": rejects})
-
-            bad = batch_df.mapInPandas(_find_rejects, schema="value string")
-            bad.write.mode("append").text(dead_letter_dir)
+            for df in persisted:
+                df.unpersist()
 
     return process_batch
 

@@ -201,6 +201,9 @@ def upsert_logs_sink(path: str, key_cols: list[str]):
             return
         cow_merge_upsert(batch.sparkSession, path, batch, key_cols)
 
+    # the isEmpty() probe is a partial read of the batch: ingest metrics
+    # count it from a cache (stream._make_batch_processor)
+    sink_fn.counts_from_cache = True
     return sink_fn
 
 
@@ -253,6 +256,9 @@ def decontaminating_docs_sink(
             hits.unpersist(True)
             batch.unpersist(True)
 
+    # the isEmpty() probe is a partial read of the batch: ingest metrics
+    # count it from a cache (stream._make_batch_processor)
+    sink_fn.counts_from_cache = True
     return sink_fn
 
 
@@ -347,6 +353,9 @@ def cdc_rollup_sink(path: str, rollup_path: str):
             owner=f"cdc_rollup_sink:{path}",
         )
 
+    # the isEmpty() probe is a partial read of the batch: ingest metrics
+    # count it from a cache (stream._make_batch_processor)
+    sink_fn.counts_from_cache = True
     return sink_fn
 
 
@@ -391,4 +400,7 @@ def gdpr_delete_sink(path: str, key_col: str = "pod_name"):
             batch.sparkSession, path, F.col(key_col).isin(keys)
         )
 
+    # the isEmpty() probe is a partial read of the batch: ingest metrics
+    # count it from a cache (stream._make_batch_processor)
+    sink_fn.counts_from_cache = True
     return sink_fn

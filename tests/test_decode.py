@@ -3,6 +3,7 @@ cited in SURVEY §2.2 (flatten.go, main.go type-switch/envelope routing)."""
 
 from __future__ import annotations
 
+import time
 from datetime import datetime
 
 import pytest
@@ -284,3 +285,43 @@ def test_deep_json_decodes_on_fast_path():
     rejects: list[str] = []
     rows = list(decode_json_lines([bad, good], rejects=rejects))
     assert len(rows) == 2 and rejects == []
+
+
+def test_nesting_past_the_depth_bound_is_rejected_before_parsing(monkeypatch):
+    """Lines nested past MAX_JSON_DEPTH never reach a parser (orjson's
+    recursion overflows the C stack there and kills the worker); brackets
+    inside strings, after an escaped quote, and wide-but-flat lines do not
+    count as depth."""
+    from klogs_spark import decode as decode_mod
+    from klogs_spark.decode import MAX_JSON_DEPTH, decode_json_lines
+
+    def parse_forbidden(line):
+        raise AssertionError("an over-deep line reached the parser")
+
+    def nested(depth: int) -> str:
+        return ('{"ts": 1, "record": {"d": ' + "[" * (depth - 2)
+                + "]" * (depth - 2) + "}}")
+
+    many = 3 * MAX_JSON_DEPTH
+    in_string = '{"ts": 1, "record": {"s": "\\"' + "[" * many + '"}}'
+    wide = ('{"ts": 1, "record": {"d": [' + ",".join(["[]"] * many)
+            + "]}}")
+    rejects: list[str] = []
+    rows = list(decode_json_lines(
+        [nested(MAX_JSON_DEPTH), in_string, wide], rejects=rejects))
+    assert len(rows) == 3 and rejects == []
+    assert rows[1]["fields_string"]["s"] == '"' + "[" * many
+    # a truncated line whose open string holds 300k escaped quotes: the
+    # depth scan must stay linear (one string match, no backtracking)
+    truncated = '{"log":"' + '\\"[' * 300_000
+    t0 = time.perf_counter()
+    assert list(decode_json_lines([truncated], rejects=rejects)) == []
+    assert time.perf_counter() - t0 < 5.0
+    assert rejects == [truncated]
+    rejects.clear()
+    if decode_mod._fastjson is not None:
+        monkeypatch.setattr(decode_mod._fastjson, "loads", parse_forbidden)
+    monkeypatch.setattr(decode_mod.json, "loads", parse_forbidden)
+    over = nested(MAX_JSON_DEPTH + 1)
+    rows = list(decode_json_lines([over], rejects=rejects))
+    assert rows == [] and rejects == [over]

@@ -2057,8 +2057,11 @@ def test_quality_gate_forms_agree_on_edge_docs(spark):
         quality_filter, quality_kept_rows, with_quality_keep,
     )
 
-    healthy = ("the cat sat of the mat and the dog ran to the park and "
-               "a bird flew of the tree to a nest and all was well there")
+    # top token share under FILTER_MAX_TOP_TOKEN_PPM (a 28-token doc with
+    # five "the" trips the repetition gate), so every gate passes
+    healthy = ("the cat sat of the mat and a dog ran to our park and one "
+               "bird flew from an old tree to its nest where all was well "
+               "there")
     rows = [
         (1, None), (2, ""), (3, "   "), (4, "x " * 19), (5, "x " * 25),
         (6, "the " * 40), (7, "zz qq ww " * 10), (8, healthy),
@@ -2077,4 +2080,5 @@ def test_quality_gate_forms_agree_on_edge_docs(spark):
     for i, keep in keep_map.items():
         assert flag_map[i] == keep, (i, flag_map[i], keep)
     assert kept_ids == {i for i, k in flag_map.items() if k}
-    assert 8 in kept_ids and 1 not in flag_map or not flag_map.get(1)
+    assert 8 in kept_ids
+    assert not flag_map.get(1)

@@ -405,3 +405,283 @@ def test_indexed_sink_snapshot_mode_publishes_batch_consistent_versions(
     # never observes a torn table
     assert read_snapshot(spark, path, v1).count() == b1.count()
     assert read_snapshot(spark, path, v2).count() == b1.count() + b2.count()
+
+
+REJECT_LINES = {
+    "non_json": '{"ts": 3, "record": {"log": "truncated',
+    "non_object": json.dumps({"ts": 4, "record": [1, 2, 3]}),
+    "over_deep": '{"ts": 5, "record": {"d": ' + "[" * 20_000 + "]" * 20_000
+                 + "}}",
+}
+
+
+def _write_lines(d: Path, lines: list[str]) -> str:
+    d.mkdir()
+    (d / "batch.json").write_text("\n".join(lines) + "\n")
+    return str(d)
+
+
+def _dead_lines(spark, path: str) -> list[str]:
+    return [r.value for r in spark.read.text(path).collect()]
+
+
+def test_each_reject_class_reaches_dead_letter_exactly_once(spark, tmp_path):
+    """One decode pass splits rejects off: every class the decoder rejects
+    lands in the dead-letter dir once, and only the good lines in the
+    table."""
+    good = [json.dumps({"ts": 1, "record": {"log": "good-1"}}),
+            json.dumps({"log": "bare"})]
+    src = _write_lines(tmp_path / "raw", good + list(REJECT_LINES.values()))
+    out, dl = str(tmp_path / "logs"), str(tmp_path / "dead")
+    run_ingest_once(read_json_lines_stream(spark, src), out,
+                    checkpoint_dir=str(tmp_path / "ckpt"), dead_letter_dir=dl)
+    assert sorted(r.log for r in read_logs(spark, out).collect()) == [
+        "bare", "good-1"]
+    assert sorted(_dead_lines(spark, dl)) == sorted(REJECT_LINES.values())
+
+
+def test_poison_pill_deep_line_is_dead_lettered_not_a_crash(spark, tmp_path):
+    """A 200k-deep line overflows the C stack of orjson's parser, which
+    kills the Python worker and fails the micro-batch on every replay.
+    Rejected before parsing, it is dead-lettered and the batch's good
+    lines reach the table."""
+    from klogs_spark.metrics import IngestMetrics
+
+    poison = "[" * 200_000 + "]" * 200_000
+    good = [json.dumps({"ts": 1 + i, "record": {"log": f"g{i}"}})
+            for i in range(3)]
+    src = _write_lines(tmp_path / "raw", [good[0], poison, *good[1:]])
+    out, dl = str(tmp_path / "logs"), str(tmp_path / "dead")
+    m = IngestMetrics()
+    run_ingest_once(read_json_lines_stream(spark, src), out,
+                    checkpoint_dir=str(tmp_path / "ckpt"), dead_letter_dir=dl,
+                    metrics=m)
+    assert sorted(r.log for r in read_logs(spark, out).collect()) == [
+        "g0", "g1", "g2"]
+    assert _dead_lines(spark, dl) == [poison]
+    assert m.input_records_total == 4 and m.batch_sizes == [3.0]
+
+
+def _python_execs_since(spark, last_id: int) -> list[int]:
+    """Ids of the SQL executions after ``last_id`` whose Python exec sent
+    data to Python workers (a cached Python exec that is only read back
+    shows in the plan but sends nothing)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    recent = store.executionsList(max(0, n - 200), 200)
+    out = []
+    for i in range(recent.size()):
+        eid = recent.apply(i).executionId()
+        if eid <= last_id:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            ms = nodes.apply(j).metrics()
+            sent = [values.get(ms.apply(k).accumulatorId())
+                    for k in range(ms.size())
+                    if ms.apply(k).name() == "data sent to Python workers"]
+            if any(v.isDefined() and not v.get().startswith("0.0 B")
+                   for v in sent):
+                out.append(eid)
+                break
+    return out
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    if n == 0:
+        return -1
+    return int(store.executionsList(n - 1, 1).apply(0).executionId())
+
+
+def test_json_batch_runs_one_python_pass(spark, tmp_path, monkeypatch):
+    """Decode, dead-letter split and both metric counts share one Python
+    exec over the input: the reject lines leave the decode pass itself
+    and the counts ride the sink's job as Observations."""
+    from klogs_spark.metrics import IngestMetrics
+
+    good = [json.dumps({"ts": i, "record": {"log": f"g{i}"}})
+            for i in range(10)]
+    src = _write_lines(tmp_path / "raw", good + ["NOT JSON"])
+    m = IngestMetrics()
+    last = _last_execution_id(spark)
+    df_cls = type(spark.range(1))
+    count = df_cls.count
+    counted = []
+
+    def spy(self):
+        counted.append(self)
+        return count(self)
+
+    # a count() would mean an Observation did not fire; the one from the
+    # cached frame would send nothing to Python and go unseen below
+    monkeypatch.setattr(df_cls, "count", spy)
+    run_ingest_once(read_json_lines_stream(spark, src), str(tmp_path / "logs"),
+                    checkpoint_dir=str(tmp_path / "ckpt"),
+                    dead_letter_dir=str(tmp_path / "dead"), metrics=m)
+    monkeypatch.undo()
+    assert counted == []
+    assert len(_python_execs_since(spark, last)) == 1
+    assert m.input_records_total == 11 and m.batch_sizes == [10.0]
+    assert _dead_lines(spark, str(tmp_path / "dead")) == ["NOT JSON"]
+
+
+def test_metrics_without_sink_action_do_not_hang(spark, tmp_path):
+    """A sink that runs no Spark action never fires the batch's
+    Observations; the counts then come from count() instead of waiting
+    forever, and the raw lines are still counted."""
+    import threading
+
+    from klogs_spark.metrics import IngestMetrics
+
+    src = _write_lines(tmp_path / "raw", [
+        json.dumps({"ts": 1, "record": {"log": "a"}}), "NOT JSON",
+        json.dumps({"ts": 2, "record": {"log": "b"}})])
+    m = IngestMetrics()
+    errors = []
+
+    def drain():
+        try:
+            run_ingest_once(read_json_lines_stream(spark, src),
+                            lambda batch_df, batch_id: None,
+                            checkpoint_dir=str(tmp_path / "ckpt"), metrics=m)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=drain, daemon=True)
+    t.start()
+    t.join(180)
+    assert not t.is_alive(), "ingest with metrics hung on a no-action sink"
+    assert not errors
+    assert m.input_records_total == 3
+    assert m.batch_sizes == [2.0]
+
+
+def _write_files(d: Path, files: list[list[str]]) -> str:
+    d.mkdir()
+    for i, lines in enumerate(files):
+        (d / f"part-{i}.json").write_text("\n".join(lines) + "\n")
+    return str(d)
+
+
+def test_metrics_exact_for_sink_that_probes_isempty_first(spark, tmp_path):
+    """upsert_logs_sink starts with isEmpty(), a partial read that would
+    complete an Observation with the first partitions' counts. Over a
+    several-partition batch the counts must still be exact."""
+    from klogs_spark.manifest import publish_snapshot, read_logs_at
+    from klogs_spark.metrics import IngestMetrics
+    from klogs_spark.streaming_ext import upsert_logs_sink
+
+    path = str(tmp_path / "t")
+    seed = _write_files(tmp_path / "seed", [[json.dumps(EVENTS[0])]])
+    run_ingest_once(read_json_lines_stream(spark, seed), path,
+                    checkpoint_dir=str(tmp_path / "ckpt0"))
+    publish_snapshot(spark, path)
+    files = [[json.dumps(ev) for ev in EVENTS[i * 5:(i + 1) * 5]]
+             for i in range(4)]
+    files[2].append("NOT JSON")
+    src = _write_files(tmp_path / "raw", files)
+    m = IngestMetrics()
+    run_ingest_once(read_json_lines_stream(spark, src),
+                    upsert_logs_sink(path, key_cols=["timestamp"]),
+                    checkpoint_dir=str(tmp_path / "ckpt1"), metrics=m)
+    assert m.input_records_total == 21
+    assert m.batch_sizes == [20.0]
+    assert read_logs_at(spark, path).count() == 20
+
+
+def test_clickhouse_sink_metrics_decode_msgpack_once(spark, tmp_path):
+    """ClickHouseSink writes through foreachPartition on the RDD, which
+    fires no Observation. With metrics on the batch is still decoded
+    once: the counts read the caches, and no count sends rows to
+    Python."""
+    from klogs_spark.metrics import IngestMetrics
+    from klogs_spark.msgpack_lite import pack
+    from klogs_spark.sink_clickhouse import ClickHouseSink
+    from klogs_spark.stream import read_msgpack_chunk_stream
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    spool_dir = str(spool)
+
+    def factory():
+        import os
+        import uuid
+
+        class Cursor:
+            def __init__(self, rows):
+                self.rows = rows
+
+            def executemany(self, sql, rows):
+                self.rows.extend(rows)
+
+        class Connection:
+            def __init__(self):
+                self.rows = []
+
+            def cursor(self):
+                return Cursor(self.rows)
+
+            def commit(self):
+                name = os.path.join(spool_dir, uuid.uuid4().hex)
+                with open(name, "w") as f:
+                    f.write(str(len(self.rows)))
+                self.rows = []
+
+            def rollback(self):
+                self.rows = []
+
+            def close(self):
+                pass
+
+        return Connection()
+
+    d = tmp_path / "chunks"
+    d.mkdir()
+    for c in range(3):
+        (d / f"chunk-{c}.msgpack").write_bytes(b"".join(
+            pack([1755043200 + c * 10 + i, {"log": f"l{c}-{i}"}])
+            for i in range(4)))
+    m = IngestMetrics()
+    last = _last_execution_id(spark)
+    run_ingest_once(read_msgpack_chunk_stream(spark, str(d)),
+                    ClickHouseSink(EngineConfig(), factory),
+                    checkpoint_dir=str(tmp_path / "ckpt"),
+                    input_format="msgpack", metrics=m)
+    assert _python_execs_since(spark, last) == []
+    assert sum(int(p.read_text()) for p in spool.iterdir()) == 12
+    assert m.input_records_total == 3  # chunks: raw rows of the batch
+    assert m.batch_sizes == [12.0]
+
+
+@pytest.mark.parametrize("dead_letter, from_cache", [
+    (True, False), (False, True), (True, True)])
+def test_no_cache_leak_when_sink_fails_after_reading(
+        spark, raw_dir, tmp_path, dead_letter, from_cache):
+    """The frames a batch persists (the decode output for dead-letter, the
+    raw and decoded frames for a counts_from_cache sink) are released
+    when the sink fails after its read materialized them."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from klogs_spark.metrics import IngestMetrics
+
+    def fail_after_read(batch_df, batch_id):
+        batch_df.count()
+        raise RuntimeError("injected sink failure")
+
+    if from_cache:
+        fail_after_read.counts_from_cache = True
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    m = IngestMetrics()
+    with pytest.raises(StreamingQueryException):
+        run_ingest_once(
+            read_json_lines_stream(spark, raw_dir), fail_after_read,
+            checkpoint_dir=str(tmp_path / "ckpt"), metrics=m,
+            dead_letter_dir=str(tmp_path / "dead") if dead_letter else None)
+    assert m.errors_total == 1
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
