@@ -73,16 +73,42 @@ def release_tracked() -> int:
     return n
 
 
-def _size_bytes(text: str) -> int:
-    """Parse a Spark byte-size conf string ('128m', '1g', '134217728b',
-    bare digits = bytes)."""
-    t = text.strip().lower()
-    units = {"b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
-             "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4}
-    for suffix in sorted(units, key=len, reverse=True):
-        if t.endswith(suffix):
-            return int(t[: -len(suffix)]) * units[suffix]
-    return int(t)
+# file formats whose files always split at maxPartitionBytes; text-based
+# formats split only when uncompressed (a gzip file is one partition)
+_SPLITTABLE_FORMATS = {"ParquetFileFormat", "OrcFileFormat"}
+
+
+def _scan_splits(df) -> int:
+    """A lower bound on the scan splits ``df``'s input arrives in, or 0
+    when the plan's size estimate cannot be trusted. Trusted only when
+    every leaf of the optimized plan is a file scan of a splittable
+    format and the plan's ``sizeInBytes`` is not the
+    ``spark.sql.defaultSizeInBytes`` placeholder (the estimate of an
+    RDD, ``createDataFrame`` or other non-file leaf). The bound is the
+    leaves' total file bytes over ``maxPartitionBytes``: the plan root's
+    own estimate multiplies through joins, and the real split count
+    additionally charges ``openCostInBytes`` per file."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if int(str(plan.stats().sizeInBytes())) >= conf.defaultSizeInBytes():
+        return 0
+    leaves = plan.collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return 0
+        rel = leaf.relation()
+        if (
+            rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            not in _SPLITTABLE_FORMATS
+        ):
+            return 0
+        total += rel.sizeInBytes()
+    split = conf.filesMaxPartitionBytes()
+    return total // split if split > 0 else 0
 
 
 def key_parallel(df, *cols):
@@ -98,11 +124,9 @@ def key_parallel(df, *cols):
     past the input file count" — at every data size.
 
     Scale-adaptive skip (r22, guide §2.4 / VERDICT r21 #9): when the
-    input's optimizer size estimate already implies at least the target
-    width in scan splits (sizeInBytes / maxPartitionBytes >= n — an
-    UNDERestimate of the real split count, which additionally charges
-    openCostInBytes per file), the fan-out exchange only moves bytes the
-    scan already distributes, so it is skipped outright. The probe reads
+    input's scans already imply at least the target width in splits, the
+    fan-out exchange only moves bytes the scan already distributes, so
+    it is skipped outright (:func:`_scan_splits`). The probe reads
     plan-side statistics on the driver — no job, no ``.rdd`` plan-force.
     Downstream keyed operators add their own exchange where they need
     one; at that point it carries their (usually partial-aggregated)
@@ -122,14 +146,7 @@ def key_parallel(df, *cols):
     # (per-partition bytes would grow unboundedly with the corpus).
     n = max(spark.sparkContext.defaultParallelism, configured)
     try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes())
-        )
-        split = _size_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        if split > 0 and size // split >= n:
+        if _scan_splits(df) >= n:
             return df
     except Exception:  # probe is best-effort: any failure keeps the fan-out
         pass

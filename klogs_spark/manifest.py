@@ -51,7 +51,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table import PARTITION_COLUMN, _hadoop_fs
+from .table import PARTITION_COLUMN, _hadoop_fs, read_schema
 
 MANIFEST_DIR = "_manifest"
 REWRITE_MARKER = f"{MANIFEST_DIR}/.rewrite-inprogress.json"
@@ -122,11 +122,10 @@ def _entry_exists(spark: SparkSession, fs, hpath_cls, path: str, f: str):
     reference through a local clone's FS raises Wrong FS in
     Path.checkPath, so the table's own handle only serves relative
     entries."""
-    p = hpath_cls(_entry_path(path, f))
     if _is_abs_entry(f):
-        efs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        efs, _, p = _hadoop_fs(spark, f)
         return efs.exists(p)
-    return fs.exists(p)
+    return fs.exists(hpath_cls(_entry_path(path, f)))
 
 
 def _entry_path(path: str, f: str) -> str:
@@ -163,11 +162,10 @@ def _missing_entries(
         by_dir.setdefault(d, []).append((name, f))
     missing: list = []
     for d, entries in sorted(by_dir.items()):
-        dirpath = hpath_cls(d)
         if _is_abs_entry(entries[0][1]):
-            dfs = dirpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            dfs, _, dirpath = _hadoop_fs(spark, d)
         else:
-            dfs = fs
+            dfs, dirpath = fs, hpath_cls(d)
         names = _list_dir_names(dfs, dirpath)
         if names is None:
             missing.extend(f for _, f in entries)
@@ -188,15 +186,27 @@ def _entry_day_dir(f: str) -> str:
     return parts[-2] if len(parts) >= 2 else ""
 
 
+# default of ``_read_data_files(schema=...)``: read the table's marker
+_FROM_MARKER = object()
+
+
 def _read_data_files(
-    spark: SparkSession, path: str, files: list, with_pos: bool = False
+    spark: SparkSession,
+    path: str,
+    files: list,
+    with_pos: bool = False,
+    schema=_FROM_MARKER,
 ) -> DataFrame:
     """Read a manifest file list faithfully: relative entries share the
     table root as ``basePath`` (partition column recovered from the
     directory name); absolute clone entries group by THEIR base (the
     directory above the partition dir) so the same recovery applies,
-    and the groups union by name. mergeSchema throughout (the
-    mixed-promoted-schema contract of read_snapshot).
+    and the groups union by name. Every group reads with the table's
+    known schema (``table.known_schema``: ``schema``, or the table's
+    marker when not given), so no footer job runs and files that predate
+    a promotion read its column as NULL. A table without a marker
+    (``schema`` None) infers with mergeSchema, so mixed files still
+    resolve every column.
 
     ``with_pos=True`` attaches the deletion-vector join key: ``__dv_key``
     (the entry's last two path components — :func:`_dv_key_of_entry`'s
@@ -208,6 +218,8 @@ def _read_data_files(
             "snapshot lists no data files (a rewrite deleted every row) "
             "— nothing to read at this version"
         )
+    if schema is _FROM_MARKER:
+        schema = read_schema(spark, path)
     groups: dict[str, list[str]] = {}
     for f in files:
         if _is_abs_entry(f):
@@ -216,11 +228,12 @@ def _read_data_files(
             groups.setdefault(path, []).append(f"{path}/{f}")
     dfs = []
     for base, fls in sorted(groups.items()):
-        df = (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*sorted(fls))
-        )
+        reader = spark.read.option("basePath", base)
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(schema)
+        df = reader.parquet(*sorted(fls))
         if with_pos:
             df = df.withColumn(
                 "__dv_key",
@@ -610,17 +623,18 @@ def read_snapshot(
     column. Raises if no snapshot exists or a listed file is gone
     (rewritten by compaction/delete — the stated pin-until-rewrite limit).
 
-    ``mergeSchema`` makes mixed-schema snapshots read faithfully: the
-    engine's own writers legitimately produce tables whose files disagree
-    on promoted physical columns (plain history + ``write_logs_promoted``
-    appends before ``materialize_promotions`` backfills — the documented
-    promotions_deficient state), and without the merge, schema inference
-    lands on whichever file Spark samples first and can silently DROP the
-    promoted column from the whole snapshot. The merge is a distributed
-    footer-only pass over just the pinned files, paid at time-travel read
-    time (occasional) rather than taxing every ``publish_snapshot`` with
-    a schema capture — at 100 TB, publishes happen per commit while
-    snapshot reads are rare, so the cost lands on the right side.
+    The files are read with the table's known schema
+    (``table.known_schema``: ``date``, the LOG_SCHEMA columns and the
+    marker's promoted columns), so opening a snapshot runs no Spark job.
+    The engine's own writers legitimately produce tables whose files
+    disagree on promoted physical columns (plain history +
+    ``write_logs_promoted`` appends before ``materialize_promotions``
+    backfills — the documented promotions_deficient state); the declared
+    schema still resolves every promoted column, NULL on the files that
+    lack it. A table
+    without a layout marker (parquet published by hand) has no declared
+    schema and infers one with ``mergeSchema``, a footer pass over the
+    pinned files.
 
     ``as_of_ms`` is TIMESTAMP AS OF (mutually exclusive with
     ``version``): the latest snapshot committed at or before the given
@@ -813,7 +827,7 @@ def snapshot_changes(
 
     def dv_rows(ref) -> DataFrame:
         if not _dv_refs(ref):
-            return spark.createDataFrame([], "file string, pos long")
+            return spark.createDataFrame([], DV_SCHEMA)
         return _read_dv(spark, path, ref)
 
     empty_schema = None
@@ -1185,8 +1199,8 @@ def _restore_promotions(spark: SparkSession, path: str, df: DataFrame) -> DataFr
     write time (table.write_logs_promoted / transform.promote_string_field),
     so recomputing from the map is always exact — and it is the only safe
     source: on tables marked ``promotions_deficient`` the base snapshot
-    read returns NULL for the column on pre-promotion rows (read_snapshot
-    mergeSchemas, so the column resolves but plain-history files have no
+    read returns NULL for the column on pre-promotion rows (the table's
+    known schema resolves the column, but plain-history files have no
     physical values), while selecting only
     LOG_COLUMNS would rewrite carried-over rows with the promoted column
     DROPPED or NULL — after a merge, promoted-column reads and
@@ -2060,17 +2074,25 @@ def read_current_state(spark: SparkSession, path: str) -> DataFrame:
     (VERDICT r17 #2) and double-reads COW-retained tombstone files after
     a copy-on-write rewrite. Unmanifested appends carry no vector
     positions by construction, so the anti-join passes them through
-    untouched; the result keeps every physical column the files carry
-    (mergeSchema), so promoted-column readers project from it
-    directly. Safe against a LIVE rewrite too: while ``REWRITE_MARKER``
+    untouched. The files are read with the table's known schema
+    (``table.known_schema``), so building this frame runs no Spark job
+    and promoted-column readers project from it directly; a table
+    without a layout marker infers its schema with mergeSchema instead.
+    Safe against a LIVE rewrite too: while ``REWRITE_MARKER``
     is held, files newer than the journaled before-listing (the
     rewrite's uncommitted survivors) are excluded rather than served
     doubled next to the head files they replace."""
+    return _read_current_state(spark, path, read_schema(spark, path))
+
+
+def _read_current_state(spark: SparkSession, path: str, schema) -> DataFrame:
+    """:func:`read_current_state` with the read schema already known
+    (None: the table has no marker, infer)."""
     files, dv_ref = _current_state_files(spark, path)
     if not _dv_refs(dv_ref):
-        return _read_data_files(spark, path, files)
+        return _read_data_files(spark, path, files, schema=schema)
     return _apply_dv(
-        _read_data_files(spark, path, files, with_pos=True),
+        _read_data_files(spark, path, files, with_pos=True, schema=schema),
         _read_dv(spark, path, dv_ref),
     )
 
@@ -2107,6 +2129,7 @@ def read_current_state(spark: SparkSession, path: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 DV_DIR = "_dv"
+DV_SCHEMA = "file string, pos long"
 
 
 def _dv_key_of_entry(f: str, path: str) -> str:
@@ -2211,9 +2234,8 @@ def _read_dv(spark: SparkSession, path: str, ref) -> DataFrame:
     vector-governed source carries ABSOLUTE refs into the source's
     generations (the clone caveat applies, as for data files)."""
     refs = _dv_refs(ref)
-    return (
-        spark.read.parquet(*[_entry_path(path, r) for r in refs])
-        .select("file", "pos")
+    return spark.read.schema(DV_SCHEMA).parquet(
+        *[_entry_path(path, r) for r in refs]
     )
 
 

@@ -46,7 +46,7 @@ class LogsQuery:
         # False when the table holds files predating a promotion (layout
         # marker "promotions_deficient", set by write_logs_promoted and
         # cleared by materialize_promotions): those rows read the physical
-        # column as NULL through mergeSchema, so the promoted existence
+        # column as NULL (their files lack it), so the promoted existence
         # fast path would flip F5 answers — fall back to the map instead
         self.promoted_exists_ok = promoted_exists_ok
 
@@ -99,7 +99,7 @@ class LogsQuery:
         the map lookup, and map values are never NULL by the P6 null-
         elimination contract). The fast path is taken only while the
         table has no deficient (pre-promotion) files — those read the
-        physical column as NULL via mergeSchema even when the map HAS
+        physical column as NULL (their files lack it) even when the map HAS
         the key, which would flip the answer."""
         if not in_numbers and key in self.promotions and self.promoted_exists_ok:
             return self._wrap(

@@ -1067,3 +1067,36 @@ def test_key_parallel_skips_fanout_on_wide_inputs(spark, tmp_path):
         assert key_parallel(df, "id").count() == 20_000
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_key_parallel_keeps_fanout_on_untrusted_estimates(spark, tmp_path):
+    """The skip trusts only file scans of splittable formats (ADVICE r22):
+    a ``createDataFrame`` input estimates the defaultSizeInBytes
+    placeholder, and a gzip file is one partition however large its
+    bytes look against maxPartitionBytes — both keep repartition(n)."""
+    import gzip
+
+    from klogs_spark.ext.caching import key_parallel
+
+    gz = tmp_path / "lines.json.gz"
+    with gzip.open(gz, "wt") as f:
+        for i in range(5_000):
+            f.write(f'{{"id": {i}, "pad": "{"x" * 64}"}}\n')
+    inputs = {
+        "createDataFrame": spark.createDataFrame(
+            [(i, "x" * 64) for i in range(2_000)], "id long, pad string"
+        ),
+        "gzip": spark.read.json(str(gz)),
+    }
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    try:
+        # ~14 KB of gzip estimates 54 splits, far above any test width
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "256")
+        for name, df in inputs.items():
+            plan = key_parallel(
+                df, "id"
+            )._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" in plan, (name, plan)
+        assert key_parallel(inputs["gzip"], "id").count() == 5_000
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import date, datetime
 from pathlib import Path
 
@@ -189,3 +190,211 @@ def test_zorder_write_roundtrips_and_narrows_trailing_dim(spark, tmp_path):
     lex_sum = lex_host[0] + lex_app[0] + lex_ns[0]
     z_sum = z_host[0] + z_app[0] + z_ns[0]
     assert z_sum < lex_sum, f"z-order total admission {z_sum} vs lex {lex_sum}"
+
+
+# --- known read schema: no inference job on marker tables ----------------
+
+
+def _job_count(spark, action):
+    """Spark jobs ``action()`` starts, read from the status tracker under
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("published", [False, True])
+def test_marker_table_opens_without_a_spark_job(
+    spark, logs_df, tmp_path, published
+):
+    from klogs_spark import manifest
+    from klogs_spark.table import logs_query
+
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    if published:
+        manifest.publish_snapshot(spark, path)
+    assert _job_count(spark, lambda: logs_query(spark, path)) == 0
+    assert _job_count(spark, lambda: read_logs(spark, path)) == 0
+    if published:  # a plain table has no current state to read
+        assert _job_count(
+            spark, lambda: manifest.read_current_state(spark, path)
+        ) == 0
+    rows = []
+    assert _job_count(
+        spark,
+        lambda: rows.extend(logs_query(spark, path).newest(100).collect()),
+    ) == 1
+    assert len(rows) == 9
+
+
+def test_deficient_table_reads_promoted_column_null_on_old_files(
+    spark, logs_df, tmp_path
+):
+    from pyspark.sql import functions as F
+
+    from klogs_spark.table import logs_query, read_layout, write_logs_promoted
+
+    # plain history, then a promoted append: the first files lack the
+    # ``level`` column while the marker records it
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    extra = logs_df.filter("day(timestamp) = 3").withColumn(
+        "fields_string", F.create_map(F.lit("level"), F.lit("warn"))
+    )
+    write_logs_promoted(extra, path, {"level": "level"})
+    assert read_layout(spark, path)["promotions_deficient"] is True
+    q = logs_query(spark, path)
+    got = Counter(
+        (r.level, r.fields_string["level"])
+        for r in q.df.select("level", "fields_string").collect()
+    )
+    # the nine plain rows read NULL, as under mergeSchema; the three
+    # promoted rows carry the physical value
+    assert got == {(None, "info"): 9, ("warn", "warn"): 3}
+    # existence falls back to the map, so plain rows still match
+    assert not q.promoted_exists_ok
+    assert q.where_exists("level").df.count() == 12
+
+
+def test_mor_deleted_rows_stay_hidden_under_known_schema(
+    spark, logs_df, tmp_path
+):
+    from pyspark.sql import functions as F
+
+    from klogs_spark import manifest
+    from klogs_spark.table import logs_query
+
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    manifest.publish_snapshot(spark, path)
+    manifest.mor_delete_where(spark, path, F.col("pod_name") == "pod-6")
+    assert logs_query(spark, path).df.count() == 6
+    assert logs_query(spark, path).df.filter("pod_name = 'pod-6'").count() == 0
+    state = manifest.read_current_state(spark, path)
+    assert state.count() == 6
+    assert state.filter("pod_name = 'pod-6'").count() == 0
+
+
+def test_marker_table_file_with_wrong_column_type_raises(
+    spark, logs_df, tmp_path
+):
+    """A data file whose column type disagrees with LOG_SCHEMA fails the
+    read; it never returns values under the declared type."""
+    from klogs_spark.table import logs_query
+
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    spark.createDataFrame(
+        [(datetime(2026, 1, 4), 7)], "timestamp timestamp, namespace int"
+    ).write.parquet(f"{path}/date=2026-01-04")
+    with pytest.raises(Exception, match="(?i)namespace|convert|schema"):
+        logs_query(spark, path).df.select("namespace").collect()
+    with pytest.raises(Exception, match="(?i)namespace|convert|schema"):
+        read_logs(spark, path).select("namespace").collect()
+
+
+def test_table_without_marker_reads_its_own_columns(spark, logs_df, tmp_path):
+    from klogs_spark import manifest
+    from klogs_spark.table import LAYOUT_MARKER
+
+    path = str(tmp_path / "logs")
+    logs_df.withColumn("date", logs_df.timestamp.cast("date")).withColumn(
+        "extra", logs_df.pod_name
+    ).write.partitionBy("date").parquet(path)
+    assert not (Path(path) / LAYOUT_MARKER).exists()
+    assert read_logs(spark, path).count() == 9
+    manifest.publish_snapshot(spark, path)
+    state = manifest.read_current_state(spark, path)
+    assert "extra" in state.columns  # inferred from the files
+    assert state.filter("extra = pod_name").count() == 9
+
+
+def test_empty_table_directory(spark, logs_df, tmp_path):
+    """An empty directory without a marker declares no schema and raises
+    UNABLE_TO_INFER_SCHEMA; a marker table with every day dropped reads
+    as zero rows with its declared schema."""
+    from pyspark.errors import AnalysisException
+
+    from klogs_spark.table import logs_query
+
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        read_logs(spark, str(bare))
+
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    assert apply_retention(path, 1, date(2026, 3, 1)) == [
+        "date=2026-01-01", "date=2026-01-02", "date=2026-01-03"
+    ]
+    assert read_logs(spark, path).count() == 0
+    assert logs_query(spark, path).df.count() == 0
+
+
+_FS_LIFETIME_SCRIPT = r"""
+import sys
+
+from pyspark.sql import SparkSession
+
+from klogs_spark.session import get_spark
+from klogs_spark.table import _hadoop_fs
+
+base = sys.argv[1]
+
+
+def use(spark, name):
+    # a fresh context starts without a cached handle
+    assert not hasattr(spark.sparkContext, "_klogs_hadoop_fs"), name
+    fs, hpath_cls, root = _hadoop_fs(spark, f"{base}/{name}")
+    fs.mkdirs(root)
+    out = fs.create(hpath_cls(f"{base}/{name}/part"), True)
+    out.write(name.encode())
+    out.close()
+    again, _, _ = _hadoop_fs(spark, f"{base}/{name}/part")
+    assert again is fs  # one handle per context and authority
+    names = sorted(s.getPath().getName() for s in fs.listStatus(root))
+    assert names == ["part"], names
+    print(name, "ok")
+
+
+spark = get_spark("fs-lifetime-1")
+use(spark, "first")
+spark.stop()
+spark = get_spark("fs-lifetime-2")
+use(spark, "second")
+spark.stop()
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+use(spark, "vanilla")
+spark.stop()
+"""
+
+
+def test_hadoop_fs_handle_never_outlives_its_session(tmp_path):
+    """``_hadoop_fs`` caches its handle on the SparkContext: after
+    ``spark.stop()`` a new engine session, and a vanilla one without the
+    engine's configs, each get a handle of their own that lists and
+    writes files."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FS_LIFETIME_SCRIPT, str(tmp_path)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr[-3000:]
+    assert proc.stdout.split() == [
+        "first", "ok", "second", "ok", "vanilla", "ok"
+    ]
+    assert (tmp_path / "vanilla" / "part").read_text() == "vanilla"
