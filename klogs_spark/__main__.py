@@ -5,7 +5,7 @@ answers SQL. The engine's equivalents:
 
     ingest     raw JSON-lines dir -> logs table (batch drain or continuous)
     query      SQL over the logs table (view name: logs)
-    retention  drop partitions older than the TTL window
+    retention  delete the days older than the TTL window
     compact    merge one partition's small files
     metrics    print the ingest metrics exposition after a drain
     delete     row-level predicate delete (GDPR), touched days only
@@ -14,6 +14,9 @@ answers SQL. The engine's equivalents:
     materialize-promotions       backfill promoted columns into history
     retention-policy             per-namespace TTL in one pass
     optimize                     rewrite history into the z-order layout
+
+Every verb that changes the table rewrites it copy-on-write and publishes
+a new manifest version; replaced files stay on disk until ``vacuum``.
 """
 
 from __future__ import annotations
@@ -88,17 +91,26 @@ def main(argv: list[str] | None = None) -> int:
                      help="TIMESTAMP AS OF: latest snapshot committed at "
                           "or before this time (e.g. 2024-01-05T12:00:00)")
 
-    pr = sub.add_parser("retention", help="drop partitions past the TTL")
+    pr = sub.add_parser("retention",
+                        help="delete the days past the TTL (copy-on-"
+                             "write: the bytes stay on disk until vacuum)")
     pr.add_argument("table")
     pr.add_argument("--days", type=int, default=30)
     pr.add_argument("--dry-run", action="store_true",
-                    help="report what would drop without deleting")
+                    help="report the days that would be deleted; write "
+                         "nothing")
 
-    pc = sub.add_parser("compact", help="compact one partition")
+    pc = sub.add_parser("compact", aliases=["cow-compact"],
+                        help="copy-on-write small-file compaction of one "
+                             "partition (fragments retained — vacuum "
+                             "later)")
     pc.add_argument("table")
     pc.add_argument("partition", help="e.g. date=2026-01-01")
 
-    pd_ = sub.add_parser("delete", help="row-level predicate delete (GDPR)")
+    pd_ = sub.add_parser("delete", aliases=["cow-delete"],
+                         help="row-level predicate delete (GDPR); "
+                              "copy-on-write, so the deleted rows' bytes "
+                              "stay on disk until vacuum --keep-versions 1")
     pd_.add_argument("table")
     pd_.add_argument("predicate",
                      help="SQL predicate; rows where it is TRUE are deleted")
@@ -148,17 +160,6 @@ def main(argv: list[str] | None = None) -> int:
     po.add_argument("--days", default="",
                     help="restrict to these days (comma-separated)")
 
-    pcd = sub.add_parser("cow-delete",
-                         help="COW predicate delete (pins survive; "
-                              "vacuum later)")
-    pcd.add_argument("table")
-    pcd.add_argument("predicate", help="SQL predicate over log columns")
-
-    pcc = sub.add_parser("cow-compact",
-                         help="COW small-file compaction of one partition")
-    pcc.add_argument("table")
-    pcc.add_argument("partition", help="e.g. date=2024-01-03")
-
     pmd = sub.add_parser("mor-delete",
                          help="merge-on-read predicate delete: records "
                               "(file, pos) in a deletion vector — zero "
@@ -196,9 +197,8 @@ def main(argv: list[str] | None = None) -> int:
     pmt = sub.add_parser("maintain",
                          help="one-call housekeeping: heal crashed "
                               "rewrites, compact fragmented days, "
-                              "optional retention, vacuum (COW tier on "
-                              "manifest tables incl. clones; in-place "
-                              "on plain directories)")
+                              "optional retention, vacuum (copy-on-"
+                              "write; clones included)")
     pmt.add_argument("table")
     pmt.add_argument("--max-files", type=int, default=8)
     pmt.add_argument("--keep-versions", type=int, default=1)
@@ -336,14 +336,6 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    if args.cmd == "retention":
-        from .table import apply_retention
-
-        dropped = apply_retention(args.table, args.days, dry_run=args.dry_run)
-        verb = "would drop" if args.dry_run else "dropped"
-        print(f"{verb} {len(dropped)} partition(s): {dropped}")
-        return 0
-
     if args.cmd == "list-queries":
         # registry() needs no Spark — never pay JVM startup for a listing
         from .queries import registry
@@ -430,22 +422,18 @@ def main(argv: list[str] | None = None) -> int:
         spark.sql(args.sql).show(args.limit, truncate=False)
         return 0
 
-    if args.cmd == "compact":
-        from .table import compact_partition
+    if args.cmd == "retention":
+        from .manifest import apply_retention
 
-        n = compact_partition(spark, args.table, args.partition)
-        print(f"compacted {args.partition} -> {n} file(s)")
-        return 0
-
-    if args.cmd == "delete":
-        from .table import delete_where
-
-        res = delete_where(spark, args.table, args.predicate)
-        print(
-            f"deleted {res['rows_deleted']} row(s); rewrote "
-            f"{res['partitions_rewritten']}; dropped "
-            f"{res['partitions_dropped']}"
+        res = apply_retention(
+            spark, args.table, args.days, dry_run=args.dry_run
         )
+        if args.dry_run:
+            print(f"would delete {len(res['would_rewrite'])} day(s) before "
+                  f"{res['cutoff']}: {res['would_rewrite']}")
+        else:
+            print(f"v{res['version']}: deleted {res['rows_deleted']} row(s) "
+                  f"before {res['cutoff']} (run vacuum to reclaim)")
         return 0
 
     if args.cmd == "stats":
@@ -463,7 +451,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"published v{publish_snapshot(spark, args.table)}")
         return 0
 
-    if args.cmd == "cow-delete":
+    if args.cmd in ("delete", "cow-delete"):
         from .manifest import cow_delete_where
 
         res = cow_delete_where(spark, args.table, args.predicate)
@@ -474,7 +462,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    if args.cmd == "cow-compact":
+    if args.cmd in ("compact", "cow-compact"):
         from .manifest import cow_compact_partition
 
         res = cow_compact_partition(spark, args.table, args.partition)
@@ -743,14 +731,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "materialize-promotions":
-        from .table import materialize_promotions
+        from .manifest import materialize_promotions
 
-        rewritten = materialize_promotions(spark, args.table)
-        print(f"backfilled {len(rewritten)} partition(s): {rewritten}")
+        res = materialize_promotions(spark, args.table)
+        rewritten = res["partitions_rewritten"]
+        print(f"v{res['version']}: backfilled {len(rewritten)} "
+              f"partition(s): {rewritten}")
         return 0
 
     if args.cmd == "retention-policy":
-        from .table import apply_retention_policy
+        from .manifest import apply_retention_policy
 
         policies = {}
         for pair in args.policy.split(","):
@@ -761,22 +751,23 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.table, policies, args.default_days
         )
         print(
-            f"deleted {res['rows_deleted']} row(s); rewrote "
-            f"{res['partitions_rewritten']}; dropped "
-            f"{res['partitions_dropped']}"
+            f"v{res['version']}: deleted {res['rows_deleted']} row(s); "
+            f"rewrote {res['partitions_rewritten']} (run vacuum to reclaim)"
         )
         return 0
 
     if args.cmd == "optimize":
-        from .table import optimize_zorder
+        from .manifest import optimize_zorder
 
         days = [d for d in args.days.split(",") if d] or None
-        done = optimize_zorder(
+        res = optimize_zorder(
             spark, args.table,
             tuple(c for c in args.zorder.split(",") if c),
             days=days,
         )
-        print(f"z-ordered {len(done)} partition(s): {done}")
+        done = res["partitions_rewritten"]
+        print(f"v{res['version']}: z-ordered {len(done)} partition(s): "
+              f"{done}")
         return 0
 
     return 1

@@ -8,7 +8,7 @@ can fail on. Nothing here is corpus-sized beyond that one scan:
 
 * each boolean expectation contributes two partial-aggregatable terms
   (violation count = rows where the condition is NOT TRUE — three-valued
-  logic collapsed exactly like ``table.delete_where``, so a NULL check
+  logic collapsed exactly like ``manifest.cow_delete_where``, so a NULL check
   result counts as a violation, the Great Expectations contract);
 * uniqueness rides the same aggregate as an exact ``count_distinct``
   (swap to approx upstream if ±2% suffices at 100 TB);

@@ -18,23 +18,29 @@ one consistent snapshot.
   their snapshot.
 
 Scale: a manifest is one small JSON per version (file paths only) and
-``publish`` is an O(#partitions) listing — no data pass. Two tiers of
-contract, stated explicitly: snapshots pin FILES, so the IN-PLACE
-maintenance jobs (``table.compact_partition``, ``table.delete_where``,
-retention, reprocess) invalidate older snapshots that reference the
-rewritten files — pin-until-next-rewrite. The COPY-ON-WRITE tier
-(:func:`cow_delete_where`, :func:`cow_update_where`,
-:func:`cow_compact_partition`, :func:`cow_merge_upsert`) gives the full
-Delta-style verb set on top:
-replaced files are RETAINED for pinned readers and CDC
-(:func:`snapshot_changes`), rewrites journal their intent for crash
-recovery (:func:`recover_incomplete_rewrite`), overlapping rewrites are
-resolved by optimistic concurrency (validate-then-publish: the loser
-detects the moved base or a reclaimed journal, cleans up its unpublished
-files, and raises :class:`ConcurrentRewriteError` — retry folds the
-winner's result), and disk is reclaimed by an explicit :func:`vacuum`
-whose retention window is the time-travel horizon. The MERGE-ON-READ
-tier (:func:`mor_delete_where` / :func:`mor_update_where` +
+``publish`` is an O(#partitions) listing — no data pass.
+
+Every maintenance verb rewrites the table COPY-ON-WRITE, like MergeTree
+publishing new parts in place of old ones: :func:`cow_delete_where`,
+:func:`cow_update_where`, :func:`cow_merge_upsert`,
+:func:`cow_compact_partition`, :func:`reprocess_partition`,
+:func:`optimize_zorder`, :func:`materialize_promotions`,
+:func:`apply_retention` and :func:`apply_retention_policy` all run the
+same rewrite (:func:`_rewrite_days`). A table that was never published
+gets its v0 from the first verb (:func:`_cow_base_version`). Replaced
+files are RETAINED for pinned readers and CDC (:func:`snapshot_changes`),
+rewrites journal their intent for crash recovery
+(:func:`recover_incomplete_rewrite`), overlapping rewrites are resolved
+by optimistic concurrency (validate-then-publish: the loser detects the
+moved base or a reclaimed journal, cleans up its unpublished files, and
+raises :class:`ConcurrentRewriteError` — retry folds the winner's
+result), and disk is reclaimed by an explicit :func:`vacuum` whose
+retention window is the time-travel horizon. Erasure contract (GDPR): a
+delete hides rows from every read at once, but their bytes stay in the
+replaced files until a :func:`vacuum` whose window no longer holds a
+version that lists them — run ``vacuum(keep_versions=1)`` after a
+delete that must erase data. The MERGE-ON-READ tier
+(:func:`mor_delete_where` / :func:`mor_update_where` +
 :func:`dv_compact`) completes the verb family with Delta/Iceberg-style
 deletion vectors: a delete records (file, row position) tombstones and
 rewrites nothing, an update additionally appends the changed copies,
@@ -47,6 +53,7 @@ into files.
 from __future__ import annotations
 
 import json
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -212,14 +219,26 @@ def _read_data_files(
     (the entry's last two path components — :func:`_dv_key_of_entry`'s
     column twin) and ``__dv_pos`` (the parquet ``_metadata.row_index``,
     stable across reads of an immutable file). Costs nothing when False:
-    the metadata column is never requested."""
-    if not files:
-        raise FileNotFoundError(
-            "snapshot lists no data files (a rewrite deleted every row) "
-            "— nothing to read at this version"
-        )
+    the metadata column is never requested.
+
+    An empty ``files`` (a rewrite deleted every row) reads as zero rows
+    when the schema is known, and raises when it would have to be
+    inferred."""
     if schema is _FROM_MARKER:
         schema = read_schema(spark, path)
+    if not files:
+        if schema is None:
+            raise FileNotFoundError(
+                "snapshot lists no data files (a rewrite deleted every "
+                "row) and the table has no layout marker to declare a "
+                "schema — nothing to read at this version"
+            )
+        empty = spark.createDataFrame([], schema)
+        if with_pos:
+            empty = empty.withColumn(
+                "__dv_key", F.lit(None).cast("string")
+            ).withColumn("__dv_pos", F.lit(None).cast("long"))
+        return empty
     groups: dict[str, list[str]] = {}
     for f in files:
         if _is_abs_entry(f):
@@ -441,8 +460,8 @@ def publish_snapshot(
             # no concurrent publish lands between here and there
             _listing_manifested, _listing_versions = manifested, versions
             # head's live files (absolute clone refs kept verbatim;
-            # relative ones must still exist — in-place rewrites replace
-            # them and their successors arrive as unmanifested files)
+            # relative ones must still exist — a file removed behind
+            # the manifest's back is not carried forward)
             keep_head = {
                 f for f in head_f if _is_abs_entry(f) or f in on_disk
             }
@@ -783,7 +802,7 @@ def snapshot_changes(
     touches a handful of partitions and the feed reads just those.
 
     Rows in to-only files are insert candidates, rows in from-only files
-    are delete candidates; a copy-on-write rewrite (delete_where /
+    are delete candidates; a copy-on-write rewrite (cow_delete_where /
     compaction) carries its unchanged rows in BOTH candidate sets, and
     ``exceptAll`` cancels them with multiset semantics, leaving exactly
     the net inserts and deletes. Map columns are emitted as their sorted
@@ -1061,6 +1080,17 @@ def _cow_base_version(spark: SparkSession, path: str) -> int:
     return base_version
 
 
+def _plan_files(spark: SparkSession, path: str) -> list[str]:
+    """The file list a dry run plans from without writing anything: the
+    head manifest's, or the data-file listing of a table never published
+    (exactly what its first rewrite publishes as v0)."""
+    versions = snapshot_versions(spark, path)
+    if versions:
+        return _manifest_files(spark, path, versions[-1])
+    fs, hpath_cls, root = _hadoop_fs(spark, path)
+    return _list_data_files(fs, root, hpath_cls) if fs.exists(root) else []
+
+
 class ConcurrentRewriteError(IOError):
     """A COW rewrite lost an optimistic-concurrency race: the base
     snapshot moved (another maintenance job published first), or a
@@ -1220,17 +1250,14 @@ def _restore_promotions(spark: SparkSession, path: str, df: DataFrame) -> DataFr
 
 def _append_in_layout(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Append rewrite output as NEW files honoring the table's recorded
-    sort layout (cluster key or z-order — the same `_layout_sorted`
-    contract every in-place maintenance job follows), never touching
-    existing files. The rebalance hint keeps writer parallelism and
-    small-file hygiene identical to `table.write_logs`."""
+    sort layout (cluster key or z-order, `table._layout_sorted`), never
+    touching existing files. The rebalance hint keeps writer parallelism
+    and small-file hygiene identical to `table.write_logs`."""
     from .table import _layout_sorted, read_layout
 
     (
         _layout_sorted(
-            df.hint("rebalance", PARTITION_COLUMN),
-            read_layout(spark, path),
-            lead_partition=True,
+            df.hint("rebalance", PARTITION_COLUMN), read_layout(spark, path)
         )
         .write.mode("append")
         .partitionBy(PARTITION_COLUMN)
@@ -1238,72 +1265,121 @@ def _append_in_layout(spark: SparkSession, df: DataFrame, path: str) -> None:
     )
 
 
+def _rewrite_days(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    base_version: int,
+    live: list,
+    day_dirs: set,
+    rows: DataFrame | None,
+) -> int:
+    """The one copy-on-write rewrite behind every maintenance verb.
+    ``rows`` is the complete new content of the ``day_dirs`` partitions
+    (``date=...`` names) of snapshot ``base_version``, whose file list is
+    ``live``. The rewrite journals its intent (:func:`_begin_rewrite`),
+    appends ``rows`` as NEW files in the recorded sort layout with the
+    promoted columns re-derived from the maps (:func:`_restore_promotions`,
+    :func:`_append_in_layout`), and publishes ``live`` minus every file of
+    ``day_dirs`` plus the new files (:func:`_finish_rewrite`, optimistic
+    concurrency). ``rows`` None writes nothing: the days just leave the
+    file list. The replaced files stay on disk for pinned readers until
+    :func:`vacuum`. Returns the published version."""
+    before, tok = _begin_rewrite(spark, path, op, base_version)
+    if rows is not None:
+        _append_in_layout(spark, _restore_promotions(spark, path, rows), path)
+    replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
+    return _finish_rewrite(
+        spark, path, base_version, before, tok, set(live) - replaced
+    )
+
+
+def _read_live_files(
+    spark: SparkSession, path: str, version: int, files: list
+) -> DataFrame:
+    """``files`` of snapshot ``version`` read as ``date`` + LOG_COLUMNS,
+    with that version's deletion vector applied: a raw read of a
+    vector-governed day would write MOR-deleted rows into the rewrite's
+    new files and resurrect them (the new files carry fresh keys, so the
+    vector's positions dangle)."""
+    from .table import LOG_COLUMNS
+
+    dv_ref = _dv_ref_at(spark, path, version)
+    if not _dv_refs(dv_ref):
+        rows = _read_data_files(spark, path, files)
+    else:
+        rows = _apply_dv(
+            _read_data_files(spark, path, files, with_pos=True),
+            _read_dv(spark, path, dv_ref),
+        )
+    return rows.select(PARTITION_COLUMN, *LOG_COLUMNS)
+
+
+def _predicate(predicate):
+    """A Column or SQL string as a delete/update predicate, with SQL's
+    three-valued logic collapsed: a row matches only where it is TRUE
+    (a NULL predicate keeps the row)."""
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return F.coalesce(pred, F.lit(False))
+
+
 def cow_delete_where(
     spark: SparkSession,
     path: str,
     predicate,
 ) -> dict:
-    """Copy-on-write row-level delete that RETAINS replaced files — the
-    full Delta/Iceberg rewrite model, completing the manifest layer:
-    survivors of affected days are written as NEW files (an append never
-    touches existing ones), the old files STAY on disk for pinned
+    """Row-level delete (the GDPR / right-to-be-forgotten job): remove
+    every row where ``predicate`` (a Column or SQL string) is TRUE by
+    rewriting ONLY the days that hold a match. Survivors of affected
+    days are written as NEW files, the old files STAY on disk for pinned
     readers and CDC (:func:`snapshot_changes` across the delete works),
-    and the newly published manifest simply excludes them. Disk is
-    reclaimed later by :func:`vacuum`.
+    and the newly published manifest excludes them. A row whose
+    predicate is NULL is kept.
 
-    Contract shift vs ``table.delete_where`` (which physically overwrites
-    in place): once a table takes a COW rewrite, the directory listing
-    OVER-COUNTS — reads must go through :func:`read_snapshot` /
-    :func:`read_logs_at`. Same NULL discipline as delete_where: a row is
-    deleted only where the predicate is TRUE.
+    Erasure: the deleted rows' bytes remain in the replaced files until
+    :func:`vacuum` drops every version that lists them —
+    ``vacuum(keep_versions=1)`` right after the delete erases them.
 
-    Scale: one predicate aggregate finds affected days (partition-pruned
-    scan), the survivor write touches only those days' data, and the
-    manifest math is pure file-list set algebra on the driver — O(#files),
-    no data pass."""
+    Scale: one aggregate counts each day's matches and rows, reading only
+    the predicate's columns; the survivor write reads only the affected
+    days that keep a row (a day whose every row matched, such as a
+    retention cutoff, just leaves the file list); and the manifest math
+    is pure file-list set algebra on the driver, O(#files)."""
     from .table import LOG_COLUMNS
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
+    hit = _predicate(predicate)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
     df = read_snapshot(spark, path, base_version).select(
         PARTITION_COLUMN, *LOG_COLUMNS
     )
     stats = (
-        df.filter(hit)
-        .groupBy(PARTITION_COLUMN)
-        .agg(F.count(F.lit(1)).alias("n"))
+        df.groupBy(PARTITION_COLUMN)
+        .agg(
+            F.count(F.when(hit, 1)).alias("n"),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        .filter(F.col("n") > 0)
         .collect()
     )  # bounded by affected days
     affected = sorted(str(r[PARTITION_COLUMN]) for r in stats)
-    rows_deleted = sum(r.n for r in stats)
     if not affected:
         return {
             "version": base_version,
             "partitions_rewritten": [],
             "rows_deleted": 0,
         }
-    # journal the rewrite intent BEFORE writing survivor files: a crash
-    # between the append and the publish leaves orphans that recovery
-    # (recover_incomplete_rewrite) can then identify and reclaim; the
-    # validate-then-publish in _finish_rewrite aborts loudly if a
-    # concurrent rewrite won the race meanwhile
-    before, tok = _begin_rewrite(spark, path, "cow_delete_where", base_version)
-    survivors = _restore_promotions(
-        spark, path,
-        df.filter(F.col(PARTITION_COLUMN).isin(affected) & ~hit),
-    )
-    _append_in_layout(spark, survivors, path)
-    day_dirs = {f"{PARTITION_COLUMN}={d}" for d in affected}
-    replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
-    version = _finish_rewrite(
-        spark, path, base_version, before, tok, set(live) - replaced
+    partial = [str(r[PARTITION_COLUMN]) for r in stats if r.n < r.rows]
+    version = _rewrite_days(
+        spark, path, "cow_delete_where", base_version, live,
+        {f"{PARTITION_COLUMN}={d}" for d in affected},
+        df.filter(F.col(PARTITION_COLUMN).isin(partial) & ~hit)
+        if partial else None,
     )
     return {
         "version": version,
         "partitions_rewritten": affected,
-        "rows_deleted": rows_deleted,
+        "rows_deleted": sum(r.n for r in stats),
     }
 
 
@@ -1313,33 +1389,24 @@ def cow_update_where(
     predicate,
     set_exprs: dict,
 ) -> dict:
-    """Copy-on-write row-level UPDATE ... SET — the remaining verb of the
-    Delta rewrite family (DELETE/MERGE/COMPACT/RESTORE/VACUUM/CDC all
-    exist): rows matching ``predicate`` get each column in ``set_exprs``
-    replaced by its expression, all SET expressions evaluated against the
-    PRE-update row (simultaneous assignment, standard UPDATE semantics —
-    a select, not chained withColumn); unmatched rows of affected days
-    are carried unchanged. Same COW discipline as
-    :func:`cow_delete_where`: journaled intent, survivors appended as new
-    files honoring the layout, replaced files retained for pinned readers
-    and CDC (``snapshot_changes`` across an update shows the changed rows
-    as delete+insert and cancels carried rows), optimistic-concurrency
-    publish.
+    """Copy-on-write row-level UPDATE ... SET: rows matching
+    ``predicate`` get each column in ``set_exprs`` replaced by its
+    expression, all SET expressions evaluated against the PRE-update row
+    (simultaneous assignment, standard UPDATE semantics — a select, not
+    chained withColumn); unmatched rows of affected days are carried
+    unchanged. Same rewrite as :func:`cow_delete_where`, so
+    ``snapshot_changes`` across an update shows the changed rows as
+    delete+insert and cancels carried rows.
 
     Promoted physical columns re-derive from the (possibly updated) map
     via ``_restore_promotions`` — updating ``fields_string`` transparently
     refreshes its promoted column. Updating ``timestamp`` or the
     partition column is refused: the rewrite is partition-scoped and a
     date move is a delete+insert (that is :func:`cow_merge_upsert`'s
-    job).
-
-    Scale: identical shape to the delete — one partition-pruned predicate
-    aggregate finds affected days, the rewrite touches only those days'
-    rows, manifest math is driver-side file-list set algebra."""
+    job)."""
     from .table import LOG_COLUMNS
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
+    hit = _predicate(predicate)
     exprs = _validate_set_exprs("cow_update_where", set_exprs, LOG_COLUMNS)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
@@ -1353,16 +1420,13 @@ def cow_update_where(
         .collect()
     )  # bounded by affected days
     affected = sorted(str(r[PARTITION_COLUMN]) for r in stats)
-    rows_updated = sum(r.n for r in stats)
     if not affected:
         return {
             "version": base_version,
             "partitions_rewritten": [],
             "rows_updated": 0,
         }
-    before, tok = _begin_rewrite(spark, path, "cow_update_where", base_version)
-    sub = df.filter(F.col(PARTITION_COLUMN).isin(affected))
-    updated = sub.select(
+    updated = df.filter(F.col(PARTITION_COLUMN).isin(affected)).select(
         PARTITION_COLUMN,
         *[
             F.when(hit, exprs[c]).otherwise(F.col(c)).alias(c)
@@ -1371,17 +1435,14 @@ def cow_update_where(
             for c in LOG_COLUMNS
         ],
     )
-    survivors = _restore_promotions(spark, path, updated)
-    _append_in_layout(spark, survivors, path)
-    day_dirs = {f"{PARTITION_COLUMN}={d}" for d in affected}
-    replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
-    version = _finish_rewrite(
-        spark, path, base_version, before, tok, set(live) - replaced
+    version = _rewrite_days(
+        spark, path, "cow_update_where", base_version, live,
+        {f"{PARTITION_COLUMN}={d}" for d in affected}, updated,
     )
     return {
         "version": version,
         "partitions_rewritten": affected,
-        "rows_updated": rows_updated,
+        "rows_updated": sum(r.n for r in stats),
     }
 
 
@@ -1391,26 +1452,25 @@ def cow_merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
 ) -> dict:
-    """Copy-on-write MERGE — the manifest-layer twin of
-    ``table.merge_upsert`` (which overwrites day partitions in place):
-    rows in ``updates`` replace existing rows with the same key and new
-    keys insert, but the touched days' merged state is written as NEW
-    files, the replaced files STAY on disk for pinned readers, and the
-    published manifest swaps them — so time travel ACROSS a merge works
-    and :func:`snapshot_changes` yields the row-level merge feed (old
-    versions as deletes, new versions + brand-new rows as inserts;
-    carried unchanged rows cancel under exceptAll). Disk is reclaimed by
-    :func:`vacuum`. Same crash journal as :func:`cow_delete_where`.
+    """Copy-on-write MERGE (``MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT
+    MATCHED INSERT``): rows in ``updates`` replace existing rows with the
+    same key and new keys insert. The touched days' merged state is
+    written as NEW files, the replaced files STAY on disk for pinned
+    readers, and the published manifest swaps them — so time travel
+    ACROSS a merge works and :func:`snapshot_changes` yields the
+    row-level merge feed (old versions as deletes, new versions +
+    brand-new rows as inserts; carried unchanged rows cancel under
+    exceptAll). The update rows' promoted columns are derived from their
+    own maps, like every rewrite's. The key should be unique within
+    ``updates``; a key matching several existing rows replaces them all
+    and counts once in ``rows_updated``.
 
     Scale: cost is the touched days' data plus O(#files) driver manifest
     algebra — the standard COW MERGE contract; untouched days never
     rewrite and their files are never opened."""
     from .table import LOG_COLUMNS
 
-    # promote the update rows from their own maps (drop-and-recompute:
-    # the map is the source of truth, same contract as _restore_promotions)
-    mat = _restore_promotions(spark, path, updates)
-    dated = mat.withColumn(
+    dated = updates.withColumn(
         PARTITION_COLUMN, F.to_date(F.col("timestamp"))
     )
     days = [
@@ -1427,29 +1487,22 @@ def cow_merge_upsert(
     )
     existing = df.filter(F.col(PARTITION_COLUMN).isin(days))
     keys = dated.select(*key_cols)
-    # matched UPDATE rows counted from the updates side (multi-match keys
-    # must not drive rows_inserted negative — the merge_upsert contract)
+    # matched UPDATE rows counted from the updates side, so a key that
+    # matches several existing rows cannot drive rows_inserted negative
     n_upd = keys.join(
         existing.select(*key_cols), key_cols, "left_semi"
     ).count()
-    kept = _restore_promotions(
-        spark, path, existing.join(keys, key_cols, "left_anti")
-    )
     # the updates-side row count rides the merge write as an observed
-    # metric (r21) — the standalone dated.count() was an extra job that
-    # re-derived the updates lineage after the write already streamed it
+    # metric — a standalone dated.count() would be an extra job
+    # re-deriving the updates lineage after the write already streamed it
     obs_updates = _retry_safe_observation(spark)
-    merged = kept.unionByName(
+    merged = existing.join(keys, key_cols, "left_anti").unionByName(
         dated.observe(obs_updates, F.count(F.lit(1)).alias("n")),
         allowMissingColumns=True,
     )
-
-    before, tok = _begin_rewrite(spark, path, "cow_merge_upsert", base_version)
-    _append_in_layout(spark, merged, path)
-    day_dirs = {f"{PARTITION_COLUMN}={d}" for d in days}
-    replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
-    version = _finish_rewrite(
-        spark, path, base_version, before, tok, set(live) - replaced
+    version = _rewrite_days(
+        spark, path, "cow_merge_upsert", base_version, live,
+        {f"{PARTITION_COLUMN}={d}" for d in days}, merged,
     )
     n_updates = obs_updates.get["n"]
     return {
@@ -1465,60 +1518,245 @@ def cow_merge_upsert(
 def cow_compact_partition(
     spark: SparkSession, path: str, partition: str
 ) -> dict:
-    """COW small-file compaction: merge one day-partition's fragments into
-    new compacted files, RETAIN the fragments for pinned snapshot readers,
-    and publish a manifest that swaps them out — the companion to
-    :func:`cow_delete_where` that closes the manifest layer's stated
-    pin-until-rewrite limit for compaction too (with in-place
-    ``table.compact_partition``, older snapshots break; with this, they
-    keep reading until :func:`vacuum`). ``partition`` is the directory
-    name, e.g. ``date=2024-01-03``. The CDC feed across a pure compaction
-    is EMPTY by construction (every row appears on both sides and
-    cancels). No-op below two files.
+    """Small-file compaction (the MergeTree background-merge equivalent):
+    merge one day-partition's fragments into new files in the recorded
+    sort layout, RETAIN the fragments for pinned snapshot readers until
+    :func:`vacuum`, and publish a manifest that swaps them out.
+    ``partition`` is the directory name, e.g. ``date=2024-01-03``. The
+    CDC feed across a pure compaction is EMPTY by construction (every
+    row appears on both sides and cancels). No-op below two files.
 
-    Schema contract (ADVICE r11): the compacted output is PROJECTED onto
-    the canonical table schema — PARTITION_COLUMN + LOG_COLUMNS plus the
-    layout's promoted columns re-derived from the maps
-    (:func:`_restore_promotions`). Any other physical column a fragment
-    might carry is dropped by compaction; the engine's writers
-    (write_logs / write_logs_promoted / _append_in_layout) never produce
-    such columns, so this is a normalization, not data loss — but files
-    written around the engine do not keep extra columns through a
-    compact."""
+    Schema contract: the compacted output is PROJECTED onto the
+    canonical table schema — PARTITION_COLUMN + LOG_COLUMNS plus the
+    layout's promoted columns re-derived from the maps. Any other
+    physical column a fragment might carry is dropped; the engine's
+    writers never produce such columns, so this is a normalization, not
+    data loss — but files written around the engine do not keep extra
+    columns through a compact."""
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
     frags = [f for f in live if _entry_day_dir(f) == partition]
     if len(frags) < 2:
         return {"version": base_version, "files_compacted": 0}
-    from .table import LOG_COLUMNS
-
-    # the fragment read MUST apply the base version's deletion vector:
-    # a raw read of a vector-governed day would materialize MOR-deleted
-    # rows into the compacted files and silently resurrect them (the new
-    # files carry fresh keys, so the vector's positions dangle) — the
-    # review-found counterpart of the read_snapshot path every other COW
-    # verb already takes
-    dv_ref = _dv_ref_at(spark, path, base_version)
-    if not _dv_refs(dv_ref):
-        frag_rows = _read_data_files(spark, path, frags)
-    else:
-        frag_rows = _apply_dv(
-            _read_data_files(spark, path, frags, with_pos=True),
-            _read_dv(spark, path, dv_ref),
-        )
-    rows = _restore_promotions(
-        spark, path,
-        frag_rows.select(PARTITION_COLUMN, *LOG_COLUMNS),
-    )
-    # same crash journal + race validation as cow_delete_where
-    before, tok = _begin_rewrite(
-        spark, path, "cow_compact_partition", base_version
-    )
-    _append_in_layout(spark, rows, path)
-    version = _finish_rewrite(
-        spark, path, base_version, before, tok, set(live) - set(frags)
+    version = _rewrite_days(
+        spark, path, "cow_compact_partition", base_version, live,
+        {partition}, _read_live_files(spark, path, base_version, frags),
     )
     return {"version": version, "files_compacted": len(frags)}
+
+
+def reprocess_partition(
+    spark: SparkSession,
+    path: str,
+    partition: str,
+    transform,
+) -> dict:
+    """Backfill one day through a new transform (a parser fix, a
+    redaction sweep): read the day ``partition`` (e.g.
+    ``date=2024-01-03``) of the current snapshot without its partition
+    column, apply ``transform(df) -> df``, and rewrite the day
+    copy-on-write. The transform must keep the LOG_COLUMNS; the date is
+    restored from the partition name, so no row can move to another
+    day. Promoted columns re-derive from the transformed maps and the
+    recorded sort layout is re-applied. Untouched days never rewrite.
+    Returns ``{"version", "partitions_rewritten"}``; a day the snapshot
+    does not hold is a no-op."""
+    from .table import LOG_COLUMNS
+
+    base_version = _cow_base_version(spark, path)
+    live = _manifest_files(spark, path, base_version)
+    files = [f for f in live if _entry_day_dir(f) == partition]
+    if not files:
+        return {"version": base_version, "partitions_rewritten": []}
+    day = partition.split("=", 1)[1]
+    rows = transform(
+        _read_live_files(spark, path, base_version, files)
+        .drop(PARTITION_COLUMN)
+    ).select(
+        F.lit(day).cast("date").alias(PARTITION_COLUMN), *LOG_COLUMNS
+    )
+    version = _rewrite_days(
+        spark, path, "reprocess_partition", base_version, live,
+        {partition}, rows,
+    )
+    return {"version": version, "partitions_rewritten": [partition]}
+
+
+def _rewrite_unchanged(
+    spark: SparkSession, path: str, op: str, base_version: int,
+    live: list, day_dirs: list,
+) -> dict:
+    """Rewrite ``day_dirs`` with their rows unchanged — how a layout or
+    promotion change reaches existing files: the rewrite re-sorts by the
+    current layout marker and re-derives the promoted columns."""
+    if not day_dirs:
+        return {"version": base_version, "partitions_rewritten": []}
+    dirs = set(day_dirs)
+    files = [f for f in live if _entry_day_dir(f) in dirs]
+    version = _rewrite_days(
+        spark, path, op, base_version, live, dirs,
+        _read_live_files(spark, path, base_version, files),
+    )
+    return {"version": version, "partitions_rewritten": day_dirs}
+
+
+def optimize_zorder(
+    spark: SparkSession,
+    path: str,
+    zorder_on: tuple[str, ...] = ("namespace", "app", "host"),
+    days: list[str] | None = None,
+) -> dict:
+    """Convert an EXISTING table to the z-order layout — the
+    ``OPTIMIZE ... ZORDER BY`` twin (``write_logs_zordered`` covers new
+    writes; this rewrites history). The layout marker flips FIRST, so
+    every later rewrite (this one included) sorts in Morton order; then
+    the chosen days rewrite unchanged. ``days`` (``YYYY-MM-DD``)
+    restricts the rewrite (resumable backfill); default is every day.
+    Returns ``{"version", "partitions_rewritten"}``."""
+    from .table import _write_layout_marker, read_layout
+
+    _write_layout_marker(
+        spark, path, {
+            **read_layout(spark, path),
+            "layout": "zorder", "cols": list(zorder_on),
+        },
+    )
+    base_version = _cow_base_version(spark, path)
+    live = _manifest_files(spark, path, base_version)
+    prefix = f"{PARTITION_COLUMN}="
+    targets = sorted({
+        d for d in map(_entry_day_dir, live)
+        if d.startswith(prefix)
+        and (days is None or d[len(prefix):] in days)
+    })
+    return _rewrite_unchanged(
+        spark, path, "optimize_zorder", base_version, live, targets
+    )
+
+
+def materialize_promotions(spark: SparkSession, path: str) -> dict:
+    """Backfill promoted columns into data written BEFORE the promotion
+    was recorded — the MATERIALIZE COLUMN half of the reference recipe
+    (README.md:69-91; the DEFAULT half is write_logs's automatic
+    materialization on append). Needed exactly when write_logs_promoted
+    appends onto a table with plain history: those files lack the
+    physical column, so the column reads NULL where the map holds the
+    key. Detection reads only file footers (one metadata read per file
+    on the driver, no data scan): the days holding a file that lacks a
+    promoted column rewrite unchanged, and the rewrite derives the
+    promoted columns from the maps. Clears the marker's
+    ``promotions_deficient`` flag. Returns ``{"version",
+    "partitions_rewritten"}``."""
+    from .table import _write_layout_marker, read_layout
+
+    base_version = _cow_base_version(spark, path)
+    live = _manifest_files(spark, path, base_version)
+    layout = read_layout(spark, path)
+    columns = list((layout.get("promotions") or {}).values())
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    _, hpath_cls, _ = _hadoop_fs(spark, path)
+
+    def predates(f: str) -> bool:
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            conf, hpath_cls(f if _is_abs_entry(f) else f"{path}/{f}"),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS,
+        )
+        schema = footer.getFileMetaData().getSchema()
+        return not all(schema.containsField(c) for c in columns)
+
+    deficient = sorted(
+        {_entry_day_dir(f) for f in live if columns and predates(f)}
+    )
+    res = _rewrite_unchanged(
+        spark, path, "materialize_promotions", base_version, live, deficient,
+    )
+    # backfill complete (or verified unnecessary): promoted existence
+    # fast paths are safe again — see write_logs_promoted
+    if layout.get("promotions_deficient"):
+        _write_layout_marker(
+            spark, path, {**layout, "promotions_deficient": False}
+        )
+    return res
+
+
+def apply_retention(
+    spark: SparkSession,
+    path: str,
+    retention_days: int = 30,
+    today: date | None = None,
+    dry_run: bool = False,
+) -> dict:
+    """TTL job: delete every row of the days older than the retention
+    window — ``TTL toDateTime(timestamp) + INTERVAL 30 DAY``
+    (schema.sql:19) as a :func:`cow_delete_where` on the partition
+    column. Every row of an expired day matches, so its files just leave
+    the file list: the delete's aggregate reads no data column, and no
+    survivor is read or written. The expired days' token-Bloom sidecar
+    partitions are dropped with them. As with every delete, the bytes
+    stay on disk until :func:`vacuum`.
+
+    ``dry_run=True`` reports the days that WOULD be rewritten, planned
+    from the current file list (or the data-file listing of a table
+    never published) without writing anything — the approve-before-
+    delete step every retention runbook wants. The plan reads no data,
+    so on a table with a deletion vector it is a superset: an expired
+    day whose rows were all deleted merge-on-read is listed, and the
+    real run leaves it alone. Returns the delete's report plus
+    ``cutoff`` (``would_rewrite`` instead of the delete's keys on a dry
+    run)."""
+    from .table import TOKEN_BLOOM_DIR
+
+    cutoff = str((today or date.today()) - timedelta(days=retention_days))
+    if dry_run:
+        prefix = f"{PARTITION_COLUMN}="
+        return {
+            "cutoff": cutoff,
+            "dry_run": True,
+            "would_rewrite": sorted({
+                d[len(prefix):]
+                for d in map(_entry_day_dir, _plan_files(spark, path))
+                if d.startswith(prefix) and d[len(prefix):] < cutoff
+            }),
+        }
+    res = cow_delete_where(spark, path, F.col(PARTITION_COLUMN) < cutoff)
+    fs, hpath_cls, _ = _hadoop_fs(spark, path)
+    for d in res["partitions_rewritten"]:
+        # the expired day's token-Bloom partition has no rows left to index
+        sidecar = hpath_cls(
+            f"{path}/{TOKEN_BLOOM_DIR}/{PARTITION_COLUMN}={d}"
+        )
+        if fs.exists(sidecar):
+            fs.delete(sidecar, True)
+    return {"cutoff": cutoff, **res}
+
+
+def apply_retention_policy(
+    spark: SparkSession,
+    path: str,
+    policies: dict[str, int],
+    default_days: int = 30,
+    today: date | None = None,
+) -> dict:
+    """Differentiated TTL — per-namespace retention windows, the
+    data-category retention a GDPR program needs beyond the reference's
+    single ``TTL 30 DAY`` (schema.sql:19). ``policies`` maps namespace ->
+    retention days; everything unlisted keeps ``default_days``. ONE
+    :func:`cow_delete_where` with a predicate OR-ing each namespace's
+    cutoff: one table pass regardless of how many policies exist, and
+    untouched days never rewrite. Returns the delete's report."""
+    today = today or date.today()
+
+    def expired(days: int):
+        cut = (today - timedelta(days=days)).isoformat()
+        return F.col(PARTITION_COLUMN) < F.lit(cut).cast("date")
+
+    pred = expired(default_days)
+    if policies:
+        pred = pred & ~F.col("namespace").isin(list(policies))
+    for ns, days in policies.items():
+        pred = pred | ((F.col("namespace") == ns) & expired(days))
+    return cow_delete_where(spark, path, pred)
 
 
 def vacuum(
@@ -1790,23 +2028,6 @@ CLONE_MARKER = f"{MANIFEST_DIR}/clone.json"
 CLONE_INTENT = f"{MANIFEST_DIR}/.clone-inprogress.json"
 
 
-def head_has_absolute_refs(spark: SparkSession, path: str) -> bool:
-    """True when the table's HEAD manifest still references files outside
-    its own root (a shallow clone whose source data has not been fully
-    rewritten away). The IN-PLACE maintenance tier must refuse such
-    tables: a directory listing is a strict SUBSET of the table there,
-    so an in-place delete/compact/retention pass would silently skip —
-    or worse, half-apply to — the rows served through the references.
-    The COW verbs handle clones correctly; this is their guard twin."""
-    versions = snapshot_versions(spark, path)
-    if not versions:
-        return False
-    return any(
-        _is_abs_entry(f)
-        for f in _manifest_files(spark, path, versions[-1])
-    )
-
-
 def shallow_clone(
     spark: SparkSession,
     src: str,
@@ -1830,8 +2051,8 @@ def shallow_clone(
     copied so maintenance jobs preserve the physical sort contract, and
     a ``_manifest/clone.json`` provenance marker records the origin.
 
-    The documented Delta caveat applies: a VACUUM or in-place rewrite on
-    the SOURCE can remove files a clone still references —
+    The documented Delta caveat applies: a VACUUM on the SOURCE can
+    remove files a clone still references —
     :func:`fsck` on the clone reports them missing, reads raise.
     Refuses to clone onto an existing table (dst must have no
     manifests). Returns {"version", "n_files", "n_ref_files", "source",
@@ -1993,8 +2214,7 @@ def _current_state_files(
     same computation a listing-mode :func:`publish_snapshot` performs:
     the head manifest's still-live files (absolute clone refs and bare
     explicit entries kept verbatim; relative day entries must still be
-    on disk, because in-place rewrites replace them and their successors
-    arrive as unmanifested files) plus committed unmanifested appends,
+    on disk) plus committed unmanifested appends,
     and the head's deletion-vector ref. Raises when no snapshot is
     published. The file list is also the pruning seam for
     sidecar-indexed scans (``table.field_range_scan``)."""
@@ -2098,9 +2318,8 @@ def _read_current_state(spark: SparkSession, path: str, schema) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deletion vectors — the MERGE-ON-READ third tier of the delete family
-# (in-place `table.delete_where` / copy-on-write `cow_delete_where` are the
-# other two). A MOR delete rewrites NO data file: it records the doomed
+# Deletion vectors — the MERGE-ON-READ twin of the copy-on-write
+# `cow_delete_where`. A MOR delete rewrites NO data file: it records the doomed
 # (file, row position) pairs in a positions dataset under `_dv/` and the
 # read path anti-joins them away — the Delta/Iceberg deletion-vector model.
 # At 100 TB this is the difference between a GDPR delete of 3 rows costing
@@ -2398,11 +2617,8 @@ def _validate_set_exprs(op: str, set_exprs: dict, log_columns) -> dict:
 
 
 def has_live_dv(spark: SparkSession, path: str) -> bool:
-    """True when the head snapshot is governed by a deletion vector. The
-    IN-PLACE maintenance tier must refuse such tables: an in-place
-    rewrite reads raw parquet (no vector applied) and re-keys files, so
-    it would RESURRECT every MOR-deleted row. The COW verbs are safe —
-    they read through :func:`read_snapshot`."""
+    """True when the head snapshot is governed by a deletion vector
+    (``maintain`` decides on a fold from it)."""
     names = _list_manifest_names(spark, path)  # one walk serves both
     versions = _versions_from_names(names)
     if not versions:
@@ -2443,8 +2659,7 @@ def mor_delete_where(
     table data."""
     import uuid as _uuid
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
+    hit = _predicate(predicate)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
     old_refs = _dv_refs(_dv_ref_at(spark, path, base_version))
@@ -2834,8 +3049,7 @@ def mor_update_where(
 
     import uuid as _uuid
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    hit = F.coalesce(pred, F.lit(False))
+    hit = _predicate(predicate)
     exprs = _validate_set_exprs("mor_update_where", set_exprs, LOG_COLUMNS)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
@@ -3087,72 +3301,26 @@ def maintain(
     rollup_path: str | None = None,
 ) -> dict:
     """One-call housekeeping — the engine's OPTIMIZE/maintenance verb:
-    heal any crashed rewrite, compact fragmented day partitions, apply
-    the optional retention window, and reclaim superseded files, using
-    whichever tier the table is on.
-
-    Manifest-managed tables (any published snapshot) take the COW tier
-    throughout: per-day :func:`cow_compact_partition` for partitions
-    whose HEAD manifest lists more than ``max_files_per_partition``
-    files, retention as a partition-pruned :func:`cow_delete_where` on
-    the date column (manifest-correct — pinned readers survive until
-    vacuum), then :func:`vacuum`. Plain directories use the in-place
-    tier (``table.compact_table`` + ``table.apply_retention``). Shallow
-    clones are therefore handled correctly for free: the COW verbs drop
-    absolute references day-by-day as they localize data, and vacuum
-    can never touch source bytes. ``dry_run`` reports the plan without
-    changing anything. Returns a per-step report dict."""
-    from datetime import date as _date
-    from datetime import timedelta as _timedelta
-
-    from .table import apply_retention, compact_table
-
-    report: dict = {"tier": None, "compacted": [], "dry_run": dry_run}
-    if not snapshot_versions(spark, path):
-        report["tier"] = "in-place"
-        if rollup_path is not None:
-            # Checked BEFORE any side effect (review r18: this used to
-            # fire only after compact + retention had already mutated the
-            # table — retention destructively drops rows, so the refusal
-            # arrived half-way through the maintenance). No manifest
-            # means no change feed, and the incremental state layout
-            # (state_v{N}) is version-keyed — refuse rather than
-            # silently writing an incompatible layout; plain directories
-            # use table.refresh_rollup directly.
-            raise ValueError(
-                f"maintain({path}): rollup_path needs a manifest-"
-                "governed table (the rollup advances from the change "
-                "feed); publish a snapshot first, or use "
-                "table.refresh_rollup for plain directories"
-            )
-        if dry_run:
-            report["note"] = "plain directory: would compact_table + retention"
-            return report
-        # normalize to the COW tier's shape (list of per-partition dicts)
-        # so operator scripts survive a table crossing tiers
-        report["compacted"] = [
-            {"partition": p, "files_after": n}
-            for p, n in sorted(compact_table(
-                spark, path,
-                max_files_per_partition=max_files_per_partition,
-            ).items())
-        ]
-        if retention_days is not None:
-            report["retention_dropped"] = apply_retention(
-                path, retention_days=retention_days, spark=spark
-            )
-        return report
-
-    report["tier"] = "cow"
+    heal any crashed rewrite, fold or coalesce an oversized deletion
+    vector, compact fragmented day partitions, apply the optional
+    retention window, and reclaim superseded files. Every step is a
+    copy-on-write rewrite: per-day :func:`cow_compact_partition` for
+    partitions whose head manifest lists more than
+    ``max_files_per_partition`` files, :func:`apply_retention`, then
+    :func:`vacuum`. A table never published gets its v0 first. Shallow
+    clones are handled for free: the rewrites drop absolute references
+    day-by-day as they localize data, and vacuum can never touch source
+    bytes. ``dry_run`` reports the plan without writing anything, not
+    even a v0. Returns a per-step report dict."""
+    report: dict = {"compacted": [], "dry_run": dry_run}
     if rollup_path is not None:
         # the rollup advance runs LAST (after vacuum), but its lock is
         # checked FIRST: hitting a stale/foreign .rollup-inprogress.json
         # only after recover/compact/retention/vacuum already mutated the
-        # table would discard the whole report behind the raise — the
-        # same refusal-after-side-effects pattern fixed for the plain
-        # tier above (review r19). The check is a fast-fail courtesy,
-        # not the exclusivity primitive (the advance re-claims
-        # atomically); a dry run reports the held lock instead.
+        # table would discard the whole report behind the raise.
+        # The check is a fast-fail courtesy, not the exclusivity
+        # primitive (the advance re-claims atomically); a dry run
+        # reports the held lock instead.
         from .table import ROLLUP_LOCK, ConcurrentRollupError
 
         fs_, hp_, _ = _hadoop_fs(spark, rollup_path)
@@ -3175,6 +3343,8 @@ def maintain(
         )
     else:
         report["journal_recovered"] = recover_incomplete_rewrite(spark, path)
+        if not snapshot_versions(spark, path):
+            publish_snapshot(spark, path)
         # deletion-vector policy FIRST (any fold rewrites affected days —
         # recomputing fragmentation after it avoids compacting the same
         # day twice). The fold is THRESHOLDED (VERDICT r17 #3): only
@@ -3241,9 +3411,8 @@ def maintain(
         else:
             report["would_dv_compact"] = False
             report["would_dv_coalesce"] = False
-    head = snapshot_versions(spark, path)[-1]
     per_day: dict[str, int] = {}
-    for f in _manifest_files(spark, path, head):
+    for f in _plan_files(spark, path):
         d = _entry_day_dir(f)
         per_day[d] = per_day.get(d, 0) + 1
     # groups without the engine's 'date=...' shape are unpartitioned
@@ -3258,11 +3427,8 @@ def maintain(
     if dry_run:
         report["would_compact"] = fragmented
         if retention_days is not None:
-            cutoff = _date.today() - _timedelta(days=retention_days)
-            report["would_retire"] = sorted(
-                d for d in per_day
-                if d.startswith(_day_prefix)
-                and d.split("=", 1)[1] < str(cutoff)
+            report["retention"] = apply_retention(
+                spark, path, retention_days, dry_run=True
             )
         report["vacuum"] = vacuum(spark, path, keep_versions, dry_run=True)
         if rollup_path is not None:
@@ -3276,10 +3442,10 @@ def maintain(
 
             fs_r, hp_r, _ = _hadoop_fs(spark, rollup_path)
             states_ = _rollup_state_versions(fs_r, hp_r, rollup_path)
-            head_ = snapshot_versions(spark, path)[-1]
+            head_ = (snapshot_versions(spark, path) or [None])[-1]
             pending = bool(
                 report.get("would_compact")
-                or report.get("would_retire")
+                or report.get("retention", {}).get("would_rewrite")
                 or report.get("would_dv_compact")
                 or report.get("would_dv_coalesce")
             )
@@ -3299,18 +3465,7 @@ def maintain(
                 {"partition": d, "files_compacted": res["files_compacted"]}
             )
     if retention_days is not None:
-        cutoff = _date.today() - _timedelta(days=retention_days)
-        # predicate on the PARTITION column (== to_date(timestamp) on
-        # every write path) so the affected-days aggregate prunes to the
-        # expired day directories instead of scanning all timestamps
-        rres = cow_delete_where(
-            spark, path, F.col(PARTITION_COLUMN) < str(cutoff)
-        )
-        report["retention"] = {
-            "cutoff": str(cutoff),
-            "rows_deleted": rres["rows_deleted"],
-            "partitions_rewritten": rres["partitions_rewritten"],
-        }
+        report["retention"] = apply_retention(spark, path, retention_days)
     report["vacuum"] = vacuum(spark, path, keep_versions)
     if rollup_path is not None:
         # advance the incremental rollup LAST, after every verb above

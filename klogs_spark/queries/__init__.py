@@ -267,24 +267,19 @@ DRIVER_VERIFIED: dict = {
     "table_cow_lifecycle": "1c02f89363de",
     "table_cow_promoted_roundtrip": "979cd0912c81",
     "table_cow_update": "3d7a6564a377",
-    "table_delete_where": "6feff3ab1ffe",
     "table_expectations": "e7c6542173fc",
     "table_field_range_files": "658fbb74c597",
     "table_field_range_skip": "d3501043d300",
     "table_fulltext_or": "ff807a3326b8",
     "table_fulltext_phrase": "da3c1c8f4e3b",
     "table_fulltext_skipindex": "7c2177eb074f",
-    "table_lifecycle": "68fd474e9d21",
-    "table_merge_upsert": "2934c24daf96",
     "table_promoted_view": "775113dc1793",
     "table_read_current": "1de6dab9df13",
     "table_restore": "d5d49c5fdf43",
-    "table_retention_policy": "49cf8b48e442",
     "table_shallow_clone": "a023896c34be",
     "table_snapshot_changes": "91b5f3bdd0c8",
     "table_snapshot_mixed_schema": "9e4eef96b852",
     "table_time_travel": "d721774c99fd",
-    "table_zorder_lifecycle": "875f50cdf283",
     "table_zorder_values": "86d234cc47ae",
     "text_bigram_logprob": "20a1bea60a1e",
     "text_bloom_decontaminate": "f76ed7573dad",

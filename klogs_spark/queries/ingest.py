@@ -995,23 +995,19 @@ RETENTION_DAYS = 15  # cutoff 2024-01-16: drops Jan 1-15, keeps Jan 16-30
 def q_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole table lifecycle externally checked: two interleaved
     write_logs appends (split by namespace, so every day-partition holds two
-    file sets), targeted compact_partition on two days (file-count hygiene,
-    MergeTree background-merge parity), then the TTL retention job with a
-    pinned 'today' — and finally a per-day aggregate of what survives.
+    file sets), targeted cow_compact_partition on two days (file-count
+    hygiene, MergeTree background-merge parity), then the TTL retention job
+    with a pinned 'today' — and finally a per-day aggregate of what survives.
 
     The oracle computes the same aggregate directly from events restricted
     to the retention window: equality proves the partitioned write, the
-    single-partition compaction rewrite, and the partition-drop TTL lose or
-    duplicate NOTHING outside the dropped window."""
+    single-partition compaction rewrite, and the copy-on-write TTL delete
+    lose or duplicate NOTHING outside the expired window."""
     import tempfile
     from datetime import date
 
-    from ..table import (
-        apply_retention,
-        compact_partition,
-        read_logs,
-        write_logs,
-    )
+    from ..manifest import apply_retention, cow_compact_partition
+    from ..table import read_logs, write_logs
     from ..views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, sf_dir)
@@ -1021,10 +1017,10 @@ def q_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_logs(logs.filter(first), tdir)
     write_logs(logs.filter(~first), tdir)
     for day in ("2024-01-20", "2024-01-21"):
-        compact_partition(spark, tdir, f"date={day}")
+        cow_compact_partition(spark, tdir, f"date={day}")
     apply_retention(
-        tdir, RETENTION_DAYS, today=date.fromisoformat(RETENTION_TODAY),
-        spark=spark,
+        spark, tdir, RETENTION_DAYS,
+        today=date.fromisoformat(RETENTION_TODAY),
     )
     return (
         read_logs(spark, tdir)
@@ -1055,15 +1051,15 @@ DELETE_NS_FROM, DELETE_NS_TO = "2024-01-10", "2024-01-15"  # partial rewrites
 
 def q_table_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level delete externally checked: write January's logs, then
-    delete_where with a predicate that fully empties one day (exercising
-    the stale-directory drop path) AND partially matches six others
-    (exercising the dynamic-partition rewrite path), then aggregate what
-    survives per day. The oracle recomputes the aggregate from events with
-    the deletions excluded — equality proves the rewrite lost/duplicated
-    nothing outside the predicate and the emptied day is gone, not stale."""
+    cow_delete_where with a predicate that fully empties one day AND
+    partially matches six others, then aggregate what survives per day.
+    The oracle recomputes the aggregate from events with the deletions
+    excluded — equality proves the rewrite lost/duplicated nothing outside
+    the predicate and the emptied day is gone, not stale."""
     import tempfile
 
-    from ..table import delete_where, read_logs, write_logs
+    from ..manifest import cow_delete_where
+    from ..table import read_logs, write_logs
     from ..views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, sf_dir).filter(
@@ -1072,7 +1068,7 @@ def q_table_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="klogs-delete-")
     tdir = f"{base}/logs"
     write_logs(logs, tdir)
-    delete_where(
+    cow_delete_where(
         spark, tdir,
         f"(date = DATE '{DELETE_FULL_DAY}') OR "
         f"(namespace = 'ns-1' AND date BETWEEN DATE '{DELETE_NS_FROM}' "
@@ -2281,7 +2277,7 @@ MERGE_INS_FROM, MERGE_INS_TO = "2024-01-08", "2024-01-10"
 
 
 def q_table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Copy-on-write MERGE end-to-end (table.merge_upsert — the
+    """Copy-on-write MERGE end-to-end (manifest.cow_merge_upsert — the
     Delta/Iceberg MERGE INTO equivalent): write week 1, then merge a batch
     that UPDATES two existing days (same keys, log line gains a ' [v2]'
     suffix) and INSERTS two brand-new days, rewriting only the touched
@@ -2291,7 +2287,8 @@ def q_table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced (not duplicated) and every new row landed exactly once."""
     import tempfile
 
-    from ..table import merge_upsert, read_logs, write_logs
+    from ..manifest import cow_merge_upsert
+    from ..table import read_logs, write_logs
     from ..views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, sf_dir)
@@ -2311,7 +2308,7 @@ def q_table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    merge_upsert(spark, tdir, updates, key_cols=["timestamp"])
+    cow_merge_upsert(spark, tdir, updates, key_cols=["timestamp"])
     return (
         read_logs(spark, tdir)
         .groupBy("date", "namespace")
@@ -2358,8 +2355,7 @@ def q_table_cow_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         the brand-new day, and CRUCIALLY the unchanged second half of
         Jan 3 (carried through the rewrite) cancels to nothing;
       * kind='pin': the v1 reader still sees the pre-merge table (time
-        travel across a MERGE — the thing table.merge_upsert's in-place
-        overwrite cannot give)."""
+        travel across a MERGE)."""
     import tempfile
 
     from ..manifest import (
@@ -2448,10 +2444,9 @@ POLICY_DEFAULT_DAYS = 18
 
 
 def q_table_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentiated TTL end-to-end (table.apply_retention_policy):
-    per-namespace retention windows composed into ONE delete_where pass —
-    days where every namespace expired drop as directories, days where
-    only some expired rewrite once, newer days untouched. The read-back
+    """Differentiated TTL end-to-end (manifest.apply_retention_policy):
+    per-namespace retention windows composed into ONE cow_delete_where
+    pass — days holding expired rows rewrite once, newer days untouched. The read-back
     per-(day, namespace) counts must equal the oracle's exclusion
     computation; any row kept past its category's window (the GDPR
     failure) or dropped early breaks the hash."""
@@ -2459,7 +2454,8 @@ def q_table_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datetime import date as _date
 
-    from ..table import apply_retention_policy, read_logs, write_logs
+    from ..manifest import apply_retention_policy
+    from ..table import read_logs, write_logs
     from ..views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, sf_dir)
@@ -3417,7 +3413,8 @@ def q_table_zorder_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-sortedness itself is pinned by tests/test_table_ops.py."""
     import tempfile
 
-    from ..table import compact_partition, delete_where, read_logs, write_logs_zordered
+    from ..manifest import cow_compact_partition, cow_delete_where
+    from ..table import read_logs, write_logs_zordered
     from ..views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, sf_dir).filter(
@@ -3426,8 +3423,8 @@ def q_table_zorder_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="klogs-zlife-")
     tdir = f"{base}/logs"
     write_logs_zordered(logs, tdir)
-    compact_partition(spark, tdir, "date=2024-01-02")
-    delete_where(
+    cow_compact_partition(spark, tdir, "date=2024-01-02")
+    cow_delete_where(
         spark, tdir,
         f"(date = DATE '{DELETE_FULL_DAY}') OR "
         f"(namespace = 'ns-1' AND date BETWEEN DATE '{DELETE_NS_FROM}' "
@@ -3943,8 +3940,8 @@ FROM wk WHERE pod NOT IN (7, 8) GROUP BY 2
 
 
 def q_table_mor_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The merge-on-read delete lifecycle (deletion vectors — the third
-    delete tier after in-place and copy-on-write) externally
+    """The merge-on-read delete lifecycle (deletion vectors — the
+    delete tier next to copy-on-write) externally
     hash-checked in one pass: write a week → snapshot v1 → MOR-DELETE
     pod-7 (manifest.mor_delete_where: positions recorded in a `_dv/`
     generation, ZERO data files written — the v1→v2 manifest file lists
@@ -4488,8 +4485,8 @@ SPECS = {
     "table_delete_where": QuerySpec(
         q_table_delete_where,
         SQL_TABLE_DELETE_WHERE,
-        "row-level predicate delete: dynamic rewrite of partially-matched "
-        "days + checked drop of fully-emptied days, vs exclusion oracle",
+        "row-level predicate delete: copy-on-write rewrite of the matched "
+        "days (one fully emptied), vs exclusion oracle",
     ),
     "table_promoted_view": QuerySpec(
         q_table_promoted_view,
@@ -4722,8 +4719,8 @@ SPECS = {
     "table_retention_policy": QuerySpec(
         q_table_retention_policy,
         SQL_TABLE_RETENTION_POLICY,
-        "differentiated per-namespace TTL in one delete_where pass: "
-        "expired days drop, mixed days rewrite once, vs exclusion oracle",
+        "differentiated per-namespace TTL in one cow_delete_where pass: "
+        "days holding expired rows rewrite once, vs exclusion oracle",
     ),
     "table_merge_upsert": QuerySpec(
         q_table_merge_upsert,

@@ -8,7 +8,8 @@ Reference schema.sql:16-21 defines the entire performance contract (SURVEY
 - ``ORDER BY (cluster, ..., timestamp)`` -> ``sortWithinPartitions`` on the same
   key before write, so parquet row-group min/max stats skip granules for
   selective envelope predicates (F2) — the sparse-primary-index equivalent.
-- ``TTL 30 DAY``                       -> :func:`apply_retention` partition-drop job.
+- ``TTL 30 DAY``                       -> ``manifest.apply_retention``, a
+  copy-on-write delete of the expired days.
 - ``LowCardinality`` / codecs          -> parquet dictionary encoding + zstd
   (set session-wide in session.py).
 - ``Distributed(..., rand())``         -> Spark's native partitioned write; no code.
@@ -21,8 +22,6 @@ maintain; writes scale horizontally because partitions are independent.
 from __future__ import annotations
 
 import re
-from datetime import date, timedelta
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StringType, StructField, StructType
@@ -141,18 +140,19 @@ def read_schema(spark: SparkSession, path: str) -> StructType | None:
     return known_schema(_read_marker(spark, path))
 
 
-def _layout_sorted(df: DataFrame, layout: dict, lead_partition: bool) -> DataFrame:
-    """Sort ``df`` per the table's layout contract. ``lead_partition``
-    prepends the date column (required by FileFormatWriter when the frame
-    spans partitions; single-partition rewrites omit it)."""
-    lead = [PARTITION_COLUMN] if lead_partition else []
+def _layout_sorted(df: DataFrame, layout: dict) -> DataFrame:
+    """Sort ``df`` per the table's layout contract, the date column
+    leading (FileFormatWriter requires ordering by the partition column
+    when the frame spans partitions)."""
     if layout.get("layout") == "zorder":
         from .ext.zorder import add_zorder
 
         cols = df.columns
         z = add_zorder(df, list(layout["cols"]))
-        return z.sortWithinPartitions(*lead, "_z", "timestamp").select(*cols)
-    return df.sortWithinPartitions(*lead, *CLUSTER_KEY)
+        return z.sortWithinPartitions(
+            PARTITION_COLUMN, "_z", "timestamp"
+        ).select(*cols)
+    return df.sortWithinPartitions(PARTITION_COLUMN, *CLUSTER_KEY)
 
 
 def write_logs(
@@ -178,8 +178,9 @@ def write_logs(
     ``repartitionByRange`` was rejected because its boundary sampling
     recomputes the full upstream lineage (a second decode pass on the ingest
     path); REBALANCE sizes partitions from shuffle statistics instead.
-    ``maxRecordsPerFile`` caps any single file; :func:`compact_partition`
-    handles file-count hygiene per day.
+    ``maxRecordsPerFile`` caps any single file; ``manifest.maintain``
+    (``cow_compact_partition`` per fragmented day) handles file-count
+    hygiene.
 
     Promotion invariant (README.md:69-91 DEFAULT-column parity): when the
     table's layout marker records promoted columns, ANY append through
@@ -187,7 +188,7 @@ def write_logs(
     data file carries the physical column and the transparent read-path
     rewrite (logs_query) never serves NULLs for rows written by a plain
     append. Tables promoted AFTER accumulating plain history need the
-    one-off :func:`materialize_promotions` backfill (the MATERIALIZE
+    one-off ``manifest.materialize_promotions`` backfill (the MATERIALIZE
     COLUMN twin).
     """
     if mark_layout:
@@ -432,126 +433,6 @@ def write_bucketed(
 
 
 
-def _refuse_inplace_on_clone(spark: SparkSession, path: str, op: str) -> None:
-    """The in-place maintenance tier's shallow-clone guard: when the head
-    manifest references files OUTSIDE the table root, a directory listing
-    is a strict subset of the table, so an in-place delete/compact/
-    retention/backfill pass would silently skip (or half-apply to) the
-    rows served through those references. The COW verbs handle clones
-    correctly — route there."""
-    from .manifest import has_live_dv, head_has_absolute_refs
-
-    if head_has_absolute_refs(spark, path):
-        raise ValueError(
-            f"{op}({path}) refused: the head manifest references source "
-            "files outside the table root (shallow clone) — in-place "
-            "maintenance sees only clone-local files and would silently "
-            "half-apply; use the COW tier (cow_delete_where / "
-            "cow_compact_partition / cow_merge_upsert) instead"
-        )
-    if has_live_dv(spark, path):
-        raise ValueError(
-            f"{op}({path}) refused: the head snapshot is governed by a "
-            "deletion vector (merge-on-read deletes) — an in-place "
-            "rewrite reads raw parquet without the vector and re-keys "
-            "files, RESURRECTING every MOR-deleted row; run dv_compact "
-            "(or use the COW tier, which reads through read_snapshot) "
-            "first"
-        )
-
-
-def compact_partition(
-    spark: SparkSession,
-    path: str,
-    partition: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-) -> int:
-    """Compact one day-partition's small files into ~target-sized files.
-
-    The MergeTree background-merge equivalent: streaming ingest appends one
-    file set per micro-batch, so a day accumulates many small files; query
-    cost grows with file count (task scheduling + footer reads). Rewrites a
-    SINGLE partition directory (never the table) preserving the cluster-key
-    sort; safe to run per-day behind the watermark of active ingest.
-    Returns the resulting file count.
-    """
-    _refuse_inplace_on_clone(spark, path, "table.compact_partition")
-    fs, hpath_cls, root = _hadoop_fs(spark, path)
-    part_path = hpath_cls(root, partition)
-    if not fs.exists(part_path):
-        return 0
-
-    def _parquet_files():
-        return [
-            s
-            for s in fs.listStatus(part_path)
-            if s.getPath().getName().endswith(".parquet")
-        ]
-
-    total_bytes = sum(s.getLen() for s in _parquet_files())
-    n_files = max(1, round(total_bytes / target_file_bytes))
-    col, _, val = partition.partition("=")
-    # Spark-native single-partition INSERT OVERWRITE: read the one partition
-    # directory, restore the partition column from the dir name, and rewrite
-    # through the committer with dynamic partition overwrite — only this
-    # partition is replaced, the swap happens at job commit (a rename on
-    # HDFS/local), and no engine-external rmtree/rename is involved, so the
-    # operation is safe wherever the table lives. For stronger isolation
-    # under concurrent readers on object stores, front the table with a
-    # transactional format (Delta) — documented production option.
-    df = spark.read.parquet(f"{path}/{partition}").withColumn(
-        col, F.lit(val).cast("date" if col == PARTITION_COLUMN else "string")
-    )
-    (
-        _layout_sorted(
-            df.repartition(n_files), read_layout(spark, path),
-            lead_partition=False,
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(path)
-    )
-    return len(_parquet_files())
-
-
-def reprocess_partition(
-    spark: SparkSession,
-    path: str,
-    partition: str,
-    transform,
-) -> int:
-    """Backfill one day through a new transform (the reprocessing job every
-    pipeline eventually needs: a parser fix, a new promoted column, a
-    redaction sweep): read ONLY the partition directory, apply
-    ``transform(df) -> df``, and swap the day atomically via dynamic
-    partition overwrite at job commit — exactly the
-    :func:`compact_partition` machinery with a logic hook, and the same
-    safety shape: sources are subdirectories, untouched days never
-    rewrite. The transform must preserve the schema (minus the partition
-    column, which is restored from the directory name). The table's
-    recorded sort layout (cluster key or z-order, see ``read_layout``) is
-    re-applied after the transform. Returns the day's row count.
-    """
-    _refuse_inplace_on_clone(spark, path, "table.reprocess_partition")
-    fs, hpath_cls, root = _hadoop_fs(spark, path)
-    if not fs.exists(hpath_cls(root, partition)):
-        return 0
-    col, _, val = partition.partition("=")
-    df = spark.read.parquet(f"{path}/{partition}")
-    out = transform(df).withColumn(
-        col, F.lit(val).cast("date" if col == PARTITION_COLUMN else "string")
-    )
-    (
-        _layout_sorted(out, read_layout(spark, path), lead_partition=False)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(path)
-    )
-    return spark.read.parquet(f"{path}/{partition}").count()
-
-
 def collect_column_stats(
     df: DataFrame,
     columns: list,
@@ -598,199 +479,6 @@ def collect_column_stats(
     )
 
 
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    predicate,
-) -> dict:
-    """Row-level delete (the GDPR / right-to-be-forgotten job): remove every
-    row matching ``predicate`` (a Column or SQL string) by rewriting ONLY
-    the day-partitions that contain matches.
-
-    Three phases, none corpus-sized beyond the targeted partitions:
-
-      1. find affected days — one aggregate over the predicate (partition
-         stats + pushdown prune the scan);
-      2. dynamic-partition-overwrite the affected days with their KEPT rows
-         (cluster sort preserved). Spark's dynamic mode only replaces
-         partitions that receive data, so untouched days never rewrite;
-      3. a day whose every row matched emits no data in (2) and would
-         survive as a stale directory — those days are dropped through the
-         FileSystem API (checked delete, same contract as apply_retention).
-
-    Returns {"partitions_rewritten": [...], "partitions_dropped": [...],
-    "rows_deleted": n}. At 100 TB the rewrite cost is proportional to the
-    affected days' data, the norm for parquet-backed row deletes (the same
-    copy-on-write contract as Delta/Iceberg without the manifest layer).
-
-    SQL DELETE contract: a row is deleted only where the predicate is TRUE.
-    A NULL predicate (e.g. ``element_at(fields_string,'user')='42'`` on a
-    row missing the key) keeps the row — three-valued logic is collapsed
-    with ``coalesce(pred, false)`` so survivors are "not TRUE", never
-    "TRUE of the negation".
-    """
-    _refuse_inplace_on_clone(spark, path, "table.delete_where")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred = F.coalesce(pred, F.lit(False))
-    tbl = spark.read.parquet(path)
-    per_day = (
-        tbl.groupBy(PARTITION_COLUMN)
-        .agg(
-            F.sum(pred.cast("int")).alias("_matches"),
-            F.count(F.lit(1)).alias("_rows"),
-        )
-        .filter(F.col("_matches") > 0)
-        .collect()
-    )
-    rewritten: list[str] = []
-    dropped: list[str] = []
-    deleted = 0
-    full = [r for r in per_day if r["_matches"] == r["_rows"]]
-    partial = [r for r in per_day if r["_matches"] < r["_rows"]]
-    if partial:
-        # read each affected day as a SUBDIRECTORY (the compact_partition
-        # precedent): the write plan's sources never equal the output root,
-        # so Spark's overwrite-while-reading guard stays satisfied, and
-        # dynamic mode swaps exactly these days at job commit
-        days = [r[PARTITION_COLUMN] for r in partial]
-        parts = [
-            spark.read.parquet(f"{path}/{PARTITION_COLUMN}={d}")
-            .withColumn(PARTITION_COLUMN, F.lit(str(d)).cast("date"))
-            for d in days
-        ]
-        keep = parts[0]
-        for p in parts[1:]:
-            keep = keep.unionByName(p)
-        (
-            _layout_sorted(
-                keep.filter(~pred), read_layout(spark, path),
-                lead_partition=True,
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COLUMN)
-            .parquet(path)
-        )
-        rewritten = [f"{PARTITION_COLUMN}={d}" for d in days]
-        deleted += sum(r["_matches"] for r in partial)
-    if full:
-        fs, hpath_cls, root = _hadoop_fs(spark, path)
-        for r in full:
-            name = f"{PARTITION_COLUMN}={r[PARTITION_COLUMN]}"
-            target = hpath_cls(root, name)
-            if fs.exists(target) and not fs.delete(target, True):
-                raise IOError(f"delete_where could not drop {name} under {path}")
-            dropped.append(name)
-            deleted += r["_matches"]
-    return {
-        "partitions_rewritten": rewritten,
-        "partitions_dropped": dropped,
-        "rows_deleted": int(deleted),
-    }
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    max_files_per_partition: int = 8,
-    target_file_bytes: int = 512 * 1024 * 1024,
-) -> dict[str, int]:
-    """Maintenance sweep: compact every day-partition whose file count
-    exceeds the threshold — the scheduled equivalent of MergeTree's
-    background merges (streaming ingest appends one file set per
-    micro-batch, so file counts grow until merged). O(#days) listing via
-    the FS API; only oversized partitions rewrite. Returns
-    {partition: resulting_file_count} for the partitions compacted.
-    """
-    _refuse_inplace_on_clone(spark, path, "table.compact_table")
-    fs, _, root = _hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return {}
-    compacted: dict[str, int] = {}
-    prefix = f"{PARTITION_COLUMN}="
-    for status in sorted(fs.listStatus(root), key=lambda s: s.getPath().getName()):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue
-        n_files = sum(
-            1
-            for f in fs.listStatus(status.getPath())
-            if f.getPath().getName().endswith(".parquet")
-        )
-        if n_files > max_files_per_partition:
-            compacted[name] = compact_partition(
-                spark, path, name, target_file_bytes
-            )
-    return compacted
-
-
-def apply_retention(
-    path: str,
-    retention_days: int = 30,
-    today: date | None = None,
-    spark: SparkSession | None = None,
-    dry_run: bool = False,
-) -> list[str]:
-    """TTL job: drop day-partitions older than the retention window.
-
-    Parity with ``TTL toDateTime(timestamp) + INTERVAL 30 DAY`` (schema.sql:19)
-    — ClickHouse enforces it in storage; Spark needs an explicit partition-drop
-    job (SURVEY §1.3). Deleting whole partition directories is O(#days), never
-    a data rewrite, so it holds at any scale; deletion goes through the Hadoop
-    FileSystem API so it works on object stores, not just file://.
-    ``dry_run=True`` reports what WOULD drop without touching anything —
-    the approve-before-delete step every retention runbook wants.
-    Returns dropped (or would-drop) partition names.
-    """
-    spark = spark or SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    _refuse_inplace_on_clone(spark, path, "table.apply_retention")
-    today = today or date.today()
-    cutoff = today - timedelta(days=retention_days)
-    dropped: list[str] = []
-    failed: list[str] = []
-    fs, _, root = _hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return dropped
-    prefix = f"{PARTITION_COLUMN}="
-    for status in sorted(fs.listStatus(root), key=lambda s: s.getPath().getName()):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue
-        try:
-            part_date = date.fromisoformat(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if part_date < cutoff:
-            if dry_run:
-                dropped.append(name)
-                continue
-            # FileSystem.delete reports failure by returning FALSE, not by
-            # raising (the S3A failure mode): a false here must not be
-            # reported as dropped. Attempt every expired partition, then
-            # surface the failures — the periodic TTL job retries next run.
-            if fs.delete(status.getPath(), True):
-                dropped.append(name)
-                # drop the day's token-Bloom sidecar partition with it —
-                # otherwise stale index days accumulate for the table's
-                # lifetime (search stays correct either way: candidate days
-                # are intersected with live partitions). A false/missing
-                # delete is NOT a retention failure — the sidecar row is
-                # unreachable once the data partition is gone.
-                sidecar = _hadoop_fs(
-                    spark, f"{path}/{TOKEN_BLOOM_DIR}/{name}"
-                )[2]
-                if fs.exists(sidecar):
-                    fs.delete(sidecar, True)
-            else:
-                failed.append(name)
-    if failed:
-        raise IOError(
-            f"retention could not drop partitions {failed} under {path}; "
-            f"dropped so far: {dropped}"
-        )
-    return dropped
-
-
 # --- token-bloom partition skip index ---------------------------------------
 # Beyond the reference DDL (schema.sql has no skip indexes): a per-day token
 # Bloom filter over the `log` column, the Spark-side equivalent of
@@ -806,184 +494,6 @@ def apply_retention(
 TOKEN_BLOOM_DIR = "_token_bloom"
 TOKEN_BLOOM_M = 4096
 TOKEN_BLOOM_K = 3
-
-
-def optimize_zorder(
-    spark: SparkSession,
-    path: str,
-    zorder_on: tuple[str, ...] = ("namespace", "app", "host"),
-    days: list[str] | None = None,
-) -> list[str]:
-    """Convert an EXISTING table to the z-order layout in place — the
-    ``OPTIMIZE ... ZORDER BY`` twin (write_logs_zordered covers new
-    writes; this rewrites history). Day-at-a-time subdirectory reads keep
-    Spark's overwrite-while-reading guard satisfied; each day rewrites in
-    Morton order via dynamic partition overwrite, and the layout marker
-    flips FIRST so maintenance jobs racing the rewrite already re-sort by
-    the target layout (either sort is correct data-wise — the marker is a
-    layout, not a correctness, contract). ``days`` restricts the rewrite
-    (resumable backfill); default is every partition. Cost is the
-    rewritten days' data — the same copy-on-write bill OPTIMIZE pays
-    anywhere. Returns the rewritten partition names."""
-    _refuse_inplace_on_clone(spark, path, "table.optimize_zorder")
-    from .ext.zorder import add_zorder
-
-    _write_layout_marker(
-        spark, path, {
-            **read_layout(spark, path),
-            "layout": "zorder", "cols": list(zorder_on),
-        },
-    )
-    fs, hpath_cls, root = _hadoop_fs(spark, path)
-    prefix = f"{PARTITION_COLUMN}="
-    targets = []
-    for part in sorted(fs.listStatus(root), key=lambda s: s.getPath().getName()):
-        name = part.getPath().getName()
-        if part.isDirectory() and name.startswith(prefix):
-            if days is None or name.split("=", 1)[1] in set(days):
-                targets.append(name)
-    for name in targets:
-        day = name.split("=", 1)[1]
-        part_df = (
-            spark.read.parquet(f"{path}/{name}")
-            .withColumn(PARTITION_COLUMN, F.lit(day).cast("date"))
-        )
-        cols = part_df.columns
-        (
-            add_zorder(part_df, list(zorder_on))
-            .sortWithinPartitions(PARTITION_COLUMN, "_z", "timestamp")
-            .select(*cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COLUMN)
-            .parquet(path)
-        )
-    return targets
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-) -> dict:
-    """Copy-on-write MERGE (the Delta/Iceberg ``MERGE INTO ... WHEN MATCHED
-    UPDATE WHEN NOT MATCHED INSERT`` equivalent for the native table):
-    rows in ``updates`` replace existing rows with the same key, new keys
-    insert — rewriting ONLY the day partitions the updates touch.
-
-    Mechanics per affected day (the delete_where discipline): read the day
-    as a subdirectory, LEFT ANTI join out the matched keys, union the
-    day's updates, re-sort per the recorded layout, dynamic-partition
-    overwrite. Days the updates never mention are untouched; a day that
-    exists only in the updates is created by the same write. The key
-    must be unique within ``updates`` (last-writer-wins semantics would
-    need an explicit precedence column — out of scope, stated).
-
-    At 100 TB the rewrite cost is the touched days' data — the standard
-    copy-on-write MERGE contract. Returns {"partitions_written": [...],
-    "rows_updated": n, "rows_inserted": n}."""
-    _refuse_inplace_on_clone(spark, path, "table.merge_upsert")
-    # promotion invariant (same DEFAULT-on-insert contract as write_logs):
-    # updates materialize any promoted columns they lack, so a MERGE into
-    # a promoted table never produces deficient files or schema mismatches
-    promos = read_layout(spark, path).get("promotions") or {}
-    mat = updates
-    for pkey, pcol in promos.items():
-        if pcol not in mat.columns:
-            from .transform import promote_string_field
-
-            mat = promote_string_field(mat, pkey, pcol)
-    dated = mat.withColumn(
-        PARTITION_COLUMN, F.to_date(F.col("timestamp"))
-    )
-    days = [str(r[0]) for r in dated.select(PARTITION_COLUMN).distinct().collect()]
-    if not days:
-        return {"partitions_written": [], "rows_updated": 0,
-                "rows_inserted": 0}
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
-    existing_parts = []
-    for d in days:
-        target = hpath_cls(f"{path}/{PARTITION_COLUMN}={d}")
-        if fs.exists(target):
-            # mergeSchema: a promoted table may hold pre-backfill files
-            # lacking the promoted column inside one day — without it the
-            # read can drop that column or break the union below
-            existing_parts.append(
-                spark.read.option("mergeSchema", "true")
-                .parquet(f"{path}/{PARTITION_COLUMN}={d}")
-                .withColumn(PARTITION_COLUMN, F.lit(d).cast("date"))
-            )
-    n_upd = 0
-    if existing_parts:
-        existing = existing_parts[0]
-        for p in existing_parts[1:]:
-            existing = existing.unionByName(p, allowMissingColumns=True)
-        keys = dated.select(*key_cols)
-        # count matched UPDATE rows (not matched existing rows): a key
-        # matching several existing rows must not inflate rows_updated
-        # past len(updates) and drive rows_inserted negative
-        n_upd = keys.join(
-            existing.select(*key_cols), key_cols, "left_semi"
-        ).count()
-        kept = existing.join(keys, key_cols, "left_anti")
-        merged = kept.unionByName(dated, allowMissingColumns=True)
-    else:
-        merged = dated
-    (
-        _layout_sorted(merged, read_layout(spark, path), lead_partition=True)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(path)
-    )
-    n_updates = dated.count()
-    return {
-        "partitions_written": [f"{PARTITION_COLUMN}={d}" for d in sorted(days)],
-        "rows_updated": int(n_upd),
-        "rows_inserted": int(n_updates - n_upd),
-    }
-
-
-def apply_retention_policy(
-    spark: SparkSession,
-    path: str,
-    policies: dict[str, int],
-    default_days: int = 30,
-    today: date | None = None,
-) -> dict:
-    """Differentiated TTL — per-namespace retention windows, the
-    data-category retention a GDPR program needs beyond the reference's
-    single ``TTL 30 DAY`` (schema.sql:19). ``policies`` maps namespace ->
-    retention days; everything unlisted keeps ``default_days``.
-
-    Namespaces share day partitions, so this composes onto
-    :func:`delete_where`'s machinery with ONE predicate OR-ing each
-    namespace's cutoff: days older than every applicable window empty out
-    and drop as directories (the cheap whole-partition path — equivalent
-    to apply_retention), while days where only some namespaces expired
-    rewrite themselves once. One table pass total regardless of how many
-    policies exist; untouched days never rewrite. Returns delete_where's
-    report."""
-    _refuse_inplace_on_clone(spark, path, "table.apply_retention_policy")
-    today = today or date.today()
-    listed = list(policies)
-    conds = []
-    for ns, days in policies.items():
-        cut = (today - timedelta(days=days)).isoformat()
-        conds.append(
-            (F.col("namespace") == ns)
-            & (F.col(PARTITION_COLUMN) < F.lit(cut).cast("date"))
-        )
-    dcut = (today - timedelta(days=default_days)).isoformat()
-    default_cond = F.col(PARTITION_COLUMN) < F.lit(dcut).cast("date")
-    if listed:
-        default_cond = default_cond & ~F.col("namespace").isin(listed)
-    conds.append(default_cond)
-    pred = conds[0]
-    for c in conds[1:]:
-        pred = pred | c
-    return delete_where(spark, path, pred)
 
 
 def write_token_bloom_index(
@@ -1141,84 +651,6 @@ def fulltext_phrase_search(
     return base.filter(F.col(PARTITION_COLUMN).isin(dates)).filter(
         F.col("log").contains(phrase)
     )
-
-
-def materialize_promotions(spark: SparkSession, path: str) -> list[str]:
-    """Backfill promoted columns into data files written BEFORE the
-    promotion was recorded — the MATERIALIZE COLUMN half of the reference
-    recipe (README.md:69-91; the DEFAULT half is write_logs's automatic
-    materialization on append). Needed exactly when write_logs_promoted
-    appends onto a table with plain history: those old files lack the
-    physical column, and the transparent read-path rewrite would serve
-    NULLs for their rows.
-
-    Detection is footer-only (one parquet metadata read per file, no data
-    scan — the standard cost of a one-off backfill job); only days with a
-    deficient file rewrite, via the same subdirectory-read +
-    dynamic-overwrite discipline as delete_where, preserving the recorded
-    sort layout. Values come from ``coalesce(column, map[key])`` so mixed
-    days keep already-materialized values byte-identical. Returns the
-    rewritten partition names."""
-    _refuse_inplace_on_clone(spark, path, "table.materialize_promotions")
-    from .transform import field_string
-
-    promos = read_layout(spark, path).get("promotions") or {}
-    if not promos:
-        return []
-    fs, hpath_cls, root = _hadoop_fs(spark, path)
-    prefix = f"{PARTITION_COLUMN}="
-    deficient: list[str] = []
-    for part in sorted(fs.listStatus(root), key=lambda s: s.getPath().getName()):
-        name = part.getPath().getName()
-        if not (part.isDirectory() and name.startswith(prefix)):
-            continue
-        for f in fs.listStatus(part.getPath()):
-            if not f.getPath().getName().endswith(".parquet"):
-                continue
-            cols = set(spark.read.parquet(str(f.getPath())).schema.names)
-            if any(c not in cols for c in promos.values()):
-                deficient.append(name)
-                break
-    layout = read_layout(spark, path)
-
-    def _mark_clean() -> None:
-        # backfill complete (or verified unnecessary): promoted existence
-        # fast paths are safe again — see write_logs_promoted
-        if layout.get("promotions_deficient"):
-            _write_layout_marker(
-                spark, path, {**layout, "promotions_deficient": False}
-            )
-
-    if not deficient:
-        _mark_clean()
-        return []
-    parts = []
-    for name in deficient:
-        day = name.split("=", 1)[1]
-        parts.append(
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{path}/{name}")
-            .withColumn(PARTITION_COLUMN, F.lit(day).cast("date"))
-        )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p, allowMissingColumns=True)
-    out = merged
-    for key, column in promos.items():
-        src = field_string(key)
-        out = out.withColumn(
-            column,
-            F.coalesce(F.col(column), src) if column in merged.columns else src,
-        )
-    (
-        _layout_sorted(out, read_layout(spark, path), lead_partition=True)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(path)
-    )
-    _mark_clean()
-    return deficient
 
 
 # --- numeric zone-map sidecar for dynamic map fields ------------------------
@@ -1444,10 +876,12 @@ def refresh_rollup(
     of truth (instead of merging per-batch deltas) makes the maintenance
     IDEMPOTENT: a replayed micro-batch or a manual backfill converges to
     the same rollup, and non-distributive aggregates (distinct counts) stay
-    exact without merge state."""
+    exact without merge state. The table reads through :func:`read_logs`,
+    so rows a rewrite replaced or deleted (their files stay on disk until
+    ``vacuum``) are not counted."""
     from .transform import field_string
 
-    tbl = spark.read.parquet(path)
+    tbl = read_logs(spark, path)
     if days is not None:
         tbl = tbl.filter(F.col(PARTITION_COLUMN).isin([str(d) for d in days]))
     roll = tbl.groupBy(PARTITION_COLUMN, "namespace").agg(

@@ -96,6 +96,60 @@ def test_cli_maintenance_commands_round_trip(spark, tmp_path, capsys):
     assert read_logs(spark, path).filter("namespace = 'ns-1'").count() == 0
 
 
+def test_cli_delete_on_plain_table_and_retention_dry_run(
+    spark, tmp_path, capsys
+):
+    """`delete` and its `cow-delete` alias rewrite a never-published
+    table copy-on-write and print the version they published; `compact`
+    and `cow-compact` share one handler; `retention --dry-run` lists the
+    expired days and writes nothing, not even a first manifest."""
+    import re
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from klogs_spark.__main__ import main
+    from klogs_spark.manifest import snapshot_versions
+    from klogs_spark.table import read_logs, write_logs
+    from klogs_spark.views import derive_logs_from_events
+    from tests.conftest import SF_SMOKE
+
+    logs = derive_logs_from_events(spark, SF_SMOKE).filter(
+        F.col("timestamp") < "2024-01-04"
+    )
+    path = str(tmp_path / "t")
+    write_logs(logs, path)
+    n7 = logs.filter("pod_name = 'pod-7'").count()
+    assert main(["delete", path, "pod_name = 'pod-7'"]) == 0
+    out = capsys.readouterr().out
+    assert re.search(rf"^v2: deleted {n7} row\(s\)", out, re.M), out
+    assert main(["cow-delete", path, "pod_name = 'pod-8'"]) == 0
+    assert capsys.readouterr().out.startswith("v3: deleted")
+    assert snapshot_versions(spark, path) == [1, 2, 3]
+    write_logs(logs.filter("pod_name = 'pod-9'"), path)  # 2nd file per day
+    for verb in ("compact", "cow-compact"):
+        assert main([verb, path, "date=2024-01-02"]) == 0
+        assert "compacted" in capsys.readouterr().out
+    assert read_logs(spark, path).filter(
+        "pod_name IN ('pod-7', 'pod-8')"
+    ).count() == 0
+
+    plain = str(tmp_path / "plain")
+    write_logs(logs, plain)
+    before = {
+        str(p): p.stat().st_mtime_ns
+        for p in Path(plain).rglob("*") if p.is_file()
+    }
+    assert main(["retention", plain, "--days", "0", "--dry-run"]) == 0
+    out = capsys.readouterr().out
+    assert "would delete 3 day(s)" in out and "2024-01-01" in out
+    assert before == {
+        str(p): p.stat().st_mtime_ns
+        for p in Path(plain).rglob("*") if p.is_file()
+    }
+    assert snapshot_versions(spark, plain) == []
+
+
 def test_version_flag_writes_stdout_not_stderr(capsys):
     """`klogs_spark --version | ...` scripting needs stdout (the original
     parser.exit(message=...) wrote stderr)."""

@@ -535,12 +535,13 @@ def test_random_ffd_matches_python_reference(spark, spec):
     derandomize=True,
 )
 def test_random_delete_where_preserves_complement(spark, tmp_path_factory, spec):
-    """delete_where over random (full-day, namespace-on-day) predicates:
+    """cow_delete_where over random (full-day, namespace-on-day) predicates:
     survivors must equal the predicate's complement computed independently
     on the pre-delete snapshot."""
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import delete_where, read_logs, write_logs
+    from klogs_spark.manifest import cow_delete_where
+    from klogs_spark.table import read_logs, write_logs
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001").filter(
@@ -558,7 +559,7 @@ def test_random_delete_where_preserves_complement(spark, tmp_path_factory, spec)
         f"(date = DATE '{fd}') OR "
         f"(namespace = '{ns}' AND date = DATE '{nd}')"
     )
-    res = delete_where(spark, path, pred)
+    res = cow_delete_where(spark, path, pred)
     survivors = sorted(
         tuple(map(str, r))
         for r in read_logs(spark, path)

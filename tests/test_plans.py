@@ -417,15 +417,18 @@ def test_token_bloom_or_and_phrase_prune_partitions(spark, tmp_path):
 
 
 def test_retention_drops_token_bloom_sidecar_days(spark, tmp_path):
-    """apply_retention must delete the dropped day's _token_bloom sidecar
-    partition along with the data partition, and the search must still work
+    """apply_retention must delete the expired day's _token_bloom sidecar
+    partition along with the day's rows, and the search must still work
     over the surviving days."""
     import os
-    from datetime import date, timedelta
+    from datetime import timedelta
 
+    from pyspark.sql import functions as F
+
+    from klogs_spark.manifest import apply_retention
     from klogs_spark.table import (
-        TOKEN_BLOOM_DIR, apply_retention, fulltext_token_search, read_logs,
-        write_logs, write_token_bloom_index,
+        TOKEN_BLOOM_DIR, fulltext_token_search, read_logs, write_logs,
+        write_token_bloom_index,
     )
     from klogs_spark.views import derive_logs_from_events
 
@@ -440,9 +443,11 @@ def test_retention_drops_token_bloom_sidecar_days(spark, tmp_path):
     # retain everything except the oldest day
     oldest = days[0]
     today = oldest + timedelta(days=3)
-    dropped = apply_retention(path, retention_days=2, today=today, spark=spark)
-    assert f"date={oldest}" in dropped
-    assert not os.path.exists(f"{path}/date={oldest}")
+    res = apply_retention(spark, path, retention_days=2, today=today)
+    assert res["partitions_rewritten"] == [str(oldest)]
+    assert read_logs(spark, path).filter(
+        F.col("date") == oldest
+    ).count() == 0
     assert not os.path.exists(f"{path}/{TOKEN_BLOOM_DIR}/date={oldest}")
     # surviving days' sidecar intact and searchable
     assert os.path.exists(f"{path}/{TOKEN_BLOOM_DIR}/date={days[1]}")

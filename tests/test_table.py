@@ -8,8 +8,9 @@ from pathlib import Path
 
 import pytest
 
+from klogs_spark.manifest import apply_retention
 from klogs_spark.schema import CLUSTER_KEY
-from klogs_spark.table import apply_retention, read_logs, register_view, write_logs
+from klogs_spark.table import read_logs, register_view, write_logs
 
 
 @pytest.fixture()
@@ -76,11 +77,16 @@ def test_register_view_sql_roundtrip(spark, logs_df, tmp_path):
 def test_retention_drops_old_partitions(spark, logs_df, tmp_path):
     path = str(tmp_path / "logs")
     write_logs(logs_df, path)
-    dropped = apply_retention(path, retention_days=30, today=date(2026, 2, 2))
-    assert dropped == ["date=2026-01-01", "date=2026-01-02"]
-    assert read_logs(spark, path).count() == 3
+    res = apply_retention(spark, path, retention_days=30,
+                          today=date(2026, 2, 2))
+    assert res["partitions_rewritten"] == ["2026-01-01", "2026-01-02"]
+    assert res["rows_deleted"] == 6
+    back = read_logs(spark, path)
+    assert back.count() == 3
+    assert back.filter("date < DATE '2026-01-03'").count() == 0
     # idempotent
-    assert apply_retention(path, 30, date(2026, 2, 2)) == []
+    again = apply_retention(spark, path, 30, date(2026, 2, 2))
+    assert again["rows_deleted"] == 0 and again["version"] == res["version"]
 
 
 def test_zorder_null_rows_survive_both_rank_paths(spark):
@@ -333,11 +339,42 @@ def test_empty_table_directory(spark, logs_df, tmp_path):
 
     path = str(tmp_path / "logs")
     write_logs(logs_df, path)
-    assert apply_retention(path, 1, date(2026, 3, 1)) == [
-        "date=2026-01-01", "date=2026-01-02", "date=2026-01-03"
+    res = apply_retention(spark, path, 1, date(2026, 3, 1))
+    assert res["partitions_rewritten"] == [
+        "2026-01-01", "2026-01-02", "2026-01-03"
     ]
     assert read_logs(spark, path).count() == 0
     assert logs_query(spark, path).df.count() == 0
+
+
+def test_emptied_table_reads_zero_rows(spark, logs_df, tmp_path):
+    """A marker table whose every row was deleted copy-on-write reads as
+    zero rows with its declared columns through every reader; a table
+    without a marker has no declared schema and keeps raising."""
+    from pyspark.sql import functions as F
+
+    from klogs_spark.manifest import cow_delete_where, read_current_state
+    from klogs_spark.table import logs_query
+
+    path = str(tmp_path / "logs")
+    write_logs(logs_df, path)
+    want = read_logs(spark, path).columns
+    cow_delete_where(spark, path, "true")
+    for df in (
+        read_logs(spark, path),
+        logs_query(spark, path).df,
+        read_current_state(spark, path),
+    ):
+        assert df.count() == 0
+        assert set(want) <= set(df.columns)
+
+    bare = str(tmp_path / "bare")
+    logs_df.withColumn("date", F.to_date("timestamp")).write.partitionBy(
+        "date"
+    ).parquet(bare)
+    cow_delete_where(spark, bare, "true")
+    with pytest.raises(FileNotFoundError, match="no data files"):
+        read_current_state(spark, bare)
 
 
 _FS_LIFETIME_SCRIPT = r"""

@@ -8,8 +8,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from klogs_spark.manifest import cow_compact_partition, vacuum
 from klogs_spark.schema import CLUSTER_KEY
-from klogs_spark.table import compact_partition, write_logs, write_logs_promoted
+from klogs_spark.table import read_logs, write_logs, write_logs_promoted
 
 
 @pytest.fixture()
@@ -55,13 +56,16 @@ def test_compact_partition_merges_files_preserving_rows(spark, logs_df, tmp_path
         write_logs(logs_df.filter(F.minute("timestamp") % 5 == i), path)
     part = "date=2026-01-01"
     before_files = len(list((Path(path) / part).glob("*.parquet")))
-    before_rows = spark.read.parquet(path).count()
+    before_rows = read_logs(spark, path).count()
     assert before_files >= 5
 
-    n = compact_partition(spark, path, part)
-    after_files = len(list((Path(path) / part).glob("*.parquet")))
-    assert n == after_files == 1
-    assert spark.read.parquet(path).count() == before_rows
+    res = cow_compact_partition(spark, path, part)
+    assert res["files_compacted"] == before_files
+    assert read_logs(spark, path).count() == before_rows
+    # the fragments stay on disk for pinned readers until vacuum
+    vacuum(spark, path, keep_versions=1)
+    assert len(list((Path(path) / part).glob("*.parquet"))) == 1
+    assert read_logs(spark, path).count() == before_rows
     # compaction preserves the cluster-key sort inside the file
     for f in (Path(path) / part).glob("*.parquet"):
         pdf = spark.read.parquet(str(f)).select(*CLUSTER_KEY).toPandas()
@@ -70,11 +74,12 @@ def test_compact_partition_merges_files_preserving_rows(spark, logs_df, tmp_path
 
 
 def test_compact_missing_partition_noop(spark, tmp_path):
-    assert compact_partition(spark, str(tmp_path), "date=1999-01-01") == 0
+    res = cow_compact_partition(spark, str(tmp_path), "date=1999-01-01")
+    assert res["files_compacted"] == 0
 
 
 def test_compact_table_sweeps_only_fragmented_partitions(spark, logs_df, tmp_path):
-    from klogs_spark.table import compact_table
+    from klogs_spark.manifest import maintain, snapshot_versions
 
     path = str(tmp_path / "logs")
     day_b = logs_df.withColumn(
@@ -83,10 +88,16 @@ def test_compact_table_sweeps_only_fragmented_partitions(spark, logs_df, tmp_pat
     for i in range(4):  # day A: 4 appends -> fragmented
         write_logs(logs_df.filter(F.minute("timestamp") % 4 == i), path)
     write_logs(day_b, path)  # day B: single append -> left alone
-    rows = spark.read.parquet(path).count()
-    result = compact_table(spark, path, max_files_per_partition=2)
-    assert set(result) == {"date=2026-01-01"} and result["date=2026-01-01"] == 1
-    assert spark.read.parquet(path).count() == rows
+    rows = read_logs(spark, path).count()
+    n_a = len(list((Path(path) / "date=2026-01-01").glob("*.parquet")))
+    # a table never published gets its v0 from maintain itself
+    assert snapshot_versions(spark, path) == []
+    rep = maintain(spark, path, max_files_per_partition=2)
+    assert rep["compacted"] == [
+        {"partition": "date=2026-01-01", "files_compacted": n_a}
+    ]
+    assert read_logs(spark, path).count() == rows
+    assert len(list((Path(path) / "date=2026-01-01").glob("*.parquet"))) == 1
 
 
 def test_compact_overwrites_only_target_partition(spark, logs_df, tmp_path):
@@ -99,12 +110,12 @@ def test_compact_overwrites_only_target_partition(spark, logs_df, tmp_path):
     write_logs(day_b, path)
     other = Path(path) / "date=2026-01-02"
     before = sorted((f.name, f.stat().st_size) for f in other.glob("*.parquet"))
-    rows_before = spark.read.parquet(path).count()
+    rows_before = read_logs(spark, path).count()
 
-    compact_partition(spark, path, "date=2026-01-01")
+    cow_compact_partition(spark, path, "date=2026-01-01")
     after = sorted((f.name, f.stat().st_size) for f in other.glob("*.parquet"))
     assert after == before
-    assert spark.read.parquet(path).count() == rows_before
+    assert read_logs(spark, path).count() == rows_before
 
 
 def test_delete_where_rewrites_only_affected_days(spark, tmp_path):
@@ -112,7 +123,7 @@ def test_delete_where_rewrites_only_affected_days(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import delete_where, read_logs, write_logs
+    from klogs_spark.manifest import cow_delete_where
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.01").filter(
@@ -126,15 +137,12 @@ def test_delete_where_rewrites_only_affected_days(spark, tmp_path):
         f: os.path.getmtime(os.path.join(untouched_day, f))
         for f in os.listdir(untouched_day)
     }
-    res = delete_where(
+    res = cow_delete_where(
         spark, path,
         "(date = DATE '2024-01-03') OR "
         "(namespace = 'ns-1' AND date = DATE '2024-01-05')",
     )
-    # fully-matched day dropped as a directory, not left stale
-    assert res["partitions_dropped"] == ["date=2024-01-03"]
-    assert not os.path.exists(f"{path}/date=2024-01-03")
-    assert res["partitions_rewritten"] == ["date=2024-01-05"]
+    assert res["partitions_rewritten"] == ["2024-01-03", "2024-01-05"]
     back = read_logs(spark, path)
     assert back.count() == total - res["rows_deleted"]
     assert back.filter("date = '2024-01-03'").count() == 0
@@ -146,10 +154,10 @@ def test_delete_where_rewrites_only_affected_days(spark, tmp_path):
     # untouched days were not rewritten
     for f, ts in untouched.items():
         assert os.path.getmtime(os.path.join(untouched_day, f)) == ts
-    # no-match predicate is a no-op
-    res2 = delete_where(spark, path, "namespace = 'no-such-ns'")
+    # no-match predicate is a no-op: nothing rewritten, no new version
+    res2 = cow_delete_where(spark, path, "namespace = 'no-such-ns'")
     assert res2 == {
-        "partitions_rewritten": [], "partitions_dropped": [],
+        "version": res["version"], "partitions_rewritten": [],
         "rows_deleted": 0,
     }
 
@@ -161,7 +169,7 @@ def test_delete_where_null_predicate_keeps_rows(spark, tmp_path):
     rewrite, and rows_deleted must count only TRUE matches."""
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import delete_where, read_logs, write_logs
+    from klogs_spark.manifest import cow_delete_where
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.01").filter(
@@ -177,7 +185,7 @@ def test_delete_where_null_predicate_keeps_rows(spark, tmp_path):
         "element_at(fields_string, 'flag') IS NULL"
     ).count()
     assert n_true > 0 and n_null > 0, "fixture must exercise TRUE and NULL"
-    res = delete_where(spark, path, pred)
+    res = cow_delete_where(spark, path, pred)
     assert res["rows_deleted"] == n_true
     back = read_logs(spark, path)
     assert back.count() == total - n_true  # NULL-pred rows survived
@@ -192,7 +200,7 @@ def test_reprocess_partition_transforms_one_day_only(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import read_logs, reprocess_partition, write_logs
+    from klogs_spark.manifest import reprocess_partition
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.01").filter(
@@ -208,16 +216,18 @@ def test_reprocess_partition_transforms_one_day_only(spark, tmp_path):
     }
 
     # backfill: redact the raw line for one day (a redaction sweep)
-    n = reprocess_partition(
+    res = reprocess_partition(
         spark, path, "date=2024-01-03",
         lambda df: df.withColumn(
             "log", F.regexp_replace("log", r"user=\d+", "user=[REDACTED]")
         ),
     )
+    assert res["partitions_rewritten"] == ["date=2024-01-03"]
     back = read_logs(spark, path)
     assert back.count() == total  # no rows lost or duplicated
     day = back.filter("date = '2024-01-03'")
-    assert day.count() == n > 0
+    n = day.count()
+    assert n > 0
     assert day.filter(F.col("log").rlike(r"user=\d+")).count() == 0
     assert day.filter(F.col("log").contains("user=[REDACTED]")).count() == n
     # other days untouched: bytes identical, content un-redacted
@@ -229,7 +239,7 @@ def test_reprocess_partition_transforms_one_day_only(spark, tmp_path):
     # missing partition is a no-op
     assert reprocess_partition(
         spark, path, "date=2099-01-01", lambda df: df
-    ) == 0
+    ) == {"version": res["version"], "partitions_rewritten": []}
 
 
 def test_snapshot_reads_are_append_consistent_and_pin_files(spark, tmp_path):
@@ -241,7 +251,6 @@ def test_snapshot_reads_are_append_consistent_and_pin_files(spark, tmp_path):
         read_snapshot,
         snapshot_versions,
     )
-    from klogs_spark.table import compact_partition, write_logs
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001")
@@ -267,27 +276,37 @@ def test_snapshot_reads_are_append_consistent_and_pin_files(spark, tmp_path):
     assert latest.count() == logs.count()
     assert "date" in latest.columns
 
-    # stated limit: a rewrite (compaction) invalidates snapshots that pin
-    # the rewritten files — loudly, never silently wrong
+    # a rewrite (compaction) keeps v1 readable; a vacuum that drops v1
+    # reclaims its files, and a pinned read then fails loudly, never
+    # silently wrong
     day = sorted(
         r.date for r in latest.select("date").distinct().collect()
     )[0]
-    compact_partition(spark, path, f"date={day}")
-    with pytest.raises(FileNotFoundError, match="rewritten"):
+    cow_compact_partition(spark, path, f"date={day}")
+    assert read_snapshot(spark, path, v1).count() == first.count()
+    vacuum(spark, path, keep_versions=1)
+    with pytest.raises(FileNotFoundError, match="not found"):
         read_snapshot(spark, path, v1).count()
-    # re-publishing after the rewrite restores a consistent latest
+    # re-publishing after the rewrite keeps a consistent latest
     v3 = publish_snapshot(spark, path)
     assert read_snapshot(spark, path, v3).count() == logs.count()
 
 
-def test_retention_dry_run_reports_without_deleting(spark, tmp_path):
-    import os
+def _tree_state(path):
+    """Every file under ``path`` with its mtime — a dry run must leave
+    this unchanged."""
+    return {
+        str(p): p.stat().st_mtime_ns
+        for p in Path(path).rglob("*") if p.is_file()
+    }
 
+
+def test_retention_dry_run_reports_without_deleting(spark, tmp_path):
     from datetime import date
 
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import apply_retention, read_logs, write_logs
+    from klogs_spark.manifest import apply_retention, maintain
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001").filter(
@@ -296,17 +315,27 @@ def test_retention_dry_run_reports_without_deleting(spark, tmp_path):
     path = str(tmp_path / "t")
     write_logs(logs, path)
     total = read_logs(spark, path).count()
+    before = _tree_state(path)
     would = apply_retention(
-        path, 2, today=date(2024, 1, 5), spark=spark, dry_run=True
+        spark, path, 2, today=date(2024, 1, 5), dry_run=True
     )
-    assert would == ["date=2024-01-01", "date=2024-01-02"]
-    # nothing actually deleted
-    assert all(os.path.exists(f"{path}/{p}") for p in would)
+    assert would["would_rewrite"] == ["2024-01-01", "2024-01-02"]
+    # a table never published plans from its listing: no v0, no write
+    plan = maintain(
+        spark, path, max_files_per_partition=0, retention_days=10**4,
+        dry_run=True,
+    )
+    assert plan["would_compact"] and plan["retention"]["would_rewrite"] == []
+    assert not (Path(path) / "_manifest").exists()
+    assert _tree_state(path) == before
     assert read_logs(spark, path).count() == total
-    # the real run drops exactly the dry-run's report
-    dropped = apply_retention(path, 2, today=date(2024, 1, 5), spark=spark)
-    assert dropped == would
-    assert not any(os.path.exists(f"{path}/{p}") for p in would)
+    # the real run rewrites exactly the dry-run's days
+    res = apply_retention(spark, path, 2, today=date(2024, 1, 5))
+    assert res["partitions_rewritten"] == would["would_rewrite"]
+    assert res["cutoff"] == "2024-01-03"
+    back = read_logs(spark, path)
+    assert back.filter("date < DATE '2024-01-03'").count() == 0
+    assert back.count() == total - res["rows_deleted"]
 
 
 def test_optimize_zorder_converts_layout_in_place(spark, tmp_path):
@@ -320,12 +349,8 @@ def test_optimize_zorder_converts_layout_in_place(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import (
-        optimize_zorder,
-        read_layout,
-        read_logs,
-        write_logs,
-    )
+    from klogs_spark.manifest import optimize_zorder
+    from klogs_spark.table import read_layout
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001").filter(
@@ -340,14 +365,15 @@ def test_optimize_zorder_converts_layout_in_place(spark, tmp_path):
     mtimes = {f: os.path.getmtime(os.path.join(other, f))
               for f in os.listdir(other)}
     done = optimize_zorder(spark, path, days=["2024-01-03"])
-    assert done == ["date=2024-01-03"]
+    assert done["partitions_rewritten"] == ["date=2024-01-03"]
     assert read_layout(spark, path)["layout"] == "zorder"
     for f, t in mtimes.items():  # restricted rewrite left other days alone
         assert os.path.getmtime(os.path.join(other, f)) == t
 
     done_all = optimize_zorder(spark, path)
-    assert len(done_all) >= 3
+    assert len(done_all["partitions_rewritten"]) >= 3
     assert read_logs(spark, path).count() == total
+    vacuum(spark, path, keep_versions=1)  # only the z-ordered files remain
     # physical order check on one rewritten day: each stored file's row
     # order must be non-decreasing in the Morton value, recomputed in
     # pure Python with add_zorder's exact rank semantics (rank over the
@@ -386,7 +412,7 @@ def test_optimize_zorder_converts_layout_in_place(spark, tmp_path):
 def test_merge_upsert_rewrites_only_touched_days_and_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import merge_upsert, read_logs, write_logs
+    from klogs_spark.manifest import cow_merge_upsert
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001")
@@ -415,7 +441,7 @@ def test_merge_upsert_rewrites_only_touched_days_and_is_idempotent(spark, tmp_pa
     )
     n_upd_rows = upd.filter("log LIKE '% [v2]'").count()
     n_ins_rows = upd.count() - n_upd_rows
-    res = merge_upsert(spark, path, upd, key_cols=["timestamp"])
+    res = cow_merge_upsert(spark, path, upd, key_cols=["timestamp"])
     assert res["rows_updated"] == n_upd_rows
     assert res["rows_inserted"] == n_ins_rows
     back = read_logs(spark, path)
@@ -424,7 +450,7 @@ def test_merge_upsert_rewrites_only_touched_days_and_is_idempotent(spark, tmp_pa
     for f, ts in mtimes.items():  # untouched day never rewritten
         assert os.path.getmtime(os.path.join(untouched, f)) == ts
     # idempotent: applying the same merge again changes nothing
-    res2 = merge_upsert(spark, path, upd, key_cols=["timestamp"])
+    res2 = cow_merge_upsert(spark, path, upd, key_cols=["timestamp"])
     assert res2["rows_inserted"] == 0
     assert read_logs(spark, path).count() == total + n_ins_rows
     assert read_logs(spark, path).filter(
@@ -440,12 +466,8 @@ def test_promotion_default_and_materialize_contract(spark, tmp_path):
     serves exactly the map semantics."""
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import (
-        logs_query,
-        materialize_promotions,
-        write_logs,
-        write_logs_promoted,
-    )
+    from klogs_spark.manifest import materialize_promotions, read_snapshot
+    from klogs_spark.table import logs_query
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.001")
@@ -469,21 +491,22 @@ def test_promotion_default_and_materialize_contract(spark, tmp_path):
     )
     # backfill the plain history, then append plainly again: write_logs
     # must auto-materialize (DEFAULT on insert), so no day is deficient
-    rewritten = materialize_promotions(spark, path)
+    rewritten = materialize_promotions(spark, path)["partitions_rewritten"]
     assert rewritten, "plain-history days should need the backfill"
     write_logs(later, path)  # plain append AFTER promotion
-    assert materialize_promotions(spark, path) == []  # invariant holds
+    # invariant holds
+    assert materialize_promotions(spark, path)["partitions_rewritten"] == []
     got = logs_query(spark, path).where_field_eq("level", "error").df.count()
     assert got == expected
     # existence also serves from the physical column (NULL iff absent)
     n_exists = logs_query(spark, path).where_exists("level").df.count()
     assert n_exists == (
-        spark.read.option("mergeSchema", "true").parquet(path)
+        read_snapshot(spark, path)
         .filter("element_at(fields_string, 'level') IS NOT NULL").count()
     )
     # and the physical column equals the map everywhere
     bad = (
-        spark.read.option("mergeSchema", "true").parquet(path)
+        read_snapshot(spark, path)
         .filter(
             F.coalesce(F.col("content_level"), F.lit("~"))
             != F.coalesce(
@@ -641,6 +664,40 @@ def test_rollup_refresh_is_idempotent_and_incremental(spark, tmp_path):
         assert os.path.getmtime(os.path.join(untouched_day, f)) == ts
 
 
+def test_rollup_refresh_counts_live_rows_after_rewrites(spark, tmp_path):
+    """Rewrites keep the replaced files on disk until vacuum; a rollup
+    refreshed after a compaction and a delete counts the live rows only,
+    not the replaced files' copies or the deleted rows."""
+    from klogs_spark.manifest import cow_delete_where
+    from klogs_spark.table import refresh_rollup
+
+    path, roll = str(tmp_path / "t"), str(tmp_path / "r")
+    _two_file_days(spark, path)
+
+    def rollup_rows():
+        return {
+            str(r.date): r.n for r in spark.read.parquet(roll)
+            .groupBy("date").agg(F.sum("n_rows").alias("n")).collect()
+        }
+
+    def live_rows():
+        return {
+            str(r.date): r["count"]
+            for r in read_logs(spark, path).groupBy("date").count().collect()
+        }
+
+    refresh_rollup(spark, path, roll)
+    assert rollup_rows() == live_rows()
+    assert cow_compact_partition(spark, path, "date=2024-01-02")[
+        "files_compacted"
+    ] == 2
+    assert cow_delete_where(spark, path, F.col("pod_name") == "pod-7")[
+        "rows_deleted"
+    ] > 0
+    refresh_rollup(spark, path, roll)
+    assert rollup_rows() == live_rows()
+
+
 def test_read_logs_at_canonical_columns_and_version_pin(spark, tmp_path):
     """read_logs_at = time-travel read in read_logs's canonical column
     order; a v1 pin returns the pre-append corpus after later appends."""
@@ -672,12 +729,7 @@ def test_maintenance_jobs_preserve_zorder_layout(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from klogs_spark.ext.zorder import add_zorder
-    from klogs_spark.table import (
-        compact_partition,
-        read_layout,
-        read_logs,
-        write_logs_zordered,
-    )
+    from klogs_spark.table import read_layout, write_logs_zordered
     from klogs_spark.views import derive_logs_from_events
 
     logs = derive_logs_from_events(spark, "/root/testdata/sf0.01").filter(
@@ -685,10 +737,15 @@ def test_maintenance_jobs_preserve_zorder_layout(spark, tmp_path):
     )
     path = str(tmp_path / "zlogs")
     write_logs_zordered(logs, path, mode="overwrite")
+    # a second file on the compacted day
+    write_logs_zordered(
+        logs.filter(F.to_date("timestamp") == "2024-01-02").limit(10), path
+    )
     assert read_layout(spark, path)["layout"] == "zorder"
 
     day = "date=2024-01-02"
-    compact_partition(spark, path, day, target_file_bytes=10**9)
+    assert cow_compact_partition(spark, path, day)["files_compacted"] > 1
+    vacuum(spark, path, keep_versions=1)
     # marker survived the rewrite and the compacted day is still z-sorted:
     # physical row order within the file must be non-decreasing in the
     # day's z-value (cluster-key order would interleave z wildly)
@@ -703,7 +760,93 @@ def test_maintenance_jobs_preserve_zorder_layout(spark, tmp_path):
     ordered = [r._z for r in z.orderBy("_seq").select("_z").collect()]
     assert ordered == sorted(ordered), "compaction lost the z-order layout"
     # data intact
-    assert read_logs(spark, path).count() == logs.count()
+    assert read_logs(spark, path).count() == logs.count() + 10
+
+
+def test_cow_delete_then_vacuum_erases_deleted_rows_from_disk(
+    spark, tmp_path
+):
+    """GDPR contract: a copy-on-write delete hides the rows at once but
+    keeps their bytes in the replaced files; vacuum(keep_versions=1)
+    right after it leaves no parquet file under the table root that
+    holds a deleted row."""
+    import pyarrow.parquet as pq
+
+    from klogs_spark.manifest import cow_delete_where
+    from klogs_spark.views import derive_logs_from_events
+    from tests.conftest import SF_SMOKE
+
+    path = str(tmp_path / "t")
+    write_logs(
+        derive_logs_from_events(spark, SF_SMOKE).filter(
+            F.col("timestamp") < "2024-01-04"
+        ),
+        path,
+    )
+
+    def files_holding_pod7():
+        return [
+            f for f in Path(path).rglob("*.parquet")
+            if "pod-7" in pq.read_table(f, columns=["pod_name"])
+            .column("pod_name").to_pylist()
+        ]
+
+    assert files_holding_pod7()
+    res = cow_delete_where(spark, path, F.col("pod_name") == "pod-7")
+    assert res["rows_deleted"] > 0
+    assert read_logs(spark, path).filter("pod_name = 'pod-7'").count() == 0
+    assert files_holding_pod7(), "replaced files stay until vacuum"
+    vacuum(spark, path, keep_versions=1)
+    assert files_holding_pod7() == []
+
+
+def test_cow_delete_writes_nothing_for_fully_matched_days(
+    spark, tmp_path, monkeypatch
+):
+    """A day whose every row matches just leaves the file list: its rows
+    are read once, for the count, and no survivor write runs for it,
+    while a partly matched day is rewritten."""
+    from klogs_spark import manifest
+
+    path = str(tmp_path / "t")
+    _two_file_days(spark, path)
+    total = read_logs(spark, path).count()
+    appended = []
+    real_append = manifest._append_in_layout
+    monkeypatch.setattr(
+        manifest, "_append_in_layout",
+        lambda spark, df, path: appended.append(df) or real_append(
+            spark, df, path
+        ),
+    )
+
+    def day_files(day):
+        return set(Path(path, f"date={day}").glob("*.parquet"))
+
+    before = {d: day_files(d) for d in ("2024-01-01", "2024-01-02")}
+    # a data-column predicate, so no partition pruning can skip the day
+    whole = manifest.cow_delete_where(
+        spark, path, F.to_date("timestamp") == "2024-01-01"
+    )
+    assert whole["partitions_rewritten"] == ["2024-01-01"]
+    assert appended == []
+    mixed = manifest.cow_delete_where(
+        spark, path,
+        (F.col("date") == "2024-01-03") | (
+            (F.col("date") == "2024-01-02") & (F.col("pod_name") == "pod-7")
+        ),
+    )
+    assert mixed["partitions_rewritten"] == ["2024-01-02", "2024-01-03"]
+    assert len(appended) == 1
+    assert day_files("2024-01-01") == before["2024-01-01"]
+    assert day_files("2024-01-02") > before["2024-01-02"]
+    back = read_logs(spark, path)
+    assert back.filter("date <> DATE '2024-01-02'").count() == 0
+    assert back.filter("pod_name = 'pod-7'").count() == 0
+    assert back.count() == (
+        total - whole["rows_deleted"] - mixed["rows_deleted"]
+    ) > 0
+    assert manifest.fsck(spark, path)["ok"]
 
 
 def test_cow_delete_retains_files_pins_survive_and_vacuum_reclaims(
@@ -740,7 +883,7 @@ def test_cow_delete_retains_files_pins_survive_and_vacuum_reclaims(
     res = cow_delete_where(spark, path, F.col("pod_name") == "pod-7")
     assert res["rows_deleted"] == n_pod7
 
-    # old files are RETAINED (unlike table.delete_where) — the pinned v1
+    # old files are RETAINED — the pinned v1
     # read survives the rewrite and still sees the deleted rows
     assert files_before <= {
         str(p.relative_to(path)) for p in Path(path).rglob("*.parquet")
@@ -1097,12 +1240,7 @@ def test_merge_upsert_multi_match_and_mixed_schema_day(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from klogs_spark.table import (
-        merge_upsert,
-        read_logs,
-        write_logs,
-        write_logs_promoted,
-    )
+    from klogs_spark.manifest import cow_merge_upsert, read_snapshot
 
     schema = (
         "timestamp timestamp, cluster string, namespace string, app string, "
@@ -1124,7 +1262,9 @@ def test_merge_upsert_multi_match_and_mixed_schema_day(spark, tmp_path):
     path = str(tmp_path / "t")
     # two existing rows share the SAME key (timestamp)
     write_logs(rows(2, "old"), path)
-    res = merge_upsert(spark, path, rows(1, "new"), key_cols=["timestamp"])
+    res = cow_merge_upsert(
+        spark, path, rows(1, "new"), key_cols=["timestamp"]
+    )
     assert res["rows_updated"] == 1
     assert res["rows_inserted"] == 0  # was -1 before the fix
     back = read_logs(spark, path)
@@ -1142,9 +1282,9 @@ def test_merge_upsert_multi_match_and_mixed_schema_day(spark, tmp_path):
     upd = rows(1, "merged").withColumn(
         "timestamp", F.expr("timestamp + INTERVAL 2 HOURS")
     )
-    res2 = merge_upsert(spark, path2, upd, key_cols=["timestamp"])
+    res2 = cow_merge_upsert(spark, path2, upd, key_cols=["timestamp"])
     assert res2["rows_updated"] == 0 and res2["rows_inserted"] == 1
-    back2 = spark.read.option("mergeSchema", "true").parquet(path2)
+    back2 = read_snapshot(spark, path2)
     assert "level_p" in back2.columns
     assert back2.count() == 3
     # promoted value survived the rewrite for the promoted row
@@ -1159,13 +1299,8 @@ def test_where_exists_falls_back_on_deficient_promoted_table(spark, tmp_path):
     fast path resumes only after materialize_promotions."""
     from datetime import datetime
 
-    from klogs_spark.table import (
-        logs_query,
-        materialize_promotions,
-        read_layout,
-        write_logs,
-        write_logs_promoted,
-    )
+    from klogs_spark.manifest import materialize_promotions
+    from klogs_spark.table import logs_query, read_layout
 
     schema = (
         "timestamp timestamp, cluster string, namespace string, app string, "
@@ -1194,7 +1329,8 @@ def test_where_exists_falls_back_on_deficient_promoted_table(spark, tmp_path):
     assert q.where_exists("level").df.count() == 2  # was 1 before the fix
 
     # backfill restores the physical fast path
-    assert materialize_promotions(spark, path) == ["date=2026-01-01"]
+    res = materialize_promotions(spark, path)
+    assert res["partitions_rewritten"] == ["date=2026-01-01"]
     assert read_layout(spark, path).get("promotions_deficient") is False
     q2 = logs_query(spark, path)
     assert q2.promoted_exists_ok
@@ -2608,63 +2744,137 @@ def test_shallow_clone_guards_and_source_vacuum_caveat(spark, tmp_path):
         read_snapshot(spark, dst).collect()
 
 
-def test_inplace_maintenance_refuses_shallow_clones(spark, tmp_path):
-    """Review-found: the in-place tier saw only clone-local files, so
-    table.delete_where on a clone silently half-applied (rows served
-    through the head's absolute references survived a 'successful'
-    delete). Every in-place verb now refuses while the head manifest
-    references files outside the table root; COW verbs still work."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+def _parquet_checksums(root) -> dict:
+    import hashlib
 
+    return {
+        str(p): hashlib.sha256(p.read_bytes()).hexdigest()
+        for p in Path(root).rglob("*.parquet")
+    }
+
+
+def _check_every_verb(spark, path, src_root, gone):
+    """Run every rewrite verb once on ``path`` (data on 2024-01-01..03,
+    each day in two files, rows matching ``gone`` deleted merge-on-read)
+    and check after each one: the row count moves exactly by the verb's
+    report, the parquet bytes that were under ``src_root`` before the
+    first verb are unchanged, no ``gone`` row comes back, and fsck is
+    clean."""
+    from datetime import date
+
+    import klogs_spark.manifest as M
+    from klogs_spark.table import _write_layout_marker, read_layout
+
+    today = date(2024, 1, 4)
+    day2 = (
+        read_logs(spark, path)
+        .filter("date = DATE '2024-01-02' AND namespace <> 'ns-1'")
+        .filter(~F.expr(gone))
+        .drop("date").withColumn("log", F.lit("merged"))
+    )
+    upd = spark.createDataFrame(day2.limit(5).collect(), day2.schema)
+
+    def materialize():
+        _write_layout_marker(spark, path, {
+            **read_layout(spark, path),
+            "promotions": {"level": "level_p"},
+            "promotions_deficient": True,
+        })
+        return M.materialize_promotions(spark, path)
+
+    verbs = [
+        ("compact", lambda: M.cow_compact_partition(
+            spark, path, "date=2024-01-01")),
+        ("delete", lambda: M.cow_delete_where(
+            spark, path, F.col("pod_name") == "pod-7")),
+        ("merge", lambda: M.cow_merge_upsert(
+            spark, path, upd, ["timestamp", "pod_name"])),
+        ("retention", lambda: M.apply_retention(
+            spark, path, 2, today=today)),
+        ("policy", lambda: M.apply_retention_policy(
+            spark, path, {"ns-1": 1}, default_days=3650, today=today)),
+        ("reprocess", lambda: M.reprocess_partition(
+            spark, path, "date=2024-01-03",
+            lambda df: df.withColumn("log", F.upper("log")))),
+        ("zorder", lambda: M.optimize_zorder(spark, path)),
+        ("materialize", materialize),
+    ]
+    src_before = _parquet_checksums(src_root)
+    n = read_logs(spark, path).count()
+    results = {}
+    for verb, run in verbs:
+        res = results[verb] = run()
+        assert res["version"] == M.snapshot_versions(spark, path)[-1]
+        n += res.get("rows_inserted", 0) - res.get("rows_deleted", 0)
+        back = read_logs(spark, path)
+        assert back.count() == n, verb
+        assert back.filter(gone).count() == 0, verb
+        src_now = _parquet_checksums(src_root)
+        assert {f: src_now.get(f) for f in src_before} == src_before, verb
+        assert M.fsck(spark, path)["ok"], verb
+    assert results["compact"]["files_compacted"] == 2
+    assert results["merge"]["rows_updated"] == 5
+    assert results["reprocess"]["partitions_rewritten"] == ["date=2024-01-03"]
+    assert results["zorder"]["partitions_rewritten"]
+    assert results["materialize"]["partitions_rewritten"]
+    back = M.read_snapshot(spark, path)
+    assert back.filter("log = 'merged'").count() == 5
+    assert back.filter("date < DATE '2024-01-02'").count() == 0
+    assert back.filter("namespace = 'ns-1' AND date < DATE '2024-01-03'"
+                       ).count() == 0
+    assert back.filter("pod_name = 'pod-7'").count() == 0
+    assert back.filter(
+        "date = DATE '2024-01-03' AND log <> upper(log)"
+    ).count() == 0
+    assert back.filter(
+        "level_p IS NULL AND element_at(fields_string, 'level') IS NOT NULL"
+    ).count() == 0
+
+
+def _two_file_days(spark, path):
+    """sf0.001 logs of 2024-01-01..03 written in two appends, so every
+    day holds two files."""
+    from klogs_spark.views import derive_logs_from_events
+    from tests.conftest import SF_SMOKE
+
+    logs = derive_logs_from_events(spark, SF_SMOKE).filter(
+        F.col("timestamp") < "2024-01-04"
+    )
+    first = F.col("namespace").isin("ns-0", "ns-2")
+    write_logs(logs.filter(first), path)
+    write_logs(logs.filter(~first), path)
+
+
+def test_every_verb_is_correct_on_a_shallow_clone(spark, tmp_path):
+    """Every rewrite verb is correct on a shallow clone of a table whose
+    head carries a deletion vector: the clone's rows move exactly as the
+    verb reports, the source's bytes are never touched, rows the source
+    deleted merge-on-read stay deleted, and fsck stays clean."""
     from klogs_spark.manifest import (
-        cow_delete_where,
+        mor_delete_where,
         publish_snapshot,
+        read_snapshot,
         shallow_clone,
     )
-    from klogs_spark.table import (
-        apply_retention,
-        compact_partition,
-        compact_table,
-        delete_where,
-        merge_upsert,
-        write_logs,
-    )
-    from klogs_spark.views import derive_logs_from_events
 
-    logs = derive_logs_from_events(spark, "/root/testdata/sf0.001").filter(
-        F.col("timestamp") < "2024-01-03"
-    )
     src = str(tmp_path / "src")
-    write_logs(logs, src)
+    _two_file_days(spark, src)
     publish_snapshot(spark, src)
+    mor_delete_where(spark, src, F.col("pod_name") == "pod-1")
+    n_src = read_snapshot(spark, src).count()
     dst = str(tmp_path / "clone")
     shallow_clone(spark, src, dst)
-
-    with _pytest.raises(ValueError, match="shallow clone"):
-        delete_where(spark, dst, F.col("pod_name") == "pod-7")
-    with _pytest.raises(ValueError, match="shallow clone"):
-        compact_partition(spark, dst, "date=2024-01-01")
-    with _pytest.raises(ValueError, match="shallow clone"):
-        compact_table(spark, dst)
-    with _pytest.raises(ValueError, match="shallow clone"):
-        apply_retention(dst, retention_days=1, spark=spark)
-    with _pytest.raises(ValueError, match="shallow clone"):
-        merge_upsert(spark, dst, logs.limit(1), ["timestamp", "pod_name"])
-
-    # the COW tier handles clones — and once IT has rewritten every
-    # absolute reference away, the in-place tier is allowed again
-    cow_delete_where(spark, dst, F.lit(True))
-    from klogs_spark.manifest import head_has_absolute_refs
-
-    assert not head_has_absolute_refs(spark, dst)
+    _check_every_verb(spark, dst, src, "pod_name = 'pod-1'")
+    assert read_snapshot(spark, src).count() == n_src
 
 
 def test_read_empty_manifest_and_single_slash_file_uri(spark, tmp_path):
     """Review-found pair: a manifest whose rewrite deleted every row
-    lists no files — read_snapshot must raise an intelligible error, not
-    IndexError; and a single-slash Hadoop URI source (file:/x) must
-    survive shallow_clone's qualification (abspath would mangle it)."""
+    lists no files — read_snapshot reads zero rows when the layout marker
+    declares the schema, and raises an intelligible error (not
+    IndexError) when it would have to infer one; and a single-slash
+    Hadoop URI source (file:/x) must survive shallow_clone's
+    qualification (abspath would mangle it)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -2684,8 +2894,14 @@ def test_read_empty_manifest_and_single_slash_file_uri(spark, tmp_path):
     write_logs(logs, path)
     publish_snapshot(spark, path)
     res = cow_delete_where(spark, path, F.lit(True))  # delete ALL rows
+    assert read_snapshot(spark, path, res["version"]).count() == 0
+    bare = str(tmp_path / "bare")  # hand-written parquet: no marker
+    logs.withColumn("date", F.to_date("timestamp")).write.partitionBy(
+        "date"
+    ).parquet(bare)
+    res_b = cow_delete_where(spark, bare, F.lit(True))
     with _pytest.raises(FileNotFoundError, match="no data files"):
-        read_snapshot(spark, path, res["version"])
+        read_snapshot(spark, bare, res_b["version"])
 
     src2 = str(tmp_path / "s2")
     write_logs(logs, src2)
@@ -2924,11 +3140,10 @@ def test_manifest_layer_randomized_op_sequences_hold_invariants(
 
 
 def test_maintain_one_call_housekeeping_both_tiers(spark, tmp_path):
-    """maintain() composes the right tier: on a manifest table it heals,
-    COW-compacts fragmented days, retires old days via cow_delete_where
-    (pinned readers survive until vacuum), and vacuums; on a plain
-    directory it uses the in-place pair. Clones are served by the COW
-    tier for free."""
+    """maintain() heals, compacts fragmented days, retires old days via
+    cow_delete_where (pinned readers survive until vacuum), and vacuums —
+    on a manifest table, on a plain directory (published as v0 first),
+    and on a clone."""
     from pyspark.sql import functions as F
 
     from klogs_spark.manifest import (
@@ -2956,10 +3171,9 @@ def test_maintain_one_call_housekeeping_both_tiers(spark, tmp_path):
     n = read_snapshot(spark, path).count()
 
     dry = maintain(spark, path, max_files_per_partition=4, dry_run=True)
-    assert dry["tier"] == "cow" and "date=2024-01-01" in dry["would_compact"]
+    assert "date=2024-01-01" in dry["would_compact"]
 
     rep = maintain(spark, path, max_files_per_partition=4)
-    assert rep["tier"] == "cow"
     assert any(c["partition"] == "date=2024-01-01" for c in rep["compacted"])
     assert rep["vacuum"]["files_deleted"] > 0
     assert read_snapshot(spark, path).count() == n  # rows preserved
@@ -2974,9 +3188,18 @@ def test_maintain_one_call_housekeeping_both_tiers(spark, tmp_path):
     n2 = read_snapshot(spark, src2).count()
     dst = str(tmp_path / "c")
     shallow_clone(spark, src2, dst)
-    rep3 = maintain(spark, dst)
-    assert rep3["tier"] == "cow"
+    maintain(spark, dst)
     assert read_snapshot(spark, src2).count() == n2
+
+    # a plain directory: v0 is published, then the same COW steps run
+    plain = str(tmp_path / "plain")
+    for i in range(3):
+        write_logs(day1.filter(F.col("user_id") % 3 == i), plain)
+    assert snapshot_versions(spark, plain) == []
+    rep4 = maintain(spark, plain, max_files_per_partition=2)
+    assert rep4["compacted"][0]["partition"] == "date=2024-01-01"
+    assert snapshot_versions(spark, plain)[-1] >= 2
+    assert read_snapshot(spark, plain).count() == n2
 
     # review-found: a DRY RUN must not heal a crashed journal (the
     # approve-before-delete gate) — it reports it instead
@@ -3327,11 +3550,11 @@ def test_maintain_dry_run_tolerates_foreign_parent_dirs(spark, tmp_path):
         spark, path, files=list(head) + ["subdir/x.parquet", "bare.parquet"]
     )
     rep = M.maintain(
-        spark, path, max_files_per_partition=1, retention_days=10000,
+        spark, path, max_files_per_partition=1, retention_days=0,
         dry_run=True,
     )
     assert "subdir" not in rep["would_compact"]
-    assert all("=" in d for d in rep["would_retire"])
+    assert rep["retention"]["would_rewrite"] == ["2024-01-01"]
 
 
 def test_vacuum_crash_mid_manifest_drop_leaves_resolvable_chains(
@@ -3399,11 +3622,11 @@ def test_maintain_ignores_foreign_kv_parent_dirs(spark, tmp_path):
         files=list(head) + [f"region=eu/f{i}.parquet" for i in range(3)],
     )
     rep = M.maintain(
-        spark, path, max_files_per_partition=1, retention_days=10000,
+        spark, path, max_files_per_partition=1, retention_days=0,
         dry_run=True,
     )
     assert all(d.startswith("date=") for d in rep["would_compact"])
-    assert all(d.startswith("date=") for d in rep["would_retire"])
+    assert rep["retention"]["would_rewrite"] == ["2024-01-01"]
 
 
 # ---------------------------------------------------------------------------
@@ -3480,16 +3703,17 @@ def test_mor_delete_null_predicate_rows_survive_and_deletes_accumulate(
     assert read_logs_at(spark, path, r2["version"]).count() == n1 - n0
 
 
-def test_inplace_tier_refuses_live_deletion_vector(
-    spark, logs_df, tmp_path
-):
-    from klogs_spark.manifest import mor_delete_where
-    from klogs_spark.table import delete_where
+def test_every_verb_keeps_merge_on_read_deletes(spark, tmp_path):
+    """Every rewrite verb is correct on a table governed by a deletion
+    vector: no verb resurrects a row deleted merge-on-read, the files
+    the verbs replace keep their bytes, and fsck stays clean."""
+    from klogs_spark.manifest import mor_delete_where, publish_snapshot
 
-    path, _ = _dv_table(spark, logs_df, tmp_path)
-    mor_delete_where(spark, path, "pod_name = 'pod-1'")
-    with pytest.raises(ValueError, match="deletion vector"):
-        delete_where(spark, path, F.col("pod_name") == "pod-0")
+    path = str(tmp_path / "logs")
+    _two_file_days(spark, path)
+    publish_snapshot(spark, path)
+    mor_delete_where(spark, path, F.col("pod_name") == "pod-1")
+    _check_every_verb(spark, path, path, "pod_name = 'pod-1'")
 
 
 def test_mor_cdc_pure_deletes_and_restore_reverses(
@@ -4495,20 +4719,13 @@ def test_incremental_rollup_lifecycle(spark, logs_df, tmp_path):
 
 def test_maintain_advances_rollup_when_asked(spark, logs_df, tmp_path):
     """maintain(rollup_path=...) leaves both the table and its
-    incremental rollup current in one call; plain directories refuse
-    (no change feed) instead of writing an incompatible layout."""
-    from klogs_spark.manifest import (
-        maintain,
-        mor_delete_where,
-        publish_snapshot,
-    )
+    incremental rollup current in one call — a plain directory too: its
+    v0 is published first, so the rollup has a change feed."""
+    from klogs_spark.manifest import maintain, mor_delete_where
     from klogs_spark.table import read_rollup
 
     path, rdir = str(tmp_path / "logs"), str(tmp_path / "roll")
     write_logs(logs_df, path)
-    with pytest.raises(ValueError, match="rollup_path"):
-        maintain(spark, path, rollup_path=rdir)  # plain dir: refuse
-    publish_snapshot(spark, path)
     rep = maintain(spark, path, rollup_path=rdir)
     assert rep["rollup"]["mode"] == "full"
     n = read_rollup(spark, rdir).agg(F.sum("n_rows")).first()[0]
@@ -4521,25 +4738,31 @@ def test_maintain_advances_rollup_when_asked(spark, logs_df, tmp_path):
     assert n2 == logs_df.count() - res["rows_deleted"]
 
 
-def test_maintain_plain_dir_rollup_refusal_precedes_side_effects(
+def test_maintain_plain_dir_rollup_dry_run_writes_nothing(
     spark, logs_df, tmp_path
 ):
-    """The plain-dir rollup_path refusal fires BEFORE compaction or
-    retention run (review r18: it used to arrive after retention had
-    already destructively dropped rows), and the dry run surfaces the
-    same incompatibility instead of returning a clean plan."""
+    """On a plain directory, maintain's dry run with a rollup plans the
+    retention and the rollup advance without writing anything (no v0,
+    no rollup state, no file touched); the real run then retires the
+    rows and advances the rollup to match."""
     from klogs_spark.manifest import maintain
+    from klogs_spark.table import read_rollup
 
     path, rdir = str(tmp_path / "logs"), str(tmp_path / "roll")
     write_logs(logs_df, path)
-    n, mtimes = logs_df.count(), _data_file_mtimes(path)
-    with pytest.raises(ValueError, match="rollup_path"):
-        maintain(spark, path, rollup_path=rdir, retention_days=0)
-    # nothing mutated: every row survives, no file touched
-    assert spark.read.parquet(path).count() == n
-    assert _data_file_mtimes(path) == mtimes
-    with pytest.raises(ValueError, match="rollup_path"):
-        maintain(spark, path, rollup_path=rdir, dry_run=True)
+    before = _tree_state(path)
+    dry = maintain(spark, path, rollup_path=rdir, retention_days=0,
+                   dry_run=True)
+    assert dry["retention"]["would_rewrite"] == ["2026-01-01"]
+    assert dry["rollup"]["would_advance"] and dry["rollup"]["head_now"] is None
+    assert _tree_state(path) == before
+    assert not Path(rdir).exists()
+    rep = maintain(spark, path, rollup_path=rdir, retention_days=0)
+    assert rep["retention"]["rows_deleted"] == logs_df.count()
+    assert read_logs(spark, path).count() == 0
+    assert (
+        read_rollup(spark, rdir).agg(F.sum("n_rows")).first()[0] or 0
+    ) == 0
 
 
 def test_maintain_dry_run_all_dead_vector_predicts_no_coalesce(
