@@ -141,6 +141,19 @@ def _entry_path(path: str, f: str) -> str:
     return f if _is_abs_entry(f) else f"{path}/{f}"
 
 
+def _read_footer(spark: SparkSession, path: str, f: str):
+    """The parquet footer of manifest entry ``f`` (schema and row-group
+    row counts), read on the driver: one metadata read, no Spark job and
+    no data scan."""
+    jvm = spark._jvm
+    _, hpath_cls, _ = _hadoop_fs(spark, path)
+    return jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(), hpath_cls(_entry_path(path, f)),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .NO_FILTER,
+    )
+
+
 def _list_dir_names(fs, dirpath) -> set | None:
     """One ``listStatus``: the child names under ``dirpath``, or None
     when the directory itself is gone. The seam the batched existence
@@ -1342,9 +1355,9 @@ def cow_delete_where(
 
     Scale: one aggregate counts each day's matches and rows, reading only
     the predicate's columns; the survivor write reads only the affected
-    days that keep a row (a day whose every row matched, such as a
-    retention cutoff, just leaves the file list); and the manifest math
-    is pure file-list set algebra on the driver, O(#files)."""
+    days that keep a row (a day whose every row matched just leaves the
+    file list); and the manifest math is pure file-list set algebra on
+    the driver, O(#files)."""
     from .table import LOG_COLUMNS
 
     hit = _predicate(predicate)
@@ -1463,11 +1476,16 @@ def cow_merge_upsert(
     exceptAll). The update rows' promoted columns are derived from their
     own maps, like every rewrite's. The key should be unique within
     ``updates``; a key matching several existing rows replaces them all
-    and counts once in ``rows_updated``.
+    and counts once in ``rows_updated``. ``rows_updated`` counts the
+    update rows whose key matches an existing row (duplicate update keys
+    count once each, a NULL key never matches) and ``rows_inserted`` the
+    rest.
 
-    Scale: cost is the touched days' data plus O(#files) driver manifest
-    algebra — the standard COW MERGE contract; untouched days never
-    rewrite and their files are never opened."""
+    Scale: two Spark actions — the touched days, then the write, which
+    carries both counts as observed metrics. Cost is the touched days'
+    data plus O(#files) driver manifest algebra — the standard COW MERGE
+    contract; untouched days never rewrite and their files are never
+    opened."""
     from .table import LOG_COLUMNS
 
     dated = updates.withColumn(
@@ -1487,31 +1505,39 @@ def cow_merge_upsert(
     )
     existing = df.filter(F.col(PARTITION_COLUMN).isin(days))
     keys = dated.select(*key_cols)
-    # matched UPDATE rows counted from the updates side, so a key that
-    # matches several existing rows cannot drive rows_inserted negative
-    n_upd = keys.join(
-        existing.select(*key_cols), key_cols, "left_semi"
-    ).count()
-    # the updates-side row count rides the merge write as an observed
-    # metric — a standalone dated.count() would be an extra job
-    # re-deriving the updates lineage after the write already streamed it
-    obs_updates = _retry_safe_observation(spark)
+    # both counts ride the merge write as observed metrics: each update
+    # row is flagged by a join against the DISTINCT existing keys (one
+    # output row per update row, so a key that matches several existing
+    # rows counts once and rows_inserted cannot go negative; a NULL key
+    # never matches), and the flagged rows are counted as they stream
+    # into the write — no separate count job
+    obs = _retry_safe_observation(spark)
+    flagged = dated.join(
+        existing.select(*key_cols).distinct().withColumn(
+            "__hit", F.lit(1)
+        ),
+        key_cols,
+        "left",
+    ).observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.count("__hit").alias("hit"),
+    )
     merged = existing.join(keys, key_cols, "left_anti").unionByName(
-        dated.observe(obs_updates, F.count(F.lit(1)).alias("n")),
-        allowMissingColumns=True,
+        flagged.drop("__hit"), allowMissingColumns=True
     )
     version = _rewrite_days(
         spark, path, "cow_merge_upsert", base_version, live,
         {f"{PARTITION_COLUMN}={d}" for d in days}, merged,
     )
-    n_updates = obs_updates.get["n"]
+    counts = obs.get
     return {
         "version": version,
         "partitions_rewritten": sorted(
             f"{PARTITION_COLUMN}={d}" for d in days
         ),
-        "rows_updated": int(n_upd),
-        "rows_inserted": int(n_updates - n_upd),
+        "rows_updated": int(counts["hit"]),
+        "rows_inserted": int(counts["n"] - counts["hit"]),
     }
 
 
@@ -1653,16 +1679,9 @@ def materialize_promotions(spark: SparkSession, path: str) -> dict:
     live = _manifest_files(spark, path, base_version)
     layout = read_layout(spark, path)
     columns = list((layout.get("promotions") or {}).values())
-    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
-    _, hpath_cls, _ = _hadoop_fs(spark, path)
 
     def predates(f: str) -> bool:
-        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            conf, hpath_cls(f if _is_abs_entry(f) else f"{path}/{f}"),
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
-            .SKIP_ROW_GROUPS,
-        )
-        schema = footer.getFileMetaData().getSchema()
+        schema = _read_footer(spark, path, f).getFileMetaData().getSchema()
         return not all(schema.containsField(c) for c in columns)
 
     deficient = sorted(
@@ -1689,12 +1708,16 @@ def apply_retention(
 ) -> dict:
     """TTL job: delete every row of the days older than the retention
     window — ``TTL toDateTime(timestamp) + INTERVAL 30 DAY``
-    (schema.sql:19) as a :func:`cow_delete_where` on the partition
-    column. Every row of an expired day matches, so its files just leave
-    the file list: the delete's aggregate reads no data column, and no
-    survivor is read or written. The expired days' token-Bloom sidecar
-    partitions are dropped with them. As with every delete, the bytes
-    stay on disk until :func:`vacuum`.
+    (schema.sql:19), where ClickHouse drops an expired day as whole parts
+    with no row scan. The expired days come from the head file list; one
+    aggregate counts their live rows (deletion vector applied) through a
+    ``date < cutoff`` filter that Spark turns into a scan partition
+    filter, so only the expired days' files are read, no data column is
+    read, and a new cutoff compiles no new code. The days then just leave
+    the file list: no survivor is read or written. A day whose every row
+    was deleted merge-on-read has no live row and is left alone. The
+    expired days' token-Bloom sidecar partitions are dropped with them.
+    As with every delete, the bytes stay on disk until :func:`vacuum`.
 
     ``dry_run=True`` reports the days that WOULD be rewritten, planned
     from the current file list (or the data-file listing of a table
@@ -1702,33 +1725,57 @@ def apply_retention(
     delete step every retention runbook wants. The plan reads no data,
     so on a table with a deletion vector it is a superset: an expired
     day whose rows were all deleted merge-on-read is listed, and the
-    real run leaves it alone. Returns the delete's report plus
-    ``cutoff`` (``would_rewrite`` instead of the delete's keys on a dry
-    run)."""
+    real run leaves it alone. Returns ``cutoff`` plus
+    :func:`cow_delete_where`'s report keys (``would_rewrite`` instead on
+    a dry run)."""
     from .table import TOKEN_BLOOM_DIR
 
     cutoff = str((today or date.today()) - timedelta(days=retention_days))
+    prefix = f"{PARTITION_COLUMN}="
+
+    def expired(files: list) -> list:
+        return sorted({
+            d[len(prefix):]
+            for d in map(_entry_day_dir, files)
+            if d.startswith(prefix) and d[len(prefix):] < cutoff
+        })
+
     if dry_run:
-        prefix = f"{PARTITION_COLUMN}="
         return {
             "cutoff": cutoff,
             "dry_run": True,
-            "would_rewrite": sorted({
-                d[len(prefix):]
-                for d in map(_entry_day_dir, _plan_files(spark, path))
-                if d.startswith(prefix) and d[len(prefix):] < cutoff
-            }),
+            "would_rewrite": expired(_plan_files(spark, path)),
         }
-    res = cow_delete_where(spark, path, F.col(PARTITION_COLUMN) < cutoff)
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
-    for d in res["partitions_rewritten"]:
-        # the expired day's token-Bloom partition has no rows left to index
-        sidecar = hpath_cls(
-            f"{path}/{TOKEN_BLOOM_DIR}/{PARTITION_COLUMN}={d}"
+    base_version = _cow_base_version(spark, path)
+    live = _manifest_files(spark, path, base_version)
+    stats = []
+    if expired(live):
+        stats = (
+            read_snapshot(spark, path, base_version)
+            .filter(F.col(PARTITION_COLUMN) < F.lit(cutoff).cast("date"))
+            .groupBy(PARTITION_COLUMN)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )  # bounded by expired days
+    affected = sorted(str(r[PARTITION_COLUMN]) for r in stats)
+    version = base_version
+    if affected:
+        version = _rewrite_days(
+            spark, path, "apply_retention", base_version, live,
+            {f"{prefix}{d}" for d in affected}, None,
         )
-        if fs.exists(sidecar):
-            fs.delete(sidecar, True)
-    return {"cutoff": cutoff, **res}
+        fs, hpath_cls, _ = _hadoop_fs(spark, path)
+        for d in affected:
+            # the expired day's token-Bloom partition has no rows left
+            sidecar = hpath_cls(f"{path}/{TOKEN_BLOOM_DIR}/{prefix}{d}")
+            if fs.exists(sidecar):
+                fs.delete(sidecar, True)
+    return {
+        "cutoff": cutoff,
+        "version": version,
+        "partitions_rewritten": affected,
+        "rows_deleted": sum(r.n for r in stats),
+    }
 
 
 def apply_retention_policy(
@@ -2772,8 +2819,10 @@ def dv_compact(
     file crossing the threshold is a pure no-op — use
     :func:`dv_coalesce` to shorten a long chain without folding.
 
-    Scale: the per-file ratio probe reads only vector-affected files
-    (zero data columns — footer-driven row counts); the survivor write
+    Scale: the per-file ratio probe reads the parquet footers of the
+    vector-affected files on the driver (row counts from row-group
+    metadata, no Spark job, no data scan); the only Spark reads are the
+    vector's per-file position counts and the survivor write, which
     touches only folded days; everything else is manifest set algebra.
     Same journal/two-phase discipline as :func:`mor_delete_where`."""
     import uuid as _uuid
@@ -2837,19 +2886,15 @@ def dv_compact(
         }
     if min_deleted_ratio > 0:
         rows_per_key = {
-            r["__dv_key"]: r["n"]
-            for r in _read_data_files(
-                spark, path,
-                sorted(key2entry[k] for k in affected_keys),
-                with_pos=True,
+            k: sum(
+                b.getRowCount()
+                for b in _read_footer(spark, path, key2entry[k]).getBlocks()
             )
-            .groupBy("__dv_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+            for k in affected_keys
         }
         crossing = [
             k for k in affected_keys
-            if rows_per_key.get(k)
+            if rows_per_key[k]
             and per_key[k] >= min_deleted_ratio * rows_per_key[k]
         ]
     else:

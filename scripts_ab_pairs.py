@@ -10,8 +10,9 @@ alternates from one pair to the next, so host drift lands on both sides
 alike. Each run's result prints as it finishes. At the end, per metric:
 each side's median and quartiles, how many pairs this tree won (the
 direction comes from BENCHMARK.json), and whether the medians differ by
-more than the base's interquartile range. Exits non-zero if any run failed
-or reported an incorrect operation.
+more than the base's interquartile range. Each run's peak RSS (the Spark
+JVM plus its Python workers) is compared too, as ``peak_rss_mb``. Exits
+non-zero if any run failed or reported an incorrect operation.
 """
 
 from __future__ import annotations
@@ -71,6 +72,12 @@ def run_once(tree: str, args, seed: int) -> dict | None:
         print(f"  run failed (exit {proc.returncode}):\n"
               + "\n".join(proc.stderr.strip().splitlines()[-15:]))
         return None
+    # the report line "# peak_rss_mb <MB> MB = ...": memory is compared
+    # next to the end-to-end metrics, so work moved into memory shows
+    for line in lines:
+        if line.startswith("# peak_rss_mb "):
+            result["metrics"]["peak_rss_mb"] = {
+                "value": float(line.split()[2]), "unit": "MB"}
     return result
 
 
@@ -80,7 +87,7 @@ def summarize(result: dict | None) -> str:
     if not result["correct"]:
         return f"{result['failed']} of {result['attempted']} operations failed"
     metrics = result["metrics"]
-    if len(metrics) > 3:  # traced: the per-layer set
+    if "setup_s" not in metrics:  # traced: the per-layer set
         return f"correct, {len(metrics)} metrics"
     return " ".join(f"{k}={v['value']:.4g}" for k, v in sorted(metrics.items()))
 

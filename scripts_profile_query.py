@@ -8,6 +8,13 @@ Times each named registry query in its own clean state (release_tracked +
 clearCache between trials), best-of-N, using the SAME action the bench uses
 (df.count()) by default, or the noop sink with --noop. With --plan DIR the
 query's .explain(\"formatted\") output is written to DIR/<query>.txt.
+
+Each trial also prints how many classes whole-stage codegen compiled and
+the milliseconds Janino spent on them, from Spark's ``CodegenMetrics``
+compilation-time histogram — a count that host load cannot move, so a
+trial that recompiles (an evicted or first-seen plan shape) shows without
+a JFR capture. The milliseconds are exact while the histogram's reservoir
+still holds every sample of the session, and print as ``?`` after that.
 """
 
 from __future__ import annotations
@@ -17,6 +24,20 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def codegen_totals(spark) -> tuple[int, int | None]:
+    """(classes compiled, total Janino ms or None) so far in this JVM."""
+    jvm = spark._jvm
+    hist = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    count = int(hist.getCount())
+    snap = hist.getSnapshot()
+    if snap.size() != count:  # the reservoir dropped samples
+        return count, None
+    return count, int(jvm.java.util.Arrays.stream(snap.getValues()).sum())
 
 
 def main() -> None:
@@ -77,14 +98,21 @@ def main() -> None:
         best = float("inf")
         n = -1
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        for _ in range(trials):
+        for trial in range(trials):
+            classes0, ms0 = codegen_totals(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             if use_noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 n = df.count()
-            best = min(best, time.perf_counter() - t0)
+            secs = time.perf_counter() - t0
+            best = min(best, secs)
+            classes1, ms1 = codegen_totals(spark)
+            janino = "?" if ms0 is None or ms1 is None else ms1 - ms0
+            print(f"  {name} trial {trial}: {secs:.3f}s, "
+                  f"{classes1 - classes0} classes compiled, "
+                  f"{janino} ms in Janino")
         reset()
         spark.sparkContext.setJobDescription(None)
         print(f"{name}: {best:.3f}s ({n} rows)")

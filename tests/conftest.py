@@ -13,6 +13,31 @@ TABLES = [
 ]
 
 
+def job_count(spark, action):
+    """Spark jobs ``action()`` starts, read from the status tracker under
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def compiled_classes(spark) -> int:
+    """Classes the JVM's code generator has compiled with Janino so far
+    (Spark's ``CodegenMetrics`` compilation-time histogram count)."""
+    return int(
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -11,6 +11,7 @@ import pytest
 from klogs_spark.manifest import apply_retention
 from klogs_spark.schema import CLUSTER_KEY
 from klogs_spark.table import read_logs, register_view, write_logs
+from tests.conftest import job_count
 
 
 @pytest.fixture()
@@ -201,22 +202,6 @@ def test_zorder_write_roundtrips_and_narrows_trailing_dim(spark, tmp_path):
 # --- known read schema: no inference job on marker tables ----------------
 
 
-def _job_count(spark, action):
-    """Spark jobs ``action()`` starts, read from the status tracker under
-    a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("published", [False, True])
 def test_marker_table_opens_without_a_spark_job(
     spark, logs_df, tmp_path, published
@@ -228,14 +213,14 @@ def test_marker_table_opens_without_a_spark_job(
     write_logs(logs_df, path)
     if published:
         manifest.publish_snapshot(spark, path)
-    assert _job_count(spark, lambda: logs_query(spark, path)) == 0
-    assert _job_count(spark, lambda: read_logs(spark, path)) == 0
+    assert job_count(spark, lambda: logs_query(spark, path)) == 0
+    assert job_count(spark, lambda: read_logs(spark, path)) == 0
     if published:  # a plain table has no current state to read
-        assert _job_count(
+        assert job_count(
             spark, lambda: manifest.read_current_state(spark, path)
         ) == 0
     rows = []
-    assert _job_count(
+    assert job_count(
         spark,
         lambda: rows.extend(logs_query(spark, path).newest(100).collect()),
     ) == 1

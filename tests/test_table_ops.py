@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import date, datetime
 from pathlib import Path
 
 import pytest
@@ -5060,3 +5060,204 @@ def test_maintain_dry_run_previews_rollup_advance(
     assert plan4["rollup"]["from_version"] == plan4["rollup"]["head_now"]
     if plan4.get("would_dv_compact") or plan4.get("would_dv_coalesce"):
         assert plan4["rollup"]["would_advance"] is True
+
+
+# --- maintenance verbs: counts ride the write, probes read footers ------
+
+
+def test_merge_counts_match_the_semi_join_formula(spark, tmp_path):
+    """``rows_updated`` counts the update rows whose key matches a live
+    row, ``rows_inserted`` the rest — the left-semi formula computed here
+    over the pre-merge snapshot. Duplicate update keys count once each, a
+    NULL key never matches, a key matching two existing rows counts once,
+    and a row deleted merge-on-read does not match."""
+    from klogs_spark.manifest import (
+        cow_merge_upsert,
+        mor_delete_where,
+        publish_snapshot,
+        read_snapshot,
+    )
+
+    schema = (
+        "timestamp timestamp, cluster string, namespace string, app string, "
+        "pod_name string, container_name string, host string, "
+        "fields_string map<string,string>, fields_number map<string,double>, "
+        "log string"
+    )
+
+    def rows(keys, log):
+        return spark.createDataFrame(
+            [
+                (datetime(2026, 1, d, h, 0, 0), "c", "ns", "app", pod, "c",
+                 "h", {"level": "info"}, {"v": 1.0}, log)
+                for d, h, pod in keys
+            ],
+            schema,
+        )
+
+    path = str(tmp_path / "t")
+    write_logs(rows([
+        (1, 1, "a"), (1, 1, "a"),  # two existing rows share a key
+        (1, 2, "b"), (1, 3, "c"),
+        (2, 4, "d"), (2, 5, "e"), (2, 6, "g"),
+    ], "old"), path)
+    publish_snapshot(spark, path)
+    # day 2 is governed by a deletion vector; (2, 5, "e") is deleted
+    assert mor_delete_where(spark, path, "pod_name = 'e'")["rows_deleted"] == 1
+    updates = rows([
+        (1, 1, "a"),                # matches two existing rows
+        (1, 2, "b"), (1, 2, "b"),   # duplicate update key
+        (1, 3, None),               # NULL key part never matches
+        (2, 4, "d"),                # match on the vector-governed day
+        (2, 5, "e"),                # its match was deleted merge-on-read
+        (2, 7, "f"),                # new key
+    ], "new")
+    key_cols = ["timestamp", "pod_name"]
+    days = [F.to_date(F.lit(f"2026-01-0{d}")) for d in (1, 2)]
+    existing = read_snapshot(spark, path).filter(F.col("date").isin(days))
+    n_upd = updates.select(*key_cols).join(
+        existing.select(*key_cols), key_cols, "left_semi"
+    ).count()
+    live_before = read_logs(spark, path).count()
+
+    res = cow_merge_upsert(spark, path, updates, key_cols)
+    assert (res["rows_updated"], res["rows_inserted"]) == (
+        n_upd, updates.count() - n_upd
+    ) == (4, 3)
+    # every update row lands; matched live rows are replaced
+    back = read_logs(spark, path)
+    assert back.count() == live_before - 4 + 7
+    assert back.filter("log = 'old'").count() == 2  # (1,3,c) and (2,6,g)
+
+
+def _sf_dv_table(spark, tmp_path):
+    """The sf0.001 logs (one file per day for 30 days), published, with a
+    deletion vector holding about one row in sixty — below maintain's 10%
+    fold threshold on every day."""
+    from klogs_spark.manifest import mor_delete_where, publish_snapshot
+    from klogs_spark.views import derive_logs_from_events
+    from tests.conftest import SF_SMOKE
+
+    path = str(tmp_path / "t")
+    write_logs(derive_logs_from_events(spark, SF_SMOKE), path)
+    publish_snapshot(spark, path)
+    res = mor_delete_where(
+        spark, path, F.xxhash64("timestamp", "pod_name") % 60 == 0
+    )
+    assert res["rows_deleted"] > 0
+    return path
+
+
+def test_maintenance_verbs_spark_job_counts(spark, tmp_path):
+    """Spark jobs per verb on the sf0.001 table: the merge's counts ride
+    its write (10 jobs before, with a separate semi-join count), and
+    dv_compact's ratio probe reads parquet footers on the driver, so a
+    below-threshold fold starts only the vector's per-file count (4 jobs
+    before) and maintain drops from 7 jobs to 5."""
+    from klogs_spark.manifest import cow_merge_upsert, dv_compact, maintain
+    from tests.conftest import job_count
+
+    path = _sf_dv_table(spark, tmp_path)
+    logs = read_logs(spark, path)
+    upd = (
+        logs.filter("date = DATE'2024-01-05'").orderBy("timestamp").limit(5)
+        .withColumn("log", F.lit("redacted"))
+    )
+    new = (
+        logs.filter("date = DATE'2024-01-06'").orderBy("timestamp").limit(3)
+        .withColumn("pod_name", F.lit("new-pod"))
+    )
+    upd.unionByName(new).drop("date").write.parquet(str(tmp_path / "upd"))
+    updates = spark.read.parquet(str(tmp_path / "upd"))
+    res = {}
+    assert job_count(spark, lambda: res.update(cow_merge_upsert(
+        spark, path, updates, ["timestamp", "pod_name"]
+    ))) == 8
+    assert (res["rows_updated"], res["rows_inserted"]) == (5, 3)
+
+    # the probe itself starts no job: a selective call costs what a dry
+    # run that skips the probe costs
+    probe = job_count(
+        spark, lambda: res.update(dv_compact(
+            spark, path, min_deleted_ratio=0.5
+        ))
+    )
+    assert res["partitions_rewritten"] == [] and res["positions_kept"] > 0
+    assert probe == job_count(
+        spark, lambda: dv_compact(spark, path, dry_run=True)
+    ) == 2
+
+    rep = {}
+    assert job_count(spark, lambda: rep.update(maintain(
+        spark, path, retention_days=(date.today() - date(2024, 1, 2)).days
+    ))) == 5
+    assert rep["dv_compacted"]["partitions_rewritten"] == []
+    assert rep["retention"]["partitions_rewritten"] == ["2024-01-01"]
+
+
+def test_retention_reads_only_expired_days_and_compiles_nothing_new(
+    spark, tmp_path
+):
+    """Retention on a vector-governed table deletes the live rows of the
+    expired days (what a delete of ``date < cutoff`` counted), leaves a
+    day whose rows were all deleted merge-on-read alone, reads only the
+    expired days' files, and a new cutoff compiles no new class."""
+    from klogs_spark.manifest import (
+        _manifest_files,
+        apply_retention,
+        mor_delete_where,
+        read_snapshot,
+        snapshot_versions,
+    )
+    from tests.conftest import compiled_classes
+
+    path = _sf_dv_table(spark, tmp_path)
+    mor_delete_where(spark, path, "date = DATE'2024-01-02'")
+    apply_retention(spark, path, 0, today=date(2024, 1, 2))  # warm-up
+
+    def live(cutoff):
+        return read_snapshot(spark, path).filter(
+            F.col("date") < F.lit(cutoff).cast("date")
+        ).count()
+
+    expected = live("2024-01-04")
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids() -> set:
+        """Ids of the SQL executions the status store still holds."""
+        listener_bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        recent = store.executionsList(max(0, n - 200), 200)
+        return {
+            int(recent.apply(i).executionId()) for i in range(recent.size())
+        }
+
+    before = execution_ids()
+    compiled = compiled_classes(spark)
+    res = apply_retention(spark, path, 0, today=date(2024, 1, 4))
+    assert compiled_classes(spark) == compiled
+    retention_execs = execution_ids() - before
+    assert res["rows_deleted"] == expected > 0
+    # 2024-01-02 has no live row: it is not affected and stays listed
+    assert res["partitions_rewritten"] == ["2024-01-03"]
+    head = _manifest_files(spark, path, snapshot_versions(spark, path)[-1])
+    assert any(f.startswith("date=2024-01-02/") for f in head)
+    assert not any(f.startswith("date=2024-01-03/") for f in head)
+    assert live("2024-01-04") == 0
+
+    files_read = 0
+    for eid in sorted(retention_execs):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if "PartitionFilters: [isnotnull(date" not in node.desc():
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                if m.name() == "number of files read":
+                    files_read += int(values.get(m.accumulatorId()).get())
+    # one file per day: only 2024-01-02 and 2024-01-03 were listed
+    assert files_read == 2
