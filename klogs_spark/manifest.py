@@ -1001,8 +1001,41 @@ def _read_small_json(fs, hpath_cls, path: str, rel: str):
     return json.loads(raw.decode())
 
 
+_TORN = object()
+
+
+def _journal_before(fs, hpath_cls, path: str):
+    """The rewrite journal's before-listing, as a set. None when no
+    journal exists (or it vanished while being read: the rewrite
+    finished or was recovered); ``_TORN`` when its payload does not
+    parse, that is the claimant died inside :func:`_claim_marker`
+    between the create-exclusive and the write. Survivor files are only
+    appended after :func:`_begin_rewrite` returns a fully written
+    journal, so a torn journal proves none exist. A journal that still
+    exists but cannot be read raises: taking it as absent or torn could
+    serve a live rewrite's survivors doubled or reclaim nothing of a
+    crashed one (ADVICE r19)."""
+    marker = hpath_cls(f"{path}/{REWRITE_MARKER}")
+    if not fs.exists(marker):
+        return None
+    try:
+        return set(
+            _read_small_json(fs, hpath_cls, path, REWRITE_MARKER)["before"]
+        )
+    except (ValueError, KeyError, TypeError):
+        return _TORN  # JSON and UTF-8 decode errors are ValueErrors
+    except Exception:
+        if fs.exists(marker):
+            raise
+        return None
+
+
 def recover_incomplete_rewrite(spark: SparkSession, path: str) -> int:
-    """Crash recovery for COW rewrites — the two-phase-commit cleanup.
+    """Crash recovery for every verb that holds the rewrite journal: the
+    COW rewrites, the merge-on-read verbs (:func:`mor_delete_where`,
+    :func:`mor_update_where`, :func:`dv_compact`, :func:`dv_coalesce`)
+    and a :func:`restore_snapshot` across a vector — the two-phase-commit
+    cleanup.
 
     A rewrite journals its intent BEFORE appending survivor files: the
     marker records the full on-disk file listing at start. If the job dies
@@ -1014,17 +1047,20 @@ def recover_incomplete_rewrite(spark: SparkSession, path: str) -> int:
     journaled before-listing, and (b) referenced by no manifest — files
     the crashed rewrite wrote but never published. A crash AFTER publish
     leaves its files manifested, so (b) protects them and recovery just
-    drops the stale marker. Returns the number of orphans reclaimed.
+    drops the stale marker. A deletion-vector sidecar claimed for a
+    version that was never published is dropped too. Returns the number
+    of orphans reclaimed.
 
     Single-maintenance-writer assumption (the Delta/Iceberg norm without
     a lock service): no concurrent plain appends while a rewrite runs —
     an append racing the crash window would be listed as an orphan."""
     fs, hpath_cls, root = _hadoop_fs(spark, path)
-    marker = hpath_cls(f"{path}/{REWRITE_MARKER}")
-    if not fs.exists(marker):
+    before = _journal_before(fs, hpath_cls, path)
+    if before is None:
         return 0
-    # a MOR delete that crashed between its sidecar write and the
-    # manifest publish leaves a dv_v{M}.json pointing PAST the head —
+    marker = hpath_cls(f"{path}/{REWRITE_MARKER}")
+    # a verb that crashed between its sidecar claim and the manifest
+    # publish leaves a dv_v{M}.json pointing PAST the head —
     # left in place it would govern the NEXT published version (someone
     # else's commit adopting a half-finished delete). Drop such sidecars
     # here; their orphan generations are swept by vacuum.
@@ -1035,20 +1071,12 @@ def recover_incomplete_rewrite(spark: SparkSession, path: str) -> int:
                 fs.delete(hpath_cls(f"{path}/{_dv_sidecar_rel(m)}"), False),
                 "recover-orphan-dv-sidecar", m,
             )
-    try:
-        before = set(
-            _read_small_json(fs, hpath_cls, path, REWRITE_MARKER)["before"]
-        )
-    except Exception:
-        # Torn marker: the claimant crashed INSIDE _claim_marker, between
-        # the create-exclusive and writing the JSON payload. The claim is
-        # the first step of a rewrite — survivor files are only ever
-        # appended after _begin_rewrite returns a fully written journal —
-        # so a torn marker proves no orphan data files exist. Drop the
-        # marker (un-wedging every future COW op) and reclaim nothing.
-        # If the claimant is in fact alive mid-write (a microsecond
-        # window), it loses its slot here and _finish_rewrite's ownership
-        # check makes it abort cleanly.
+    if before is _TORN:
+        # no orphan data files can exist: drop the marker (un-wedging
+        # every future COW op) and reclaim nothing. If the claimant is
+        # in fact alive mid-write (a microsecond window), it loses its
+        # slot here and _finish_rewrite's ownership check makes it abort
+        # cleanly.
         _must(fs.delete(marker, False), "rewrite-marker-delete", marker)
         return 0
     manifested = _all_manifested(spark, path)
@@ -1162,6 +1190,9 @@ def _begin_rewrite(
     return before, token
 
 
+_INHERIT_DV = object()  # the new version inherits the head's vector
+
+
 def _finish_rewrite(
     spark: SparkSession,
     path: str,
@@ -1169,12 +1200,24 @@ def _finish_rewrite(
     before: set,
     token: str,
     keep: set,
+    dv=_INHERIT_DV,
+    gen: str | None = None,
 ) -> int:
-    """Validate-then-publish for a COW rewrite (the optimistic-concurrency
-    commit): the rewrite's output manifest is ``keep`` (base files that
-    survive) plus every file appended since ``before``. Two checks gate
-    the publish, both raising :class:`ConcurrentRewriteError` after
-    cleaning up this rewrite's own unpublished files:
+    """Validate-then-publish for every verb that publishes a version
+    under the rewrite journal (the optimistic-concurrency commit): the
+    output manifest is ``keep`` (base files that survive) plus every
+    file appended since ``before``.
+
+    ``dv`` is the deletion-vector ref the new version publishes (a
+    chain of generations, or None to end the vector); ``gen`` is the
+    generation this rewrite wrote for it. The ``dv_v{base+1}.json``
+    sidecar is claimed create-exclusive, tagged with our token, BEFORE
+    the checks and the manifest publish: a crash in between leaves a
+    sidecar past the head, which recovery drops, so no head is ever
+    served the wrong vector. An existing sidecar at that version means
+    a competitor published it first. Without ``dv`` no sidecar is
+    written and the new version inherits the head's vector. Two checks
+    then gate the publish:
 
     * ownership — the journal marker must still exist and carry OUR
       token. A competing job's recovery replaces/removes it (and may
@@ -1185,27 +1228,48 @@ def _finish_rewrite(
       files we are about to drop; publishing over it would silently
       undo the winner (the classic lost update).
 
-    Cleanup deletes only files that are (a) new since our ``before``
-    listing and (b) referenced by no manifest — the winner's published
-    files are always manifested and therefore never touched."""
+    Every loss runs one abort before raising
+    :class:`ConcurrentRewriteError`: our sidecar goes only if it still
+    carries our token (a winner's sidecar at the same version must
+    survive), then ``gen``; and only while the journal still carries our
+    token are the files new since ``before`` that no manifest references
+    deleted and the journal released. A journal that is gone or foreign
+    means recovery reclaimed our appends, or a competitor holds the slot
+    and its in-flight survivors look exactly like ours."""
     fs, hpath_cls, root = _hadoop_fs(spark, path)
-    after = set(_list_data_files(fs, root, hpath_cls))
-    new_files = after - before
+    marker = hpath_cls(f"{path}/{REWRITE_MARKER}")
+    next_v = base_version + 1
+    new_files = set(_list_data_files(fs, root, hpath_cls)) - before
 
     def _abort(reason: str) -> None:
-        manifested = _all_manifested(spark, path)
-        for f in sorted(new_files - manifested):
-            p = hpath_cls(f"{path}/{f}")
-            if fs.exists(p):
-                _must(fs.delete(p, False), "race-abort-delete", f)
-        _release_journal_if_mine(fs, hpath_cls, path, token)
+        if dv is not _INHERIT_DV:
+            _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, token)
+        if gen:
+            _drop_gen_dir(fs, hpath_cls, path, gen, "race-abort-gen-delete")
+        if _journal_is_mine(fs, hpath_cls, path, token):
+            # the manifest walk is skipped when nothing was appended
+            orphans = (
+                new_files - _all_manifested(spark, path) if new_files
+                else set()
+            )
+            for f in sorted(orphans):
+                p = hpath_cls(f"{path}/{f}")
+                if fs.exists(p):
+                    _must(fs.delete(p, False), "race-abort-delete", f)
+            _must(fs.delete(marker, False), "journal-release", marker)
         raise ConcurrentRewriteError(
             f"cow rewrite lost the race under {path}: {reason}; its "
             "unpublished files were cleaned up — retry the operation "
             "against the new head"
         )
 
-    marker = hpath_cls(f"{path}/{REWRITE_MARKER}")
+    if dv is not _INHERIT_DV:
+        try:
+            _write_dv_sidecar_claimed(
+                fs, hpath_cls, path, next_v, dv, token
+            )
+        except ConcurrentRewriteError as e:
+            _abort(str(e))
     if not fs.exists(marker):
         _abort("journal marker vanished (competing recovery reclaimed it)")
     if not _journal_is_mine(fs, hpath_cls, path, token):
@@ -1286,6 +1350,9 @@ def _rewrite_days(
     live: list,
     day_dirs: set,
     rows: DataFrame | None,
+    dv=_INHERIT_DV,
+    gen: str | None = None,
+    journal: tuple | None = None,
 ) -> int:
     """The one copy-on-write rewrite behind every maintenance verb.
     ``rows`` is the complete new content of the ``day_dirs`` partitions
@@ -1297,13 +1364,20 @@ def _rewrite_days(
     ``day_dirs`` plus the new files (:func:`_finish_rewrite`, optimistic
     concurrency). ``rows`` None writes nothing: the days just leave the
     file list. The replaced files stay on disk for pinned readers until
-    :func:`vacuum`. Returns the published version."""
-    before, tok = _begin_rewrite(spark, path, op, base_version)
+    :func:`vacuum`. Returns the published version.
+
+    ``dv`` and ``gen`` pass to :func:`_finish_rewrite`: the deletion
+    vector the new version publishes and the generation written for it.
+    A verb that writes ``gen`` passes the ``(before, token)`` of the
+    journal it claimed first as ``journal``, so the generation is written
+    before any append (:func:`_write_dv_generation`)."""
+    before, tok = journal or _begin_rewrite(spark, path, op, base_version)
     if rows is not None:
         _append_in_layout(spark, _restore_promotions(spark, path, rows), path)
     replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
     return _finish_rewrite(
-        spark, path, base_version, before, tok, set(live) - replaced
+        spark, path, base_version, before, tok, set(live) - replaced,
+        dv=dv, gen=gen,
     )
 
 
@@ -2026,11 +2100,10 @@ def restore_snapshot(spark: SparkSession, path: str, version: int) -> int:
     Deletion vectors restore WITH the snapshot: when the target version
     was governed by a different vector than the head (e.g. the restore
     undoes a :func:`mor_delete_where`), the new head gets a sidecar
-    re-pointing at the target's generation (or an explicit null). The
-    sidecar is written BEFORE the publish under the rewrite journal —
-    the same two-phase discipline as the MOR delete itself, so a crash
-    can never leave a head serving the wrong vector (recovery drops the
-    past-head sidecar; a lost race cleans it up here)."""
+    re-pointing at the target's generation (or an explicit null),
+    committed under the rewrite journal through :func:`_finish_rewrite`
+    like every MOR verb, so a crash can never leave a head serving the
+    wrong vector."""
     recover_incomplete_rewrite(spark, path)
     versions = snapshot_versions(spark, path)
     if version not in versions:
@@ -2051,18 +2124,9 @@ def restore_snapshot(spark: SparkSession, path: str, version: int) -> int:
     if ref_target == ref_head:
         return publish_snapshot(spark, path, files)
     before, tok = _begin_rewrite(spark, path, "restore_snapshot", head)
-    next_v = head + 1
-    try:
-        _write_dv_sidecar_claimed(
-            fs, hpath_cls, path, next_v, ref_target, tok
-        )
-        return _finish_rewrite(
-            spark, path, head, before, tok, set(files)
-        )
-    except ConcurrentRewriteError:
-        _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-        _reclaim_unpublished_appends(spark, path, before, tok)
-        raise
+    return _finish_rewrite(
+        spark, path, head, before, tok, set(files), dv=ref_target
+    )
 
 
 CLONE_MARKER = f"{MANIFEST_DIR}/clone.json"
@@ -2281,48 +2345,19 @@ def _current_state_files(
         if _is_abs_entry(f) or "/" not in f or f in on_disk
     }
     unmanifested = on_disk - manifested
-    if unmanifested and fs.exists(hpath_cls(f"{path}/{REWRITE_MARKER}")):
-        # A COW/MOR rewrite is IN FLIGHT: its survivor appends are on
-        # disk but belong to no manifest yet, so counting them as
-        # committed unmanifested appends would serve their rows DOUBLED
-        # (next to the head files they replace) — the exact window
-        # publish_snapshot refuses (review r18). The journal records the
-        # full on-disk listing at rewrite start; anything newer is the
-        # rewrite's uncommitted output, excluded here. Under the
-        # single-maintenance-writer contract no plain append races a
-        # rewrite, so nothing legitimate is dropped. A torn marker
-        # (claimant died inside _claim_marker) proves no survivor files
-        # exist — treat it as no live rewrite.
-        try:
-            before = set(
-                _read_small_json(
-                    fs, hpath_cls, path, REWRITE_MARKER
-                )["before"]
-            )
+    if unmanifested:
+        # A COW/MOR rewrite IN FLIGHT has survivor appends on disk that
+        # belong to no manifest yet: counting them as committed
+        # unmanifested appends would serve their rows DOUBLED (next to
+        # the head files they replace) — the exact window
+        # publish_snapshot refuses (review r18). Anything newer than the
+        # journal's before-listing is the rewrite's uncommitted output,
+        # excluded here. Under the single-maintenance-writer contract no
+        # plain append races a rewrite, so nothing legitimate is dropped.
+        # No journal, or a torn one, means no live survivors.
+        before = _journal_before(fs, hpath_cls, path)
+        if isinstance(before, set):
             unmanifested &= before
-        except Exception:
-            # Swallowing is only safe when the marker is GONE (the
-            # rewrite finished/recovered between our exists() and the
-            # read) or torn (no survivor files can exist yet). If the
-            # marker is STILL present the rewrite may be live with
-            # survivors on disk, and falling through would serve the
-            # unfiltered set — the doubled-rows window this filter
-            # closes (ADVICE r19) — so re-check and raise instead.
-            if fs.exists(hpath_cls(f"{path}/{REWRITE_MARKER}")):
-                try:
-                    before = set(
-                        _read_small_json(
-                            fs, hpath_cls, path, REWRITE_MARKER
-                        )["before"]
-                    )
-                    unmanifested &= before
-                except (json.JSONDecodeError, KeyError, UnicodeDecodeError):
-                    pass  # torn marker: rewrite never wrote survivors
-                except Exception as exc:
-                    from .table import _is_missing_file_error
-
-                    if not _is_missing_file_error(exc):
-                        raise
     files = sorted(keep_head | unmanifested)
     dv_ref = _dv_ref_at(
         spark, path, head, sidecars=_dv_versions_from_names(names)
@@ -2376,12 +2411,16 @@ def _read_current_state(spark: SparkSession, path: str, schema) -> DataFrame:
 #
 # Layout:
 #   * `_dv/gen-<uuid>/` — a parquet dataset of (file string, pos long):
-#     the CUMULATIVE deleted positions in effect. Each MOR delete writes a
-#     NEW generation (old ∪ new positions); generations are immutable, so
-#     pinned readers of older snapshots keep resolving their own.
+#     the positions ONE verb deleted. Each MOR delete/update writes a NEW
+#     generation holding only its own positions; `dv_coalesce` and a
+#     selective `dv_compact` write one holding a whole chain's live
+#     positions. Generations are immutable, so pinned readers of older
+#     snapshots keep resolving their own.
 #   * `_manifest/dv_v{N}.json` — {"version": N, "dv": [<gen rel>, ...] |
 #     "<gen rel>" | null, "token": <journal token, rewrite-written only>}:
-#     the generation in effect FROM version N on (until a later sidecar).
+#     the CHAIN of generations in effect FROM version N on (until a later
+#     sidecar); the deleted set is the union of the chain's elements.
+#     Every verb that writes one commits through `_finish_rewrite`.
 #     Version resolution is "latest sidecar at-or-before the snapshot", so
 #     `publish_snapshot` stays untouched: COW rewrites and plain appends
 #     inherit the head's vector automatically, and TIME TRAVEL reads get
@@ -2430,8 +2469,7 @@ def _dv_keep_keys(spark: SparkSession, dv: DataFrame, keys) -> DataFrame:
 
 def _drop_gen_dir(fs, hpath_cls, path: str, gen: str, label: str) -> None:
     """Checked removal of a deletion-vector generation directory if it
-    exists — the shared cleanup of every MOR verb's abort/lost-race
-    path."""
+    exists."""
     gdir = hpath_cls(f"{path}/{gen}")
     if fs.exists(gdir):
         _must(fs.delete(gdir, True), label, gdir)
@@ -2526,8 +2564,7 @@ def _apply_dv(
 def _journal_is_mine(fs, hpath_cls, path: str, tok: str) -> bool:
     """Does the rewrite journal exist AND still carry our token? The one
     copy of the exists/read/compare dance every ownership decision uses
-    (release, abort, early-loser reclaim) — a torn or foreign marker
-    reads as not-ours."""
+    (release, abort) — a torn or foreign marker reads as not-ours."""
     if not fs.exists(hpath_cls(f"{path}/{REWRITE_MARKER}")):
         return False
     try:
@@ -2550,46 +2587,38 @@ def _release_journal_if_mine(fs, hpath_cls, path: str, tok: str) -> None:
         )
 
 
-def _reclaim_unpublished_appends(
-    spark: SparkSession, path: str, before: set, tok: str
-) -> None:
-    """Early-loser cleanup (a race detected BEFORE _finish_rewrite, e.g.
-    the sidecar claim failing): mirror _finish_rewrite._abort — delete
-    files appended since the journaled before-listing that no manifest
-    references, then release the journal if still ours. Idempotent with
-    _abort's own cleanup (files already gone / foreign marker are both
-    no-ops), so call sites need not know which layer detected the race.
-    Without this, the 'loser cleans up before raising' contract broke at
-    the early raise point: the stale journal survived, and a later
-    recovery pass would reclaim the CALLER's legitimate post-failure
-    appends against the stale before-listing (review-found)."""
-    fs, hpath_cls, root = _hadoop_fs(spark, path)
-    # ownership gate FIRST (review-found): when _finish_rewrite's _abort
-    # already ran, it cleaned up AND released the journal — a competitor
-    # may have claimed the freed slot and appended ITS survivor files,
-    # which would land in (after - before) and be deleted by an unguarded
-    # sweep, corrupting the competitor's about-to-publish snapshot. Only
-    # a journal still carrying OUR token proves the slot (and therefore
-    # every post-listing append) is ours.
-    if not _journal_is_mine(fs, hpath_cls, path, tok):
-        # either _abort already cleaned up and released, or a competitor
-        # holds the slot. In the latter case our own unpublished appends
-        # (if any) stay on disk untombstoned — reachable ONLY when a
-        # recovery ran against our LIVE journal, which the layer's
-        # single-maintenance-writer assumption excludes
-        # (recover_incomplete_rewrite's documented contract); file-level
-        # ownership would be needed to do better, and the same residual
-        # applies to _finish_rewrite's abort sweep.
-        return
-    after = set(_list_data_files(fs, root, hpath_cls))
-    new_files = after - before
-    if new_files:  # skip the manifest walk when nothing was appended
-        manifested = _all_manifested(spark, path)
-        for f in sorted(new_files - manifested):
-            p = hpath_cls(f"{path}/{f}")
-            if fs.exists(p):
-                _must(fs.delete(p, False), "early-abort-delete", f)
-    _release_journal_if_mine(fs, hpath_cls, path, tok)
+def _write_dv_generation(
+    spark: SparkSession, path: str, tok: str, positions: DataFrame,
+    count: bool = True,
+) -> tuple[str | None, int | None]:
+    """Write ``positions`` (``file``, ``pos``) as a new deletion-vector
+    generation under the rewrite journal ``tok``, before any data
+    append. Returns ``(gen, n)``: ``n`` is the row count observed on the
+    write (``count=False`` skips the observation: ``n`` None), and an
+    empty generation is removed again, ``(None, 0)`` — the at-least-once
+    REPLAY path of a delete that matches nothing. A failed write removes
+    the generation and releases the journal: nothing is appended yet, so
+    there is nothing only the journal's before-listing could identify.
+    Positions are tiny relative to data by contract; rebalance lets AQE
+    size the output files instead of one per task."""
+    import uuid
+
+    fs, hpath_cls, _ = _hadoop_fs(spark, path)
+    gen = f"{DV_DIR}/gen-{uuid.uuid4().hex}"
+    try:
+        obs = _retry_safe_observation(spark) if count else None
+        if obs is not None:
+            positions = positions.observe(obs, F.count(F.lit(1)).alias("n"))
+        positions.hint("rebalance").write.parquet(f"{path}/{gen}")
+        n = obs.get["n"] if obs is not None else None
+    except BaseException:
+        _drop_gen_dir(fs, hpath_cls, path, gen, "dv-gen-abort")
+        _release_journal_if_mine(fs, hpath_cls, path, tok)
+        raise
+    if n == 0:
+        _drop_gen_dir(fs, hpath_cls, path, gen, "dv-empty-gen-delete")
+        return None, 0
+    return gen, n
 
 
 def _write_dv_sidecar_claimed(
@@ -2693,8 +2722,8 @@ def mor_delete_where(
     journal is claimed for the whole operation (mutual exclusion with
     COW rewrites and other MOR deletes), the sidecar for version
     base+1 is written BEFORE the validate-then-publish, and a loser or
-    crash cleans up: on a lost race this function deletes its own
-    sidecar + generation before re-raising; after a crash the journal
+    crash cleans up: on a lost race :func:`_finish_rewrite` deletes its
+    own sidecar + generation before re-raising; after a crash the journal
     is live, so every maintenance entry point funnels through
     :func:`recover_incomplete_rewrite`, which drops sidecars pointing
     past the head (and their now-unreferenced generations are swept by
@@ -2704,86 +2733,40 @@ def mor_delete_where(
     snapshot produces the new positions; the write is O(deleted rows),
     the publish O(changed metadata). No survivor write, no shuffle of
     table data."""
-    import uuid as _uuid
-
     hit = _predicate(predicate)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
     old_refs = _dv_refs(_dv_ref_at(spark, path, base_version))
+    # positions of newly doomed rows — computed on the VECTOR-APPLIED
+    # base so already-deleted rows never re-count (the anti-join is
+    # skipped entirely on a table with no prior vector, the common
+    # first-delete case)
+    hits = _read_data_files(spark, path, live, with_pos=True).withColumn(
+        "__hit", hit
+    )
+    if old_refs:
+        hits = _apply_dv(hits, _read_dv(spark, path, old_refs), keep_keys=True)
+    positions = hits.filter(F.col("__hit")).select(
+        F.col("__dv_key").alias("file"), F.col("__dv_pos").alias("pos")
+    )
     before, tok = _begin_rewrite(
         spark, path, "mor_delete_where", base_version
     )
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
-
-    def _release_marker() -> None:
+    # ONE pass over the table writes ONLY the new positions, counted as
+    # they stream past. The sidecar then CHAINS the new generation onto
+    # the prior ref list, so each delete costs O(its own positions) —
+    # never a copy of the accumulated vector (that copy made N small
+    # GDPR batches quadratic). A no-match delete publishes nothing.
+    gen, n_deleted = _write_dv_generation(spark, path, tok, positions)
+    if gen is None:
+        fs, hpath_cls, _ = _hadoop_fs(spark, path)
         _release_journal_if_mine(fs, hpath_cls, path, tok)
-
-    try:
-        df = _read_data_files(spark, path, live, with_pos=True)
-        # positions of newly doomed rows — computed on the VECTOR-APPLIED
-        # base so already-deleted rows never re-count (the anti-join is
-        # skipped entirely on a table with no prior vector, the common
-        # first-delete case)
-        hits = df.withColumn("__hit", hit)
-        if old_refs:
-            hits = _apply_dv(
-                hits, _read_dv(spark, path, old_refs), keep_keys=True
-            )
-        hits = hits.filter(F.col("__hit")).select(
-            F.col("__dv_key").alias("file"),
-            F.col("__dv_pos").alias("pos"),
-        )
-        # ONE pass over the table: write ONLY the new positions into a
-        # fresh generation dir and count them from parquet metadata
-        # (footer row counts, no data scan). The sidecar then CHAINS the
-        # new generation onto the prior ref list, so each delete costs
-        # O(its own positions) — never a copy of the accumulated vector
-        # (that copy made N small GDPR batches quadratic). A no-match
-        # delete — the at-least-once REPLAY path — removes its empty
-        # output and publishes nothing.
-        gen = f"{DV_DIR}/gen-{_uuid.uuid4().hex}"
-        # positions are tiny relative to data by contract; rebalance
-        # lets AQE size the output files instead of one-per-task; the
-        # position count rides the write as an observed metric (r21) —
-        # the read-back count was an extra job per delete
-        obs = _retry_safe_observation(spark)
-        hits.observe(obs, F.count(F.lit(1)).alias("n")).hint(
-            "rebalance"
-        ).write.parquet(f"{path}/{gen}")
-        n_deleted = obs.get["n"]
-        if n_deleted == 0:
-            _drop_gen_dir(fs, hpath_cls, path, gen, "mor-noop-gen-delete")
-            _release_marker()
-            return {
-                "version": base_version,
-                "rows_deleted": 0,
-                "dv": old_refs,
-            }
-    except BaseException:
-        _release_marker()
-        raise
-    # two-phase publish: sidecar first (a crash before the manifest
-    # rename leaves a sidecar pointing PAST the head, which recovery
-    # drops), then the journal-validated manifest publish
-    next_v = base_version + 1
+        return {"version": base_version, "rows_deleted": 0, "dv": old_refs}
     new_chain = [gen, *old_refs]
-    try:
-        _write_dv_sidecar_claimed(
-            fs, hpath_cls, path, next_v, new_chain, tok
-        )
-        version = _finish_rewrite(
-            spark, path, base_version, before, tok, set(live)
-        )
-    except ConcurrentRewriteError:
-        # lost the race: OUR sidecar (token-checked — a competing
-        # winner's sidecar at this version must survive), the orphan
-        # generation, and the journal (when the race was detected before
-        # _finish_rewrite's own abort could release it) go before
-        # re-raising
-        _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-        _drop_gen_dir(fs, hpath_cls, path, gen, "mor-gen-cleanup")
-        _reclaim_unpublished_appends(spark, path, before, tok)
-        raise
+    version = _finish_rewrite(
+        spark, path, base_version, before, tok, set(live),
+        dv=new_chain, gen=gen,
+    )
     return {
         "version": version,
         "rows_deleted": n_deleted,
@@ -2825,8 +2808,6 @@ def dv_compact(
     vector's per-file position counts and the survivor write, which
     touches only folded days; everything else is manifest set algebra.
     Same journal/two-phase discipline as :func:`mor_delete_where`."""
-    import uuid as _uuid
-
     base_version = _cow_base_version(spark, path)
     ref = _dv_ref_at(spark, path, base_version)
     if not _dv_refs(ref):
@@ -2851,39 +2832,6 @@ def dv_compact(
     # dead positions: files a later COW rewrite replaced — their rows
     # exist in no listed file, so the positions fold away for free
     n_dead = sum(n for k, n in per_key.items() if k not in key2entry)
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
-    if not affected_keys:
-        if dry_run:
-            return {
-                "version": base_version,
-                "partitions_rewritten": [],
-                "positions_folded": n_dead,
-                "positions_kept": 0,
-                "dry_run": True,
-            }
-        # the vector only references files a later COW rewrite already
-        # replaced — nothing to materialize, just end its reign
-        before, tok = _begin_rewrite(
-            spark, path, "dv_compact", base_version
-        )
-        next_v = base_version + 1
-        try:
-            _write_dv_sidecar_claimed(
-                fs, hpath_cls, path, next_v, None, tok
-            )
-            version = _finish_rewrite(
-                spark, path, base_version, before, tok, set(live)
-            )
-        except ConcurrentRewriteError:
-            _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-            _reclaim_unpublished_appends(spark, path, before, tok)
-            raise
-        return {
-            "version": version,
-            "partitions_rewritten": [],
-            "positions_folded": n_dead,
-            "positions_kept": 0,
-        }
     if min_deleted_ratio > 0:
         rows_per_key = {
             k: sum(
@@ -2899,13 +2847,15 @@ def dv_compact(
         ]
     else:
         crossing = list(affected_keys)
-    if not crossing:
+    if affected_keys and not crossing:
         return {
             "version": base_version,
             "partitions_rewritten": [],
             "positions_folded": 0,
             "positions_kept": sum(per_key[k] for k in affected_keys),
         }
+    # with no affected file the vector only references files a later COW
+    # rewrite already replaced: no day is rewritten, its reign just ends
     day_dirs = {_entry_day_dir(key2entry[k]) for k in crossing}
     if "" in day_dirs:
         raise ValueError(
@@ -2933,54 +2883,25 @@ def dv_compact(
             "positions_kept": n_kept,
             "dry_run": True,
         }
-    before, tok = _begin_rewrite(spark, path, "dv_compact", base_version)
+    survivors = (
+        read_snapshot(spark, path, base_version)
+        .select(PARTITION_COLUMN, *LOG_COLUMNS)
+        .filter(F.col(PARTITION_COLUMN).isin(days))
+        if days else None
+    )
+    journal = _begin_rewrite(spark, path, "dv_compact", base_version)
     gen = None
     if kept_keys:
         # surviving positions re-anchor as ONE fresh generation BEFORE
-        # the survivor write: a failure here has appended nothing yet,
-        # so the journal releases and the orphan gen dir is removed
-        # (after the survivor write starts, the journal must stay live
-        # on a crash — the COW crash-window contract below)
-        gen = f"{DV_DIR}/gen-{_uuid.uuid4().hex}"
-        try:
-            (
-                _dv_keep_keys(spark, dv, kept_keys)
-                .hint("rebalance")
-                .write.parquet(f"{path}/{gen}")
-            )
-        except BaseException:
-            _drop_gen_dir(fs, hpath_cls, path, gen, "dv-kept-gen-abort")
-            _release_journal_if_mine(fs, hpath_cls, path, tok)
-            raise
-    # a fault during the survivor write leaves the journal LIVE on
-    # purpose (the COW crash-window contract): the appended orphans are
-    # only identifiable via the journaled before-listing, so
-    # recover_incomplete_rewrite must find it
-    survivors = _restore_promotions(
-        spark, path,
-        read_snapshot(spark, path, base_version)
-        .select(PARTITION_COLUMN, *LOG_COLUMNS)
-        .filter(F.col(PARTITION_COLUMN).isin(days)),
+        # the survivor write, while a failure has appended nothing yet
+        gen, _ = _write_dv_generation(
+            spark, path, journal[1], _dv_keep_keys(spark, dv, kept_keys),
+            count=False,
+        )
+    version = _rewrite_days(
+        spark, path, "dv_compact", base_version, live, day_dirs, survivors,
+        dv=[gen] if gen else None, gen=gen, journal=journal,
     )
-    _append_in_layout(spark, survivors, path)
-    replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
-    next_v = base_version + 1
-    new_ref = [gen] if gen else None
-    try:
-        _write_dv_sidecar_claimed(
-            fs, hpath_cls, path, next_v, new_ref, tok
-        )
-        version = _finish_rewrite(
-            spark, path, base_version, before, tok, set(live) - replaced
-        )
-    except ConcurrentRewriteError:
-        _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-        if gen:
-            _drop_gen_dir(
-                fs, hpath_cls, path, gen, "dv-kept-gen-cleanup"
-            )
-        _reclaim_unpublished_appends(spark, path, before, tok)
-        raise
     return {
         "version": version,
         "partitions_rewritten": days,
@@ -3002,8 +2923,6 @@ def dv_coalesce(spark: SparkSession, path: str) -> dict:
     snapshots expire). A chain of <= 1 generation is a no-op — the
     dead-position cleanup alone is not worth a version bump. Same
     journal/two-phase discipline as the other MOR verbs."""
-    import uuid as _uuid
-
     base_version = _cow_base_version(spark, path)
     ref = _dv_ref_at(spark, path, base_version)
     refs = _dv_refs(ref)
@@ -3016,47 +2935,27 @@ def dv_coalesce(spark: SparkSession, path: str) -> dict:
             "positions_dropped": 0,
         }
     live = _manifest_files(spark, path, base_version)
-    dv = _read_dv(spark, path, ref)
     # both counts ride the coalesce write as observed metrics (r21,
     # guide §1.2/§5): the standalone dv.count() job and the read-back
     # count of the freshly written generation were two extra Spark jobs
     # per maintenance call that re-derived what the one required action
     # already streams past
     obs_total = _retry_safe_observation(spark)
-    obs_kept = _retry_safe_observation(spark)
     kept = _dv_keep_keys(
         spark,
-        dv.observe(obs_total, F.count(F.lit(1)).alias("n")),
+        _read_dv(spark, path, ref).observe(
+            obs_total, F.count(F.lit(1)).alias("n")
+        ),
         {_dv_key_of_entry(f, path) for f in live},
-    ).observe(obs_kept, F.count(F.lit(1)).alias("n"))
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
+    )
     before, tok = _begin_rewrite(spark, path, "dv_coalesce", base_version)
-    gen = f"{DV_DIR}/gen-{_uuid.uuid4().hex}"
-    try:
-        kept.hint("rebalance").write.parquet(f"{path}/{gen}")
-        n_total = obs_total.get["n"]
-        n_kept = obs_kept.get["n"]
-    except BaseException:
-        _drop_gen_dir(fs, hpath_cls, path, gen, "dv-coalesce-gen-drop")
-        _release_journal_if_mine(fs, hpath_cls, path, tok)
-        raise
-    next_v = base_version + 1
-    if n_kept == 0:
-        # every position was dead — end the vector's reign outright
-        _drop_gen_dir(fs, hpath_cls, path, gen, "dv-coalesce-gen-drop")
-    new_ref = [gen] if n_kept else None
-    try:
-        _write_dv_sidecar_claimed(
-            fs, hpath_cls, path, next_v, new_ref, tok
-        )
-        version = _finish_rewrite(
-            spark, path, base_version, before, tok, set(live)
-        )
-    except ConcurrentRewriteError:
-        _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-        _drop_gen_dir(fs, hpath_cls, path, gen, "dv-coalesce-gen-drop")
-        _reclaim_unpublished_appends(spark, path, before, tok)
-        raise
+    # every position dead: no generation, and the vector's reign ends
+    gen, n_kept = _write_dv_generation(spark, path, tok, kept)
+    n_total = obs_total.get["n"]
+    version = _finish_rewrite(
+        spark, path, base_version, before, tok, set(live),
+        dv=[gen] if gen else None, gen=gen,
+    )
     return {
         "version": version,
         "generations_before": len(refs),
@@ -3087,100 +2986,55 @@ def mor_update_where(
     rows, the appended files carry the new ones, and the CDC feed across
     the update is the standard delete+insert pair (position diff + file
     diff). Crash/concurrency discipline is the union of the two parents:
-    journaled intent before any write (appended orphans reclaim through
-    the before-listing, an orphan generation sweeps via vacuum), sidecar
-    before publish, losers clean up both."""
+    journaled intent before any write (after a crash, appended orphans
+    reclaim through the before-listing and an orphan generation sweeps
+    via vacuum), sidecar before publish, losers clean up both."""
     from .table import LOG_COLUMNS
-
-    import uuid as _uuid
 
     hit = _predicate(predicate)
     exprs = _validate_set_exprs("mor_update_where", set_exprs, LOG_COLUMNS)
     base_version = _cow_base_version(spark, path)
     live = _manifest_files(spark, path, base_version)
     old_refs = _dv_refs(_dv_ref_at(spark, path, base_version))
-    before, tok = _begin_rewrite(
-        spark, path, "mor_update_where", base_version
-    )
-    fs, hpath_cls, _ = _hadoop_fs(spark, path)
-
-    def _release_marker() -> None:
-        _release_journal_if_mine(fs, hpath_cls, path, tok)
-
-    matched = None
+    df = _read_data_files(spark, path, live, with_pos=True)
+    if old_refs:
+        df = _apply_dv(df, _read_dv(spark, path, old_refs), keep_keys=True)
+    # matched rows carry BOTH their positions (for the vector) and their
+    # data (for the updated copies) — persisted so the predicate scan
+    # over the table runs once and both writes read O(matched rows)
+    matched = df.filter(hit).persist()
     try:
-        # pre-append phase (including the eager reads — a bad predicate
-        # or a missing file must not leave the journal wedged): a fault
-        # here releases the journal; no data file has been appended, so
-        # there is nothing only the before-listing could identify, and
-        # an orphan generation sweeps via vacuum
-        try:
-            df = _read_data_files(spark, path, live, with_pos=True)
-            if old_refs:
-                df = _apply_dv(
-                    df, _read_dv(spark, path, old_refs), keep_keys=True
-                )
-            # matched rows carry BOTH their positions (for the vector)
-            # and their data (for the updated copies) — persisted so the
-            # predicate scan over the table runs once and both writes
-            # read O(matched rows). The match count rides the position
-            # write as an observed metric (r21): the standalone count
-            # was an extra materializing job, and the no-match REPLAY
-            # path now removes its empty generation afterwards exactly
-            # as mor_delete_where's does
-            matched = df.filter(hit).persist()
-            obs = _retry_safe_observation(spark)
-            gen = f"{DV_DIR}/gen-{_uuid.uuid4().hex}"
-            (
-                matched.observe(obs, F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("__dv_key").alias("file"),
-                    F.col("__dv_pos").alias("pos"),
-                )
-                .hint("rebalance")
-                .write.parquet(f"{path}/{gen}")
-            )
-            n_matched = obs.get["n"]
-            if n_matched == 0:
-                _drop_gen_dir(
-                    fs, hpath_cls, path, gen, "mor-upd-noop-gen-delete"
-                )
-                _release_marker()
-                return {
-                    "version": base_version,
-                    "rows_updated": 0,
-                    "dv": old_refs,
-                }
-        except BaseException:
-            _release_marker()
-            raise
-        # a fault from here on leaves the journal LIVE on purpose: the
-        # appended orphans are only identifiable via the before-listing
         updated = matched.select(
             PARTITION_COLUMN,
             *[exprs[c].alias(c) if c in exprs else F.col(c)
               for c in LOG_COLUMNS],
         )
-        _append_in_layout(
-            spark, _restore_promotions(spark, path, updated), path
+        journal = _begin_rewrite(
+            spark, path, "mor_update_where", base_version
+        )
+        gen, n_matched = _write_dv_generation(
+            spark, path, journal[1],
+            matched.select(
+                F.col("__dv_key").alias("file"),
+                F.col("__dv_pos").alias("pos"),
+            ),
+        )
+        if gen is None:
+            fs, hpath_cls, _ = _hadoop_fs(spark, path)
+            _release_journal_if_mine(fs, hpath_cls, path, journal[1])
+            return {
+                "version": base_version,
+                "rows_updated": 0,
+                "dv": old_refs,
+            }
+        new_chain = [gen, *old_refs]
+        # the updated copies append without replacing any day
+        version = _rewrite_days(
+            spark, path, "mor_update_where", base_version, live, set(),
+            updated, dv=new_chain, gen=gen, journal=journal,
         )
     finally:
-        if matched is not None:
-            matched.unpersist()
-    next_v = base_version + 1
-    new_chain = [gen, *old_refs]
-    try:
-        _write_dv_sidecar_claimed(
-            fs, hpath_cls, path, next_v, new_chain, tok
-        )
-        version = _finish_rewrite(
-            spark, path, base_version, before, tok, set(live)
-        )
-    except ConcurrentRewriteError:
-        _drop_dv_sidecar_if_mine(fs, hpath_cls, path, next_v, tok)
-        _drop_gen_dir(fs, hpath_cls, path, gen, "mor-upd-gen-cleanup")
-        _reclaim_unpublished_appends(spark, path, before, tok)
-        raise
+        matched.unpersist()
     return {
         "version": version,
         "rows_updated": n_matched,
@@ -3291,13 +3145,8 @@ def fsck(spark: SparkSession, path: str) -> dict:
     latest_refs = (
         per_version.get(versions[-1], set()) if versions else set()
     )
-    journal_live, journal_torn = False, False
-    if fs.exists(hpath_cls(f"{path}/{REWRITE_MARKER}")):
-        journal_live = True
-        try:
-            _read_small_json(fs, hpath_cls, path, REWRITE_MARKER)["before"]
-        except Exception:
-            journal_torn = True
+    before = _journal_before(fs, hpath_cls, path)
+    journal_live, journal_torn = before is not None, before is _TORN
     # deletion-vector probes: the head's governing generation must exist
     # on disk (a vacuumed/lost generation means MOR-deleted rows would
     # resurrect — corruption, flips ok), and sidecars past the head are

@@ -5195,6 +5195,51 @@ def test_maintenance_verbs_spark_job_counts(spark, tmp_path):
     assert rep["retention"]["partitions_rewritten"] == ["2024-01-01"]
 
 
+def test_dv_verbs_spark_job_counts(spark, tmp_path):
+    """Spark jobs per deletion-vector verb on the sf0.001 table, pinned
+    so a change to the commit path cannot add an action unseen. A
+    restore across a vector is metadata only: no job."""
+    from klogs_spark.manifest import (
+        dv_coalesce,
+        dv_compact,
+        mor_delete_where,
+        mor_update_where,
+        restore_snapshot,
+        snapshot_versions,
+    )
+    from tests.conftest import job_count
+
+    path = _sf_dv_table(spark, tmp_path)
+    res, counts = {}, {}
+
+    def count(verb, call):
+        counts[verb] = job_count(spark, lambda: res.update({verb: call()}))
+
+    count("mor_delete_where", lambda: mor_delete_where(
+        spark, path, "pod_name = 'pod-7'"
+    ))
+    count("mor_update_where", lambda: mor_update_where(
+        spark, path, "pod_name = 'pod-3'", {"log": "'redacted'"}
+    ))
+    count("dv_coalesce", lambda: dv_coalesce(spark, path))
+    vectored = snapshot_versions(spark, path)[-1]
+    count("dv_compact", lambda: dv_compact(spark, path))
+    count("restore_snapshot", lambda: restore_snapshot(
+        spark, path, vectored
+    ))
+    assert res["mor_delete_where"]["rows_deleted"] > 0
+    assert res["mor_update_where"]["rows_updated"] > 0
+    assert res["dv_coalesce"]["generations_before"] == 3
+    assert len(res["dv_compact"]["partitions_rewritten"]) > 1
+    assert counts == {
+        "mor_delete_where": 3,
+        "mor_update_where": 6,
+        "dv_coalesce": 3,
+        "dv_compact": 6,
+        "restore_snapshot": 0,
+    }
+
+
 def test_retention_reads_only_expired_days_and_compiles_nothing_new(
     spark, tmp_path
 ):
@@ -5261,3 +5306,168 @@ def test_retention_reads_only_expired_days_and_compiles_nothing_new(
                     files_read += int(values.get(m.accumulatorId()).get())
     # one file per day: only 2024-01-02 and 2024-01-03 were listed
     assert files_read == 2
+
+
+def _dv_race_case(spark, tmp_path, verb):
+    """A published two-day table with a deletion vector, prepared for
+    ``verb``, and the call that runs the verb (returning its report)."""
+    from klogs_spark import manifest as M
+
+    path = str(tmp_path / "logs")
+    write_logs(_two_day_logs(spark), path)
+    v1 = M.publish_snapshot(spark, path)
+    # day 1 loses 6 of 20 rows: over the selective fold's 10% threshold
+    M.mor_delete_where(
+        spark, path, "pod_name = 'pod-1' and date = '2026-01-01'"
+    )
+    # one row each on day 2, below the threshold (dv_coalesce: a chain
+    # of 3 generations)
+    for m in {"dv_coalesce": (1, 4), "dv_compact_selective": (1,)}.get(
+        verb, ()
+    ):
+        M.mor_delete_where(
+            spark, path,
+            f"pod_name = 'pod-1' and date = '2026-01-02' "
+            f"and hour(timestamp) = 0 and minute(timestamp) = {m}",
+        )
+    return path, {
+        "mor_delete_where": lambda: M.mor_delete_where(
+            spark, path, "pod_name = 'pod-2'"
+        ),
+        "mor_update_where": lambda: M.mor_update_where(
+            spark, path, "pod_name = 'pod-2'", {"log": "'redacted'"}
+        ),
+        "dv_compact_full": lambda: M.dv_compact(spark, path),
+        "dv_compact_selective": lambda: M.dv_compact(
+            spark, path, min_deleted_ratio=0.1
+        ),
+        "dv_coalesce": lambda: M.dv_coalesce(spark, path),
+        "restore_snapshot": lambda: {
+            "version": M.restore_snapshot(spark, path, v1)
+        },
+    }[verb]
+
+
+class _GenWriteFailed(RuntimeError):
+    pass
+
+
+# a full fold and a restore write no generation
+_DV_RACE_CASES = [
+    (verb, fault)
+    for verb in ("mor_delete_where", "mor_update_where", "dv_compact_full",
+                 "dv_compact_selective", "dv_coalesce", "restore_snapshot")
+    for fault in ("foreign_sidecar", "head_moved", "gen_write_raises")
+    if not (fault == "gen_write_raises"
+            and verb in ("dv_compact_full", "restore_snapshot"))
+]
+
+
+@pytest.mark.parametrize("verb,fault", _DV_RACE_CASES)
+def test_dv_verb_loses_race_cleanly_and_retries(
+    spark, tmp_path, monkeypatch, verb, fault
+):
+    """Every verb that publishes a deletion-vector sidecar keeps the
+    loser's contract end to end: a competitor's sidecar already claimed
+    at the next version, a head moved between the sidecar claim and the
+    publish, or a failed generation write each raise, leave the foreign
+    sidecar intact, leave none of the verb's generations, appended files
+    or journal behind, change no row, and a retry succeeds."""
+    import glob
+    import json
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from klogs_spark import manifest as M
+
+    path, run = _dv_race_case(spark, tmp_path, verb)
+
+    def rows():
+        return sorted(
+            r[0] for r in M.read_current_state(spark, path)
+            .select(F.to_json(F.struct("*"))).collect()
+        )
+
+    def gens():
+        return set(glob.glob(f"{path}/{M.DV_DIR}/gen-*"))
+
+    expected, gens_before = rows(), gens()
+    head = M.snapshot_versions(spark, path)[-1]
+    sidecar = Path(path) / M._dv_sidecar_rel(head + 1)
+    foreign = {"version": head + 1, "dv": ["_dv/gen-w"], "token": "w"}
+    if fault == "foreign_sidecar":
+        sidecar.write_text(json.dumps(foreign))
+        expect = M.ConcurrentRewriteError
+    elif fault == "head_moved":
+        claim = M._write_dv_sidecar_claimed
+
+        def claim_then_competitor_publishes(*args, **kwargs):
+            claim(*args, **kwargs)
+            M.publish_snapshot(
+                spark, path, files=M._manifest_files(spark, path, head)
+            )
+
+        monkeypatch.setattr(
+            M, "_write_dv_sidecar_claimed", claim_then_competitor_publishes
+        )
+        expect = M.ConcurrentRewriteError
+    else:
+        write = DataFrameWriter.parquet
+
+        def gen_write_fails(self, target, *args, **kwargs):
+            write(self, target, *args, **kwargs)
+            if f"/{M.DV_DIR}/gen-" in target:
+                raise _GenWriteFailed(target)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", gen_write_fails)
+        expect = _GenWriteFailed
+    with pytest.raises(expect):
+        run()
+    monkeypatch.undo()
+
+    if fault == "foreign_sidecar":
+        assert json.loads(sidecar.read_text()) == foreign
+        sidecar.unlink()  # the competitor never publishes its version
+    assert not (Path(path) / M.REWRITE_MARKER).exists()
+    assert gens() <= gens_before
+    assert M._unmanifested_files(spark, path) == set()
+    assert rows() == expected
+    assert M.fsck(spark, path)["ok"]
+    res = run()
+    assert res["version"] == M.snapshot_versions(spark, path)[-1] > head
+    assert M.fsck(spark, path)["ok"]
+
+
+def test_lost_race_spares_survivors_of_the_journal_holder(spark, tmp_path):
+    """When a competing rewrite holds the journal (ours was recovered
+    and the slot claimed again), the files new since our before-listing
+    include the competitor's in-flight survivors: the loser's abort must
+    leave them, and the competitor's journal, alone."""
+    import json
+
+    from klogs_spark import manifest as M
+    from klogs_spark.table import _hadoop_fs
+
+    path, n_total = _race_setup(spark, tmp_path)
+    base = M._cow_base_version(spark, path)
+    before, tok = M._begin_rewrite(spark, path, "cow_delete_where", base)
+    fs, hpath_cls, root = _hadoop_fs(spark, path)
+    M._write_small_json(
+        fs, hpath_cls, path, M.REWRITE_MARKER,
+        {"op": "competitor", "base_version": base,
+         "before": sorted(before), "token": "competitor"},
+    )
+    M._append_in_layout(
+        spark, M.read_logs_at(spark, path, base).limit(10), path
+    )
+    theirs = set(M._list_data_files(fs, root, hpath_cls)) - before
+    assert theirs
+    with pytest.raises(M.ConcurrentRewriteError, match="replaced"):
+        M._finish_rewrite(
+            spark, path, base, before, tok,
+            set(M._manifest_files(spark, path, base)),
+        )
+    assert theirs <= set(M._list_data_files(fs, root, hpath_cls))
+    assert json.loads(
+        (Path(path) / M.REWRITE_MARKER).read_text()
+    )["token"] == "competitor"
