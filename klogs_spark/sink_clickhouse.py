@@ -109,7 +109,7 @@ class ClickHouseSink:
                 for row in rows:
                     if conn is None:
                         conn = factory()
-                    buffered.append(tuple(row[c] for c in LOG_COLUMNS))
+                    buffered.append(tuple(row))
                     if len(buffered) >= batch_size:
                         flush()  # size-triggered: don't wait for the end
                 if buffered:
@@ -122,7 +122,9 @@ class ClickHouseSink:
                 if conn is not None:
                     conn.close()
 
-        df.foreachPartition(write_partition)
+        # rows arrive in INSERT column order, so each becomes its tuple by
+        # position (a lookup by name searches the Row's fields per column)
+        df.select(*LOG_COLUMNS).foreachPartition(write_partition)
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         self.write_batch(df, batch_id)

@@ -6,9 +6,11 @@ buffer -> size-or-time flush -> batched INSERT. Spark mapping (SURVEY §3.2):
     readStream (json-lines files / any streaming source)        <- S1/S7
       -> foreachBatch:
            decode_dataframe (flatten+dispatch, Arrow batches)   <- P1,P2,S2
-             rejects leave the same pass for the dead-letter dir
+             rejects leave the same pass, nothing is persisted
            sink.write(batch)                                    <- S3
-             ingest metrics ride the sink's job as Observations
+             ingest metrics and the reject lines ride the sink's
+             job as Observations; the driver then writes the
+             lines to the dead-letter dir as one file per batch
       trigger(processingTime=flush_interval)                    <- T1
       checkpointLocation=...                                    <- T2/T4
 
@@ -134,6 +136,12 @@ def start_ingest(
     (final drain — restart resumes the uncommitted batch) and T4
     (at-least-once redelivery). ``dead_letter_dir`` quarantines undecodable
     lines for replay instead of dropping them.
+
+    A callable sink whose first Dataset action reads only part of its
+    batch (``isEmpty()``, ``limit``) must set a true ``counts_from_cache``
+    attribute: the metrics and the dead-letter lines are collected on that
+    action, and without the attribute the rejects of the unread part are
+    not written (:func:`_make_batch_processor`).
     """
     cfg = config or EngineConfig()
     ckpt = checkpoint_dir or cfg.checkpoint_dir
@@ -185,12 +193,8 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
     and Structured Streaming replays it — a silently dropped staged file
     can never be committed under the marker.
     """
+    from .manifest import _must
     from .table import _hadoop_fs
-
-    def _must(ok: bool, op: str, target) -> None:
-        if not ok:
-            raise IOError(f"exactly_once_sink: {op} failed for {target} "
-                          "(Hadoop FS returned false); failing batch for replay")
 
     def sink_fn(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -207,7 +211,7 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
                 for f in fs.listStatus(part.getPath()):
                     if f.getPath().getName().startswith(prefix):
                         _must(fs.delete(f.getPath(), False),
-                              "purge-delete", f.getPath())
+                              "exactly_once_sink purge-delete", f.getPath())
         staging = hpath_cls(root, f"_staging/batch-{batch_id}")
         write_logs(batch, f"{path}/_staging/batch-{batch_id}", mode="overwrite",
                    mark_layout=False)
@@ -216,14 +220,16 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
                     and part.getPath().getName().startswith("date=")):
                 continue
             target_dir = hpath_cls(root, part.getPath().getName())
-            _must(fs.mkdirs(target_dir), "mkdirs", target_dir)
+            _must(fs.mkdirs(target_dir), "exactly_once_sink mkdirs",
+                  target_dir)
             for f in fs.listStatus(part.getPath()):
                 name = f.getPath().getName()
                 if name.endswith(".parquet"):
                     _must(fs.rename(f.getPath(),
                                     hpath_cls(target_dir, prefix + name)),
-                          "publish-rename", f.getPath())
-        _must(fs.mkdirs(hpath_cls(root, "_commits")), "mkdirs", "_commits")
+                          "exactly_once_sink publish-rename", f.getPath())
+        _must(fs.mkdirs(hpath_cls(root, "_commits")),
+              "exactly_once_sink mkdirs", "_commits")
         fs.create(marker, True).close()
         # staging cleanup is best-effort: the marker is already durable, so a
         # false here must NOT fail (and replay) an already-published batch —
@@ -246,42 +252,88 @@ def _resolve_sink(
     return sink
 
 
-# Column of decode_dataframe's output that carries a rejected line
+# Columns of decode_dataframe's output: a rejected line, whether it came
+# past its task's budget of reject bytes the driver may collect, and the
+# partition and task attempt that decoded the row
 _REJECT = "_reject"
+_SPILLED = f"{_REJECT}_spilled"
+_PARTITION = f"{_REJECT}_partition"
+_ATTEMPT = f"{_REJECT}_attempt"
 
 
-def _count_observations(spark: SparkSession) -> tuple | None:
-    """Two Observations (raw lines, decoded rows) that ride the sink's own
-    job, or None under ``spark.speculation``, where Observation counts
-    would double."""
-    from .manifest import _retry_safe_observation
+def _observed(obs, spark: SparkSession) -> dict | None:
+    """What ``obs`` observed, or None when no Dataset action over its
+    frame ran (a sink that takes no action, such as a replayed batch that
+    is already published). Observations complete on the listener bus
+    after the action returns; once the bus is drained an incomplete one
+    will not complete, so ``get`` never blocks. A bus that does not drain
+    within its 10 s bound also answers None."""
+    from py4j.protocol import Py4JError
 
-    try:
-        return _retry_safe_observation(spark), _retry_safe_observation(spark)
-    except ValueError:
+    if obs is None:
         return None
+    done = obs._jo.future().isCompleted
+    if not done():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        except Py4JError:  # TimeoutException
+            pass
+    return obs.get if done() else None
 
 
 def _observed_rows(obs, df: DataFrame) -> int:
-    """The row count ``obs`` observed on ``df``, or ``df.count()`` when no
-    Dataset action over ``df`` ran (a sink that takes no action, such as
-    a replayed batch that is already published). Observations complete on
-    the listener bus after the action returns; once the bus is drained an
-    incomplete one will not complete, so ``get`` never blocks. A bus that
-    does not drain within its 10 s bound also gets the direct count."""
-    from py4j.protocol import Py4JError
+    """The row count ``obs`` observed on ``df``, or ``df.count()`` when it
+    observed nothing."""
+    seen = _observed(obs, df.sparkSession)
+    return int(seen["n"]) if seen is not None else df.count()
 
-    if obs is not None:
-        done = obs._jo.future().isCompleted
-        if not done():
-            bus = df.sparkSession.sparkContext._jsc.sc().listenerBus()
-            try:
-                bus.waitUntilEmpty()
-            except Py4JError:  # TimeoutException
-                pass
-        if done():
-            return int(obs.get["n"])
-    return df.count()
+
+def _write_dead_letters(dead: DataFrame, path: str, batch_id: int,
+                        seen: dict | None) -> None:
+    """Append a batch's reject lines to the dead-letter directory ``path``.
+
+    ``seen`` is what the batch's Observation collected on the sink's job:
+    each reject line with the partition and the task attempt that decoded
+    it. A stage retry can re-run a finished decode task, and the
+    Observation then merges both attempts' lines; every attempt of a
+    partition decodes the same input rows, so the lines of one attempt
+    per partition are the batch's lines exactly once. When ``seen`` holds
+    every reject line, the driver writes them as one ``part-`` text file:
+    to a dot-prefixed temporary name first, then a checked rename, so no
+    reader sees a partial ``part-`` file. A batch without rejects writes
+    no file, but the directory exists after every batch. When the
+    Observation did not complete, or some line came past its task's
+    budget, the lines are written from ``dead`` by a Spark text write
+    instead."""
+    if seen is None or seen["spilled"]:
+        dead.write.mode("append").text(path)
+        return
+    import uuid
+
+    from .manifest import _must
+    from .table import _hadoop_fs
+
+    fs, hpath_cls, root = _hadoop_fs(dead.sparkSession, path)
+    _must(fs.mkdirs(root), "dead-letter mkdirs", root)
+    first: dict[int, int] = {}  # partition -> the attempt whose lines count
+    for r in seen["dead"]:
+        first[r.p] = min(r.a, first.get(r.p, r.a))
+    lines = [r.line for r in seen["dead"] if r.a == first[r.p]]
+    if not lines:
+        return
+    name = f"part-{batch_id:05d}-{uuid.uuid4()}.txt"
+    tmp, final = hpath_cls(root, f".{name}.tmp"), hpath_cls(root, name)
+    try:
+        out = fs.create(tmp, False)
+        try:
+            out.write("".join(line + "\n" for line in lines)
+                      .encode("utf-8", "replace"))
+        finally:
+            out.close()
+        _must(fs.rename(tmp, final), "dead-letter rename", final)
+    except Exception:
+        fs.delete(tmp, False)
+        raise
 
 
 def _make_batch_processor(
@@ -297,12 +349,16 @@ def _make_batch_processor(
     dead-letter directory makes them replayable instead — each micro-batch
     appends its reject lines so nothing is silently lost.
 
-    A JSON batch is parsed once: the decode pass emits each rejected line
-    in a nullable reject column, and the sink gets the rows whose reject
-    column is null, without the column. With a dead-letter directory the
-    decoded frame is persisted, so the dead-letter write reads the other
-    rows back from the cache instead of parsing the input again; without
-    one nothing is persisted.
+    A JSON batch is parsed once and nothing is persisted: the decode pass
+    emits each rejected line in a nullable reject column, and the sink
+    gets the rows whose reject column is null, without the column. One
+    Observation on the decode output rides the sink's own job: it counts
+    the decoded rows and collects the reject lines, which the driver then
+    writes to the dead-letter directory (:func:`_write_dead_letters`). The
+    decode flags the reject lines past a per-task byte budget
+    (``decode.OBSERVED_REJECT_BYTES``); a batch with a flagged line, or
+    whose Observation did not complete, writes its rejects with a Spark
+    text write over the batch instead, which decodes it again.
 
     ``metrics`` hooks the flush path inline, exactly where the reference
     instruments (main.go:246, 371-373) — ``input_records_total`` counts the
@@ -312,15 +368,19 @@ def _make_batch_processor(
     counts are Observations on the sink's own job (raw lines below the
     decode, decoded rows above it), so they add no Spark job. The first
     Dataset action over the batch completes them, which is exact when that
-    action reads the whole batch. A sink for which that does not hold sets
-    a true ``counts_from_cache`` attribute: one whose first action reads
-    only part of its batch (an ``isEmpty()`` early return), or one that
-    leaves the Dataset API (``foreachPartition`` runs on the RDD and fires
-    no Observation). For such a sink, and under ``spark.speculation``,
-    the raw and decoded frames are persisted and both counts read the
-    caches after the sink, so the batch is still decoded once. (A
-    StreamingQueryListener would need the py4j callback server, which
-    headless drivers may not run.)
+    action reads the whole batch. The dead-letter lines ride the same
+    Observation, so a sink whose first action reads only part of its batch
+    would leave the rejects of the unread part unwritten. A sink for which
+    that does not hold MUST set a true ``counts_from_cache`` attribute: one
+    whose first action reads only part of its batch (an ``isEmpty()`` or
+    ``limit`` early return), or one that leaves the Dataset API
+    (``foreachPartition`` runs on the RDD and fires no Observation). For
+    such a sink, and under ``spark.speculation``
+    (where Observations double-count), no Observation is used: the raw
+    and decoded frames are persisted, both counts read the caches after
+    the sink, and the dead-letter lines are written from the cache, so
+    the batch is still decoded once. (A StreamingQueryListener would need
+    the py4j callback server, which headless drivers may not run.)
 
     ``input_format``: "json" (one JSON event per ``value`` line) or
     "msgpack" (one Fluent Bit chunk per ``content`` blob, the reference's
@@ -340,6 +400,7 @@ def _make_batch_processor(
     # or bound method (ClickHouseSink)
     counts_from_cache = getattr(
         getattr(sink_fn, "__self__", sink_fn), "counts_from_cache", False)
+    observe = metrics is not None or bool(dead_letter_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -347,20 +408,29 @@ def _make_batch_processor(
         from pyspark.sql import functions as F
 
         from .decode import decode_msgpack_dataframe
+        from .manifest import _retry_safe_observation
 
         t0 = _time.perf_counter()
-        obs = None
-        if metrics is not None and not counts_from_cache:
-            obs = _count_observations(batch_df.sparkSession)
-        from_cache = metrics is not None and obs is None
-        raw_obs, rows_obs = obs or (None, None)
+        spark = batch_df.sparkSession
+        raw_obs = rows_obs = None
+        if observe and not counts_from_cache:
+            try:
+                rows_obs = _retry_safe_observation(spark)
+            except ValueError:  # spark.speculation
+                pass
+            else:
+                if metrics is not None:
+                    raw_obs = _retry_safe_observation(spark)
+        from_cache = observe and rows_obs is None
         persisted: list[DataFrame] = []
 
         def cache(df: DataFrame) -> DataFrame:
             persisted.append(df.persist())
             return persisted[-1]
 
-        raw = cache(batch_df) if from_cache else batch_df
+        raw = batch_df
+        if from_cache and metrics is not None:
+            raw = cache(raw)
         if raw_obs is not None:
             raw = raw.observe(raw_obs, F.count(F.lit(1)).alias("n"))
         dead = None
@@ -368,16 +438,32 @@ def _make_batch_processor(
             decoded = decode_msgpack_dataframe(raw, cfg)
             if from_cache:
                 decoded = cache(decoded)
+            if rows_obs is not None:
+                decoded = decoded.observe(
+                    rows_obs, F.count(F.lit(1)).alias("n"))
         else:
             split = decode_dataframe(raw, cfg, reject_column=_REJECT)
-            if dead_letter_dir or from_cache:
+            if from_cache:
                 split = cache(split)
-            decoded = split.filter(F.col(_REJECT).isNull()).drop(_REJECT)
+            if rows_obs is not None:
+                aggs = [F.count(F.when(F.col(_REJECT).isNull(), 1))
+                        .alias("n")]
+                if dead_letter_dir:
+                    observable = F.col(_REJECT).isNotNull() & ~F.col(_SPILLED)
+                    aggs += [
+                        F.collect_list(F.when(observable, F.struct(
+                            F.col(_PARTITION).alias("p"),
+                            F.col(_ATTEMPT).alias("a"),
+                            F.col(_REJECT).alias("line"),
+                        ))).alias("dead"),
+                        F.count(F.when(F.col(_SPILLED), 1)).alias("spilled"),
+                    ]
+                split = split.observe(rows_obs, *aggs)
+            decoded = split.filter(F.col(_REJECT).isNull()).drop(
+                _REJECT, _SPILLED, _PARTITION, _ATTEMPT)
             if dead_letter_dir:
                 dead = split.filter(F.col(_REJECT).isNotNull()).select(
                     F.col(_REJECT).alias("value"))
-        if rows_obs is not None:
-            decoded = decoded.observe(rows_obs, F.count(F.lit(1)).alias("n"))
         try:
             try:
                 sink_fn(decoded, batch_id)
@@ -387,7 +473,8 @@ def _make_batch_processor(
                 raise
             elapsed = _time.perf_counter() - t0
             if dead is not None:
-                dead.write.mode("append").text(dead_letter_dir)
+                _write_dead_letters(dead, dead_letter_dir, batch_id,
+                                    _observed(rows_obs, spark))
             if metrics is not None:
                 metrics.observe_batch(
                     _observed_rows(raw_obs, batch_df), elapsed,
@@ -413,9 +500,11 @@ def run_ingest_once(
 ) -> None:
     """Drain everything currently available, then stop (availableNow).
 
-    The batch-mode twin of :func:`start_ingest`; also the shutdown-drain
-    path — the reference's FLBPluginExitCtx final BufferWrite
-    (main.go:386-396) is this plus checkpoint bookkeeping.
+    The batch-mode twin of :func:`start_ingest`, with the same contract
+    for callable sinks (a partial first action needs
+    ``counts_from_cache``); also the shutdown-drain path — the
+    reference's FLBPluginExitCtx final BufferWrite (main.go:386-396) is
+    this plus checkpoint bookkeeping.
     """
     cfg = config or EngineConfig()
     ckpt = checkpoint_dir or cfg.checkpoint_dir

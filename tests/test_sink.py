@@ -114,6 +114,31 @@ def test_write_batch_commits_all_rows(spark, tmp_path):
     assert sqls == {sink.insert_sql}
 
 
+def test_write_batch_inserts_in_column_order_of_insert(spark, tmp_path):
+    """Rows become INSERT tuples by position: a frame whose columns come
+    in another order still reaches the connection in LOG_COLUMNS order."""
+    from klogs_spark.schema import LOG_COLUMNS
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    sink = ClickHouseSink(EngineConfig(), make_factory(spool))
+    df = spark.createDataFrame(
+        [("line-1", {"n": 1.0}, {"k": "v"}, "h", "ct", "p", "a", "ns", "c",
+          datetime(2026, 1, 1))],
+        "log string, fields_number map<string,double>, "
+        "fields_string map<string,string>, host string, "
+        "container_name string, pod_name string, app string, "
+        "namespace string, cluster string, timestamp timestamp",
+    )
+    sink.write_batch(df, batch_id=0)
+    _, rows = read_spool(spool)
+    want = {"timestamp": datetime(2026, 1, 1), "cluster": "c",
+            "namespace": "ns", "app": "a", "pod_name": "p",
+            "container_name": "ct", "host": "h", "fields_string": {"k": "v"},
+            "fields_number": {"n": 1.0}, "log": "line-1"}
+    assert rows == [tuple(want[c] for c in LOG_COLUMNS)]
+
+
 def test_write_batch_failure_propagates(spark, tmp_path):
     spool = str(tmp_path / "spool")
     os.makedirs(spool)

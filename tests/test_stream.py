@@ -685,3 +685,177 @@ def test_no_cache_leak_when_sink_fails_after_reading(
             dead_letter_dir=str(tmp_path / "dead") if dead_letter else None)
     assert m.errors_total == 1
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def _dead_letter_names(path: str) -> tuple[list[str], list[str]]:
+    """The ``part-`` files of a dead-letter directory, and its other
+    names apart from checksum files."""
+    import os
+
+    names = [n for n in os.listdir(path) if not n.endswith(".crc")]
+    parts = sorted(n for n in names if n.startswith("part-"))
+    return parts, sorted(set(names) - set(parts))
+
+
+@pytest.mark.parametrize("path", [
+    "observed", "spilled", "replayed", "counts_from_cache"])
+def test_dead_letter_paths_write_each_reject_once_per_attempt(
+        spark, tmp_path, monkeypatch, path):
+    """Every way a batch's reject lines reach the dead-letter directory
+    writes each of them once per attempt, as ``part-`` files Spark reads
+    back, and leaves no temporary file: the lines the sink's job
+    observed (one driver-written file, no ``_SUCCESS``), and the Spark
+    text write taken when a task's rejects pass the observation budget,
+    when a replayed batch's sink runs no action, or for a
+    ``counts_from_cache`` sink."""
+    from klogs_spark import decode
+    from klogs_spark.metrics import IngestMetrics
+    from klogs_spark.stream import _make_batch_processor, exactly_once_sink
+
+    good = [json.dumps({"ts": 1 + i, "record": {"log": f"g{i}"}})
+            for i in range(3)]
+    src = _write_lines(tmp_path / "raw", good + list(REJECT_LINES.values()))
+    out, dl = str(tmp_path / "logs"), str(tmp_path / "dead")
+    sink = exactly_once_sink(out)
+    if path == "spilled":
+        monkeypatch.setattr(decode, "OBSERVED_REJECT_BYTES", 0)
+    if path == "counts_from_cache":
+        def sink(batch_df, batch_id, inner=sink):
+            inner(batch_df, batch_id)
+
+        sink.counts_from_cache = True
+    m = IngestMetrics()
+    process = _make_batch_processor(EngineConfig(), sink, dl, m)
+    attempts = 2 if path == "replayed" else 1
+    for _ in range(attempts):
+        process(spark.read.text(src), 7)
+
+    parts, others = _dead_letter_names(dl)
+    if path == "observed":
+        assert len(parts) == 1 and others == []
+    else:
+        assert others == ["_SUCCESS"]
+    assert sorted(_dead_lines(spark, dl)) == sorted(
+        list(REJECT_LINES.values()) * attempts)
+    assert sorted(r.log for r in read_logs(spark, out).collect()) == [
+        "g0", "g1", "g2"]
+    assert m.input_records_total == 6 * attempts
+    assert m.batch_sizes == [3.0] * attempts
+
+
+def test_dead_letter_lines_keep_one_attempt_per_partition(spark, tmp_path):
+    """A stage retry can re-run a finished decode task, and the
+    Observation then merges the reject lines of both attempts. The
+    driver write keeps one attempt per partition, so each line lands
+    once, while a line the input holds twice stays twice."""
+    from pyspark.sql import Row
+
+    from klogs_spark.stream import _write_dead_letters
+
+    seen = {"spilled": 0, "dead": [
+        Row(p=0, a=8, line="x"), Row(p=1, a=4, line="y"),
+        Row(p=1, a=4, line="y"), Row(p=0, a=3, line="x"),
+        Row(p=1, a=9, line="y"), Row(p=1, a=9, line="y"),
+        Row(p=2, a=5, line="z"),
+    ]}
+    dl = str(tmp_path / "dead")
+    _write_dead_letters(spark.createDataFrame([], "value string"), dl, 0,
+                        seen)
+    assert sorted(_dead_lines(spark, dl)) == ["x", "y", "y", "z"]
+
+
+def test_batch_without_rejects_leaves_empty_dead_letter_dir(spark, tmp_path):
+    from klogs_spark.stream import _make_batch_processor, exactly_once_sink
+
+    src = _write_lines(tmp_path / "raw", [json.dumps(ev) for ev in EVENTS])
+    dl = str(tmp_path / "dead")
+    process = _make_batch_processor(
+        EngineConfig(), exactly_once_sink(str(tmp_path / "logs")), dl)
+    process(spark.read.text(src), 0)
+    assert _dead_letter_names(dl) == ([], [])
+
+
+def test_dead_letter_rename_failure_fails_batch_without_temp(
+        spark, tmp_path, monkeypatch):
+    """A dead-letter rename that returns false (the object-store hazard)
+    fails the batch for replay and leaves neither the temporary file
+    nor a ``part-`` file behind."""
+    from klogs_spark import table as table_mod
+    from klogs_spark.stream import _make_batch_processor
+    from klogs_spark.table import write_logs
+
+    real_hadoop_fs = table_mod._hadoop_fs
+
+    class _DeadRenameFailsFS:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def rename(self, src, dst):
+            if dst.getName().startswith("part-"):
+                return False
+            return self._inner.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    def fake_hadoop_fs(spark_, path_):
+        fs, hpath_cls, root = real_hadoop_fs(spark_, path_)
+        return _DeadRenameFailsFS(fs), hpath_cls, root
+
+    monkeypatch.setattr(table_mod, "_hadoop_fs", fake_hadoop_fs)
+    src = _write_lines(tmp_path / "raw", [
+        json.dumps({"ts": 1, "record": {"log": "good"}}), "NOT JSON"])
+    dl = str(tmp_path / "dead")
+    out = str(tmp_path / "logs")
+    process = _make_batch_processor(
+        EngineConfig(), lambda df, batch_id: write_logs(df, out), dl)
+    with pytest.raises(IOError, match="dead-letter rename"):
+        process(spark.read.text(src), 0)
+    assert _dead_letter_names(dl) == ([], [])
+
+
+def test_batch_spark_job_counts(spark, tmp_path):
+    """A JSON batch with dead letters and metrics into the exactly-once
+    sink runs 3 Spark jobs (the widen of the input splits, the decode
+    into the write's rebalance, the sorted write) and persists nothing:
+    its reject lines and counts ride the write. A msgpack batch into
+    ClickHouseSink runs its one foreachPartition job."""
+    from klogs_spark.metrics import IngestMetrics
+    from klogs_spark.msgpack_lite import pack
+    from klogs_spark.sink_clickhouse import ClickHouseSink
+    from klogs_spark.stream import _make_batch_processor, exactly_once_sink
+    from tests.conftest import job_count
+
+    src = _write_lines(tmp_path / "raw", [json.dumps(ev) for ev in EVENTS]
+                       + list(REJECT_LINES.values()))
+    dl = str(tmp_path / "dead")
+    m = IngestMetrics()
+    process = _make_batch_processor(
+        EngineConfig(), exactly_once_sink(str(tmp_path / "logs")), dl, m)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = cached()
+    batch = spark.read.text(src)
+    assert job_count(spark, lambda: process(batch, 0)) == 3
+    assert cached() == before
+    assert sorted(_dead_lines(spark, dl)) == sorted(REJECT_LINES.values())
+    assert m.batch_sizes == [20.0]
+
+    chunks = tmp_path / "chunks"
+    chunks.mkdir()
+    # enough chunk files that the input splits cover the cluster width
+    n_chunks = 2 * spark.sparkContext.defaultParallelism
+    for c in range(n_chunks):
+        (chunks / f"chunk-{c}.msgpack").write_bytes(
+            pack([1755043200 + c, {"log": f"l{c}"}]))
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    from tests.test_sink import make_factory, read_spool
+
+    process = _make_batch_processor(
+        EngineConfig(), ClickHouseSink(EngineConfig(),
+                                       make_factory(str(spool))),
+        None, input_format="msgpack")
+    batch = (spark.read.format("binaryFile").load(str(chunks))
+             .select("content"))
+    assert job_count(spark, lambda: process(batch, 0)) == 1
+    assert len(read_spool(str(spool))[1]) == n_chunks
