@@ -24,9 +24,12 @@ from __future__ import annotations
 import json
 import math
 import re
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta, timezone, tzinfo
+from functools import partial
 from itertools import accumulate
-from typing import Any, Iterable, Iterator
+from operator import itemgetter
+from typing import AbstractSet, Any, Callable, Iterable, Iterator
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
 # naive-UTC epoch anchor for the hot timestamp conversion (extract_timestamp)
 _EPOCH = datetime(1970, 1, 1)
@@ -94,6 +97,7 @@ from .schema import (
     APP_KEY_FALLBACK,
     APP_KEY_PRIMARY,
     ENVELOPE_KEYS,
+    LOG_COLUMNS,
     LOG_SCHEMA,
 )
 
@@ -241,6 +245,7 @@ def record_to_row(
     record: dict[str, Any],
     config: EngineConfig | None = None,
     now: datetime | None = None,
+    force: AbstractSet[str] | None = None,
 ) -> dict[str, Any]:
     """Flattened-record -> logs row. Port of main.go:246-354.
 
@@ -249,11 +254,13 @@ def record_to_row(
     never stored (main.go:269-270, 312); Force_Number_Fields membership is
     checked on the RAW key while storage uses the underscore-formatted key —
     the reference's quirk at main.go:339 vs :331-334, replicated exactly.
+
+    ``force`` is ``config.force_number_fields`` as a set; the decode loops
+    build it once per call and pass it here, one record at a time.
     """
     config = config or _DEFAULT_CONFIG
-    force = config._force_set if hasattr(config, "_force_set") else set(
-        config.force_number_fields
-    )
+    if force is None:
+        force = frozenset(config.force_number_fields)
     flat = flatten(record)
     row: dict[str, Any] = {
         "timestamp": extract_timestamp(ts, now),
@@ -336,6 +343,7 @@ def decode_json_lines(
     config: EngineConfig | None = None,
     now: datetime | None = None,
     rejects: list[str] | None = None,
+    force: AbstractSet[str] | None = None,
 ) -> Iterator[dict[str, Any]]:
     """Decode raw JSON-lines events into logs rows.
 
@@ -344,7 +352,12 @@ def decode_json_lines(
     deliberate deviation from the reference, which aborts the whole chunk
     (main.go:251-254); documented in SURVEY §7 step 1. Undecodable lines are
     appended to ``rejects`` when provided (the dead-letter channel).
+    ``force`` is the force-number set, built here from ``config`` unless
+    the caller passes the one it built.
     """
+    config = config or _DEFAULT_CONFIG
+    if force is None:
+        force = frozenset(config.force_number_fields)
     if now is None:
         # one clock read per decode call, not per event — the reference's
         # fallback granularity is the flush anyway (main.go:99-102), and
@@ -374,7 +387,7 @@ def decode_json_lines(
                 rejects.append(line)
             continue
         try:
-            yield record_to_row(ts, record, config, now)
+            yield record_to_row(ts, record, config, now, force)
         except FlattenError:
             if rejects is not None:
                 rejects.append(line)
@@ -386,6 +399,7 @@ def decode_msgpack_events(
     config: EngineConfig | None = None,
     now: datetime | None = None,
     bad_chunks: list[bytes] | None = None,
+    force: AbstractSet[str] | None = None,
 ) -> Iterator[dict[str, Any]]:
     """Decode Fluent Bit msgpack chunks into logs rows.
 
@@ -396,10 +410,14 @@ def decode_msgpack_events(
     ``extract_timestamp`` (main.go:85-103). A malformed chunk stops at the
     failure point and keeps the events decoded so far (the reference
     warn-and-drops the remainder the same way, main.go:251-254); fully
-    undecodable chunks land in ``bad_chunks`` when provided.
+    undecodable chunks land in ``bad_chunks`` when provided. ``force`` is
+    as in :func:`decode_json_lines`.
     """
     from .msgpack_lite import MsgpackError, unpack_stream
 
+    config = config or _DEFAULT_CONFIG
+    if force is None:
+        force = frozenset(config.force_number_fields)
     if now is None:
         # one clock read per decode call, not per event (see
         # decode_json_lines — same flush-granularity rationale)
@@ -416,7 +434,7 @@ def decode_msgpack_events(
                     continue  # not a [ts, record] event — skip, keep reading
                 ts, record = event
                 try:
-                    yield record_to_row(ts, record, config, now)
+                    yield record_to_row(ts, record, config, now, force)
                     yielded = True
                 except FlattenError:
                     continue
@@ -439,12 +457,23 @@ def decode_msgpack_dataframe(
     The binary twin of :func:`decode_dataframe` — one Arrow batch of chunk
     blobs in, decoded rows out; pairs with ``stream.read_msgpack_chunk_stream``
     (binaryFile source) for the reference's true ingest shape (S1).
+
+    A batch input is first spread across the cluster width. The returned
+    frame also records how its rows are produced in Python: the widened
+    chunk input and a per-partition generator over
+    :func:`decode_msgpack_events` that yields ``LOG_COLUMNS``-ordered
+    tuples (:func:`python_rows`). A sink that writes from a Python worker
+    anyway (``sink_clickhouse.ClickHouseSink``) decodes each chunk there
+    and skips the pandas frame, the Arrow batch and the JVM rows. Both
+    ways read ``config``'s force-number set as it is at this call.
     """
     cfg = config or _DEFAULT_CONFIG
-    cfg._force_set = set(cfg.force_number_fields)
+    force = frozenset(cfg.force_number_fields)
 
     if not raw.isStreaming:
         parallelism = raw.sparkSession.sparkContext.defaultParallelism
+        # DataFrame.rdd is cached per frame, so when no widening is needed
+        # python_rows feeds the sink from the RDD this probe planned
         if raw.rdd.getNumPartitions() < parallelism:
             raw = raw.repartition(parallelism)
 
@@ -452,14 +481,91 @@ def decode_msgpack_dataframe(
         import pandas as pd
 
         for batch in batches:
-            rows = list(decode_msgpack_events(batch[content_column].tolist(), cfg))
+            rows = list(decode_msgpack_events(
+                batch[content_column].tolist(), cfg, force=force))
             if not rows:
                 continue
             yield pd.DataFrame(
                 {name: [r[name] for r in rows] for name in LOG_SCHEMA.fieldNames()}
             )
 
-    return raw.mapInPandas(_decode, schema=LOG_SCHEMA)
+    decoded = raw.mapInPandas(_decode, schema=LOG_SCHEMA)
+    if not raw.isStreaming and content_column in raw.columns:
+        decoded._python_rows = (
+            raw, raw.columns.index(content_column), cfg, force)
+    return decoded
+
+
+def python_rows(
+    df: DataFrame,
+) -> tuple["RDD", Callable[[Iterator[Any]], Iterator[tuple]]] | None:
+    """How ``df``'s rows are produced in Python, when ``df`` is a frame
+    :func:`decode_msgpack_dataframe` returned, untouched: ``(rdd,
+    rows_of)``. ``rdd`` holds the widened chunk input as Rows, and
+    ``rows_of(partition)`` yields one ``LOG_COLUMNS``-ordered tuple per
+    event of that partition's chunks. Over the same partitions these are
+    the tuples of ``df.select(*LOG_COLUMNS)``'s Rows, field by field.
+
+    ``None`` for every other frame: any transformation returns a new
+    frame, which carries nothing; a persisted frame's cache is the cheaper
+    source; and a session time zone that is not an IANA key (a bare
+    offset such as ``+02:00``) is left to Spark's own conversion.
+    """
+    made = getattr(df, "_python_rows", None)
+    if made is None or df.is_cached:
+        return None
+    zone = _session_zone(
+        df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    if zone is None:
+        return None
+    raw, index, cfg, force = made
+    return raw.rdd, partial(_log_tuples, index=index, cfg=cfg, force=force,
+                            zone=zone)
+
+
+def _session_zone(name: str) -> tzinfo | None:
+    if name in ("UTC", "Etc/UTC"):
+        return timezone.utc
+    try:
+        return ZoneInfo(name)
+    except (ValueError, ZoneInfoNotFoundError):
+        return None
+
+
+_EPOCH_UTC = _EPOCH.replace(tzinfo=timezone.utc)
+_US = timedelta(microseconds=1)
+
+
+def _log_tuples(
+    rows: Iterator[Any],
+    index: int,
+    cfg: EngineConfig,
+    force: AbstractSet[str],
+    zone: tzinfo,
+) -> Iterator[tuple]:
+    """INSERT tuples of the msgpack chunks in ``rows`` (``rows[i][index]``).
+
+    The timestamp is what the Row path delivers. ``mapInPandas`` reads the
+    decode's naive datetime in the session time zone, choosing standard
+    time for an ambiguous wall clock (pandas ``tz_localize(...,
+    ambiguous=False)``; ``fold=1`` here), and a Python worker renders the
+    stored instant with ``TimestampType.fromInternal``. Where that wall
+    clock does not exist (a DST gap) the Row path fails its batch.
+    """
+    from pyspark.sql.types import TimestampType
+
+    render = TimestampType().fromInternal
+    values = itemgetter(*LOG_COLUMNS)
+    utc = zone is timezone.utc
+    for row in decode_msgpack_events(
+            (r[index] for r in rows), cfg, force=force):
+        ts = row["timestamp"]
+        if utc:
+            us = (ts - _EPOCH) // _US
+        else:
+            us = (ts.replace(tzinfo=zone, fold=1) - _EPOCH_UTC) // _US
+        row["timestamp"] = render(us)
+        yield values(row)
 
 
 # Reject bytes per decode task that a caller may collect to the driver:
@@ -512,8 +618,7 @@ def decode_dataframe(
       per partition.
     """
     cfg = config or _DEFAULT_CONFIG
-    # pre-resolve the force-number membership set once (hot loop: per record)
-    cfg._force_set = set(cfg.force_number_fields)
+    force = frozenset(cfg.force_number_fields)
     names = LOG_SCHEMA.fieldNames()
     schema = LOG_SCHEMA
     if reject_column is not None:
@@ -547,7 +652,7 @@ def decode_dataframe(
             now = datetime.now(timezone.utc).replace(tzinfo=None)
             rejects: list[str] | None = [] if reject_column else None
             rows = list(decode_json_lines(
-                batch[value_column].tolist(), cfg, now, rejects))
+                batch[value_column].tolist(), cfg, now, rejects, force))
             if not rows and not rejects:
                 continue
             out = {name: [r[name] for r in rows] for name in names}

@@ -9,20 +9,32 @@ connection pool (clickhouse.go:137-139).
 Engine mapping: the micro-batch *is* the buffer (S5 — no code), so the sink
 is a ``foreachBatch``-compatible callable that writes each decoded batch via
 ``foreachPartition`` — one DBAPI connection per partition, executemany, one
-commit. The connection factory is injected so tests (and environments without
-a ClickHouse server or driver) run against a fake; failure raises, which in
-Structured Streaming leaves the batch uncommitted in the checkpoint -> replay
--> at-least-once, matching the reference's FLB_ERROR retry contract
-(main.go:364-369, T4).
+commit. One partition writer takes INSERT tuples from one of two feeders:
+
+* the msgpack feeder, for the frame ``decode.decode_msgpack_dataframe``
+  returned, untouched and not persisted: the partition decodes its raw
+  chunks in the same Python worker that INSERTs them, one event at a time,
+  like the reference's decode-and-append loop (main.go:237-377);
+* the Row feeder, for any other frame (JSON batches, a persisted or derived
+  frame): the rows come from the JVM in ``LOG_COLUMNS`` order.
+
+Both deliver the same tuples over the same partitions, so the INSERTs of a
+batch do not depend on the feeder (``decode.python_rows``). The connection
+factory is injected so tests (and environments without a ClickHouse server
+or driver) run against a fake; failure raises, which in Structured Streaming
+leaves the batch uncommitted in the checkpoint -> replay -> at-least-once,
+matching the reference's FLB_ERROR retry contract (main.go:364-369, T4).
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 
 from .config import EngineConfig
+from .decode import python_rows
 from .schema import LOG_COLUMNS
 
 # Column list and order of the reference INSERT statement, clickhouse.go:76.
@@ -53,6 +65,13 @@ class ClickHouseSink:
     to executors and invoked once per partition (the Spark analogue of the
     reference's per-flush transaction, with parallelism across partitions;
     pool bounds map to max_open_conns, clickhouse.go:137-139).
+
+    :meth:`write_batch` runs one partition writer over one of two feeders.
+    A frame that ``decode.decode_msgpack_dataframe`` returned, untouched
+    and not persisted, is decoded inside the writer's own partitions, from
+    its raw chunks, straight into INSERT tuples. The capability travels
+    with the frame, so a sink wrapped in a closure (tracing, retries) gets
+    it too. Every other frame is read as JVM Rows.
     """
 
     # write_batch runs foreachPartition on the RDD, which fires no Dataset
@@ -95,7 +114,7 @@ class ClickHouseSink:
         factory = self.connection_factory
         batch_size = max(int(self.config.batch_size), 1)
 
-        def write_partition(rows: Iterator[Row]) -> None:
+        def write_partition(rows: Iterator[tuple]) -> None:
             conn = None
             buffered: list[tuple] = []
 
@@ -109,7 +128,7 @@ class ClickHouseSink:
                 for row in rows:
                     if conn is None:
                         conn = factory()
-                    buffered.append(tuple(row))
+                    buffered.append(row)
                     if len(buffered) >= batch_size:
                         flush()  # size-triggered: don't wait for the end
                 if buffered:
@@ -122,9 +141,13 @@ class ClickHouseSink:
                 if conn is not None:
                     conn.close()
 
-        # rows arrive in INSERT column order, so each becomes its tuple by
-        # position (a lookup by name searches the Row's fields per column)
-        df.select(*LOG_COLUMNS).foreachPartition(write_partition)
+        feeder = python_rows(df)
+        if feeder is None:
+            # rows arrive in INSERT column order, so each becomes its tuple
+            # by position (a lookup by name searches the Row's fields)
+            feeder = df.select(*LOG_COLUMNS).rdd, partial(map, tuple)
+        source, rows_of = feeder
+        source.foreachPartition(lambda part: write_partition(rows_of(part)))
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         self.write_batch(df, batch_id)

@@ -14,6 +14,15 @@ buffer -> size-or-time flush -> batched INSERT. Spark mapping (SURVEY §3.2):
       trigger(processingTime=flush_interval)                    <- T1
       checkpointLocation=...                                    <- T2/T4
 
+A msgpack batch (``input_format="msgpack"``) goes through
+``decode_msgpack_dataframe`` instead. Handed to ``ClickHouseSink`` as
+decoded (no metrics, so nothing observes or persists it), it is decoded
+inside the sink's own ``foreachPartition``: each event becomes its INSERT
+tuple in the Python worker that unpacked it, the reference's one loop
+(main.go:237-377), in one Spark job per batch. With metrics on, the
+decoded frame is persisted or observed for the counts, and the sink reads
+it as Rows.
+
 Delivery semantics: at-least-once, same as the reference (flush failure ->
 FLB_ERROR -> Fluent Bit redelivers the chunk, main.go:364-369). Structured
 Streaming's checkpoint replays an uncommitted micro-batch after failure; the

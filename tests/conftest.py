@@ -13,9 +13,9 @@ TABLES = [
 ]
 
 
-def job_count(spark, action):
-    """Spark jobs ``action()`` starts, read from the status tracker under
-    a job group of its own."""
+def job_ids(spark, action) -> list[int]:
+    """Ids of the Spark jobs ``action()`` starts, read from the status
+    tracker under a job group of its own."""
     import uuid
 
     sc = spark.sparkContext
@@ -26,7 +26,31 @@ def job_count(spark, action):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def job_count(spark, action):
+    """Spark jobs ``action()`` starts."""
+    return len(job_ids(spark, action))
+
+
+def stage_operations(spark, job_id) -> set[str]:
+    """Names of the operation clusters (SQL operators such as
+    ``MapInPandas``, RDD transformations) in the stages of one job, from
+    the status store's operation graphs."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    names: set[str] = set()
+
+    def walk(cluster):
+        names.add(cluster.name())
+        children = cluster.childClusters().iterator()
+        while children.hasNext():
+            walk(children.next())
+
+    for stage in sc.statusTracker().getJobInfo(job_id).stageIds:
+        walk(store.operationGraphForStage(stage).rootCluster())
+    return names
 
 
 def compiled_classes(spark) -> int:

@@ -325,3 +325,38 @@ def test_nesting_past_the_depth_bound_is_rejected_before_parsing(monkeypatch):
     over = nested(MAX_JSON_DEPTH + 1)
     rows = list(decode_json_lines([over], rejects=rejects))
     assert rows == [] and rejects == [over]
+
+
+def test_force_number_set_follows_the_config_between_decodes(spark):
+    """Every decode call reads ``force_number_fields`` as it is then, and no
+    decode leaves state on the caller's config: changing the fields
+    between two decodes changes which strings become numbers."""
+    from klogs_spark.decode import (
+        decode_dataframe,
+        decode_msgpack_dataframe,
+        decode_msgpack_events,
+    )
+    from klogs_spark.msgpack_lite import pack
+
+    line = '{"ts": 0, "record": {"a": "1.5", "b": "2.5"}}'
+    chunk = pack([0, {"a": "1.5", "b": "2.5"}])
+    text = spark.createDataFrame([(line,)], "value string")
+    binary = spark.createDataFrame([(chunk,)], "content binary")
+    cfg = EngineConfig(force_number_fields=["a"])
+
+    def decodes():
+        return [
+            next(decode_json_lines([line], cfg, NOW)),
+            next(decode_msgpack_events([chunk], cfg, NOW)),
+            decode_dataframe(text, cfg).first().asDict(),
+            decode_msgpack_dataframe(binary, cfg).first().asDict(),
+        ]
+
+    for row in decodes():
+        assert row["fields_number"] == {"a": 1.5}
+        assert row["fields_string"] == {"b": "2.5"}
+    cfg.force_number_fields = ["b"]
+    for row in decodes():
+        assert row["fields_number"] == {"b": 2.5}
+        assert row["fields_string"] == {"a": "1.5"}
+    assert vars(cfg) == vars(EngineConfig(force_number_fields=["b"]))

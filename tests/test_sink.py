@@ -156,6 +156,96 @@ def test_write_batch_failure_propagates(spark, tmp_path):
     assert read_spool(spool) == (set(), [])
 
 
+def _feeder_chunks():
+    """msgpack chunks covering every event shape the decode handles, plus
+    one malformed and one empty chunk."""
+    from klogs_spark.msgpack_lite import pack, pack_flbtime
+
+    rec = {
+        "kubernetes": {"namespace_name": "ns", "pod_name": "p",
+                       "labels": {"app": "web", "tier": None}},
+        "log": "hello",
+        "duration": "1.25",             # force-number string
+        "http.status": 200,             # dotted key (force_underscores)
+        "tags": ["a", {"b": [1, None]}],
+        "gone": None,
+    }
+    flb = bytes([0x92]) + pack_flbtime(1755043200, 250_000_000) + pack(rec)
+    # Fluent Bit >=2.1: [[ts, metadata], record]
+    nested = (bytes([0x92]) + bytes([0x92]) + pack_flbtime(1736000000)
+              + pack({"meta": 1}) + pack({**rec, "log": "nested"}))
+    plain = b"".join(pack([1755043200 + i, {"log": f"plain-{i}", "n": i}])
+                     for i in range(4))
+    # 2024-11-03 01:30 is ambiguous in America/New_York
+    ambiguous = pack([1730597400, {"log": "fall-back", "duration": "x"}])
+    truncated = pack([1755043300, {"log": "kept"}]) + pack(rec)[:-3]
+    return [flb, nested, plain, ambiguous, truncated, b"\xc1\x00", b""]
+
+
+def _tuple_key(row):
+    return repr(tuple(sorted(v.items()) if isinstance(v, dict) else v
+                      for v in row))
+
+
+def _feed(spark, tmp_path, name, frame, batch_size):
+    from collections import Counter
+
+    spool = str(tmp_path / name)
+    os.makedirs(spool)
+    sink = ClickHouseSink(EngineConfig(batch_size=batch_size),
+                          make_factory(spool))
+    sink(frame, 0)
+    rows, inserts = [], Counter()
+    for name in os.listdir(spool):
+        with open(os.path.join(spool, name), "rb") as f:
+            for _, batch in pickle.load(f):
+                rows.extend(batch)
+                inserts[len(batch)] += 1
+    return sorted(rows, key=_tuple_key), inserts
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+def test_msgpack_feeders_insert_the_same_tuples(spark, tmp_path, zone):
+    """An untouched decoded msgpack frame is decoded inside the sink's own
+    partitions; a derived or persisted one is read as JVM Rows. Both
+    INSERT the same tuples, field by field, in the same number of
+    INSERTs, under the UTC session zone and a non-UTC one."""
+    from klogs_spark.decode import decode_msgpack_dataframe, python_rows
+
+    cfg = EngineConfig(force_number_fields=["duration"],
+                       force_underscores=True)
+    chunks = _feeder_chunks()
+    # more partitions than chunks: some partitions are empty
+    width = spark.sparkContext.defaultParallelism + len(chunks)
+    raw = spark.createDataFrame([(c,) for c in chunks],
+                                "content binary").repartition(width)
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        fused = decode_msgpack_dataframe(raw, cfg)
+        derived = decode_msgpack_dataframe(raw, cfg).select("*")
+        assert python_rows(fused) is not None
+        assert python_rows(derived) is None
+        got, inserts = _feed(spark, tmp_path, "fused", fused, 2)
+        want, want_inserts = _feed(spark, tmp_path, "rows", derived, 2)
+        persisted = decode_msgpack_dataframe(raw, cfg).persist()
+        try:
+            assert python_rows(persisted) is None
+            cached, _ = _feed(spark, tmp_path, "cached", persisted, 2)
+        finally:
+            persisted.unpersist()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert len(want) == 1 + 1 + 4 + 1 + 1
+    assert got == want == cached
+    assert inserts == want_inserts
+    first = next(r for r in got if r[9] == "hello")
+    assert first[7] == {"tags_0": "a"}
+    assert first[8] == {"duration": 1.25, "http_status": 200.0,
+                        "tags_1_b_0": 1.0}
+    assert first[1:5] == (None, "ns", "web", "p")
+
+
 def make_flush_recording_factory(spool_dir):
     """Fake DBAPI that spools ONE file per commit, recording the row count
     of every executemany since the previous commit — the per-flush

@@ -819,12 +819,14 @@ def test_batch_spark_job_counts(spark, tmp_path):
     sink runs 3 Spark jobs (the widen of the input splits, the decode
     into the write's rebalance, the sorted write) and persists nothing:
     its reject lines and counts ride the write. A msgpack batch into
-    ClickHouseSink runs its one foreachPartition job."""
+    ClickHouseSink runs its one foreachPartition job, which decodes the
+    chunks in the sink's own Python worker: its stage has no
+    MapInPandas."""
     from klogs_spark.metrics import IngestMetrics
     from klogs_spark.msgpack_lite import pack
     from klogs_spark.sink_clickhouse import ClickHouseSink
     from klogs_spark.stream import _make_batch_processor, exactly_once_sink
-    from tests.conftest import job_count
+    from tests.conftest import job_count, job_ids, stage_operations
 
     src = _write_lines(tmp_path / "raw", [json.dumps(ev) for ev in EVENTS]
                        + list(REJECT_LINES.values()))
@@ -857,5 +859,7 @@ def test_batch_spark_job_counts(spark, tmp_path):
         None, input_format="msgpack")
     batch = (spark.read.format("binaryFile").load(str(chunks))
              .select("content"))
-    assert job_count(spark, lambda: process(batch, 0)) == 1
+    jobs = job_ids(spark, lambda: process(batch, 0))
+    assert len(jobs) == 1
+    assert "MapInPandas" not in stage_operations(spark, jobs[0])
     assert len(read_spool(str(spool))[1]) == n_chunks
