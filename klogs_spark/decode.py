@@ -343,7 +343,6 @@ def decode_json_lines(
     config: EngineConfig | None = None,
     now: datetime | None = None,
     rejects: list[str] | None = None,
-    force: AbstractSet[str] | None = None,
 ) -> Iterator[dict[str, Any]]:
     """Decode raw JSON-lines events into logs rows.
 
@@ -352,12 +351,10 @@ def decode_json_lines(
     deliberate deviation from the reference, which aborts the whole chunk
     (main.go:251-254); documented in SURVEY §7 step 1. Undecodable lines are
     appended to ``rejects`` when provided (the dead-letter channel).
-    ``force`` is the force-number set, built here from ``config`` unless
-    the caller passes the one it built.
     """
     config = config or _DEFAULT_CONFIG
-    if force is None:
-        force = frozenset(config.force_number_fields)
+    # the force-number set as the config reads now, once per call
+    force = frozenset(config.force_number_fields)
     if now is None:
         # one clock read per decode call, not per event — the reference's
         # fallback granularity is the flush anyway (main.go:99-102), and
@@ -399,7 +396,6 @@ def decode_msgpack_events(
     config: EngineConfig | None = None,
     now: datetime | None = None,
     bad_chunks: list[bytes] | None = None,
-    force: AbstractSet[str] | None = None,
 ) -> Iterator[dict[str, Any]]:
     """Decode Fluent Bit msgpack chunks into logs rows.
 
@@ -410,14 +406,12 @@ def decode_msgpack_events(
     ``extract_timestamp`` (main.go:85-103). A malformed chunk stops at the
     failure point and keeps the events decoded so far (the reference
     warn-and-drops the remainder the same way, main.go:251-254); fully
-    undecodable chunks land in ``bad_chunks`` when provided. ``force`` is
-    as in :func:`decode_json_lines`.
+    undecodable chunks land in ``bad_chunks`` when provided.
     """
     from .msgpack_lite import MsgpackError, unpack_stream
 
     config = config or _DEFAULT_CONFIG
-    if force is None:
-        force = frozenset(config.force_number_fields)
+    force = frozenset(config.force_number_fields)  # as in decode_json_lines
     if now is None:
         # one clock read per decode call, not per event (see
         # decode_json_lines — same flush-granularity rationale)
@@ -464,25 +458,26 @@ def decode_msgpack_dataframe(
     :func:`decode_msgpack_events` that yields ``LOG_COLUMNS``-ordered
     tuples (:func:`python_rows`). A sink that writes from a Python worker
     anyway (``sink_clickhouse.ClickHouseSink``) decodes each chunk there
-    and skips the pandas frame, the Arrow batch and the JVM rows. Both
-    ways read ``config``'s force-number set as it is at this call.
+    and skips the pandas frame, the Arrow batch and the JVM rows.
     """
     cfg = config or _DEFAULT_CONFIG
-    force = frozenset(cfg.force_number_fields)
 
+    rdd = None
     if not raw.isStreaming:
         parallelism = raw.sparkSession.sparkContext.defaultParallelism
-        # DataFrame.rdd is cached per frame, so when no widening is needed
-        # python_rows feeds the sink from the RDD this probe planned
-        if raw.rdd.getNumPartitions() < parallelism:
+        # DataFrame.rdd plans anew on every access: keep the probe's RDD
+        # for python_rows unless the widening makes a new frame
+        rdd = raw.rdd
+        if rdd.getNumPartitions() < parallelism:
             raw = raw.repartition(parallelism)
+            rdd = None
 
     def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for batch in batches:
             rows = list(decode_msgpack_events(
-                batch[content_column].tolist(), cfg, force=force))
+                batch[content_column].tolist(), cfg))
             if not rows:
                 continue
             yield pd.DataFrame(
@@ -492,7 +487,7 @@ def decode_msgpack_dataframe(
     decoded = raw.mapInPandas(_decode, schema=LOG_SCHEMA)
     if not raw.isStreaming and content_column in raw.columns:
         decoded._python_rows = (
-            raw, raw.columns.index(content_column), cfg, force)
+            raw, rdd, raw.columns.index(content_column), cfg)
     return decoded
 
 
@@ -518,9 +513,10 @@ def python_rows(
         df.sparkSession.conf.get("spark.sql.session.timeZone"))
     if zone is None:
         return None
-    raw, index, cfg, force = made
-    return raw.rdd, partial(_log_tuples, index=index, cfg=cfg, force=force,
-                            zone=zone)
+    raw, rdd, index, cfg = made
+    if rdd is None:
+        rdd = raw.rdd
+    return rdd, partial(_log_tuples, index=index, cfg=cfg, zone=zone)
 
 
 def _session_zone(name: str) -> tzinfo | None:
@@ -540,10 +536,13 @@ def _log_tuples(
     rows: Iterator[Any],
     index: int,
     cfg: EngineConfig,
-    force: AbstractSet[str],
     zone: tzinfo,
 ) -> Iterator[tuple]:
     """INSERT tuples of the msgpack chunks in ``rows`` (``rows[i][index]``).
+
+    A chunk is read as ``bytes``: a Row may carry a binary value as
+    ``bytearray`` (``spark.sql.execution.pyspark.binaryAsBytes=false``),
+    which the decoder's string cache cannot hash.
 
     The timestamp is what the Row path delivers. ``mapInPandas`` reads the
     decode's naive datetime in the session time zone, choosing standard
@@ -558,7 +557,7 @@ def _log_tuples(
     values = itemgetter(*LOG_COLUMNS)
     utc = zone is timezone.utc
     for row in decode_msgpack_events(
-            (r[index] for r in rows), cfg, force=force):
+            (bytes(r[index]) for r in rows), cfg):
         ts = row["timestamp"]
         if utc:
             us = (ts - _EPOCH) // _US
@@ -618,7 +617,6 @@ def decode_dataframe(
       per partition.
     """
     cfg = config or _DEFAULT_CONFIG
-    force = frozenset(cfg.force_number_fields)
     names = LOG_SCHEMA.fieldNames()
     schema = LOG_SCHEMA
     if reject_column is not None:
@@ -652,7 +650,7 @@ def decode_dataframe(
             now = datetime.now(timezone.utc).replace(tzinfo=None)
             rejects: list[str] | None = [] if reject_column else None
             rows = list(decode_json_lines(
-                batch[value_column].tolist(), cfg, now, rejects, force))
+                batch[value_column].tolist(), cfg, now, rejects))
             if not rows and not rejects:
                 continue
             out = {name: [r[name] for r in rows] for name in names}

@@ -142,7 +142,6 @@ DRIVER_VERIFIED: dict = {
     "events_wau_hll": "49c57b1f4ff9",
     "ingest_cdx_crawl_diff": "3ca30138d573",
     "ingest_decode_pipeline": "f583fa5857e6",
-    "ingest_msgpack_pipeline": "c13826520a50",
     "ingest_orc_roundtrip": "c3db65f73ad1",
     "ingest_warc_cdx": "7197cbd39b1c",
     "ingest_warc_revisit": "528558422121",

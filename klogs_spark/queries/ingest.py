@@ -901,7 +901,6 @@ def q_ingest_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         from klogs_spark.msgpack_lite import pack_event
 
         cfg = EngineConfig()
-        cfg._force_set = set(cfg.force_number_fields)
         names = LOG_SCHEMA.fieldNames()
         for pdf in batches:
             if not len(pdf):

@@ -204,12 +204,18 @@ def _feed(spark, tmp_path, name, frame, batch_size):
     return sorted(rows, key=_tuple_key), inserts
 
 
-@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
-def test_msgpack_feeders_insert_the_same_tuples(spark, tmp_path, zone):
+@pytest.mark.parametrize("zone, binary_as_bytes", [
+    ("UTC", "true"),
+    ("America/New_York", "true"),
+    ("UTC", "false"),
+])
+def test_msgpack_feeders_insert_the_same_tuples(
+        spark, tmp_path, zone, binary_as_bytes):
     """An untouched decoded msgpack frame is decoded inside the sink's own
     partitions; a derived or persisted one is read as JVM Rows. Both
     INSERT the same tuples, field by field, in the same number of
-    INSERTs, under the UTC session zone and a non-UTC one."""
+    INSERTs, under the UTC session zone and a non-UTC one, and when a
+    Python worker receives binary values as ``bytearray``."""
     from klogs_spark.decode import decode_msgpack_dataframe, python_rows
 
     cfg = EngineConfig(force_number_fields=["duration"],
@@ -219,8 +225,11 @@ def test_msgpack_feeders_insert_the_same_tuples(spark, tmp_path, zone):
     width = spark.sparkContext.defaultParallelism + len(chunks)
     raw = spark.createDataFrame([(c,) for c in chunks],
                                 "content binary").repartition(width)
-    before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", zone)
+    confs = {"spark.sql.session.timeZone": zone,
+             "spark.sql.execution.pyspark.binaryAsBytes": binary_as_bytes}
+    before = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         fused = decode_msgpack_dataframe(raw, cfg)
         derived = decode_msgpack_dataframe(raw, cfg).select("*")
@@ -235,7 +244,8 @@ def test_msgpack_feeders_insert_the_same_tuples(spark, tmp_path, zone):
         finally:
             persisted.unpersist()
     finally:
-        spark.conf.set("spark.sql.session.timeZone", before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
     assert len(want) == 1 + 1 + 4 + 1 + 1
     assert got == want == cached
     assert inserts == want_inserts
