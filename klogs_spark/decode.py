@@ -441,10 +441,31 @@ def decode_msgpack_events(
             continue
 
 
+# The input column each decode reads: text lines (as spark.read.text and
+# the text stream source name them) and msgpack chunk blobs
+VALUE_COLUMN = "value"
+CONTENT_COLUMN = "content"
+
+
+def _widened(raw: DataFrame) -> tuple[DataFrame, "RDD | None"]:
+    """``raw`` spread across the cluster width, and the RDD of the width
+    probe when no widening was needed (None otherwise). Batch inputs often
+    arrive as a handful of large files while the decode is CPU-bound
+    Python; streaming inputs are partitioned by the source rate instead
+    and pass through. ``DataFrame.rdd`` plans anew on every access, so a
+    caller that needs the input's RDD later keeps the probe's."""
+    if raw.isStreaming:
+        return raw, None
+    parallelism = raw.sparkSession.sparkContext.defaultParallelism
+    rdd = raw.rdd
+    if rdd.getNumPartitions() < parallelism:
+        return raw.repartition(parallelism), None
+    return raw, rdd
+
+
 def decode_msgpack_dataframe(
     raw: DataFrame,
     config: EngineConfig | None = None,
-    content_column: str = "content",
 ) -> DataFrame:
     """Vectorized msgpack decode: DataFrame[content: binary] -> LOG_SCHEMA.
 
@@ -461,23 +482,14 @@ def decode_msgpack_dataframe(
     and skips the pandas frame, the Arrow batch and the JVM rows.
     """
     cfg = config or _DEFAULT_CONFIG
-
-    rdd = None
-    if not raw.isStreaming:
-        parallelism = raw.sparkSession.sparkContext.defaultParallelism
-        # DataFrame.rdd plans anew on every access: keep the probe's RDD
-        # for python_rows unless the widening makes a new frame
-        rdd = raw.rdd
-        if rdd.getNumPartitions() < parallelism:
-            raw = raw.repartition(parallelism)
-            rdd = None
+    raw, rdd = _widened(raw)
 
     def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for batch in batches:
             rows = list(decode_msgpack_events(
-                batch[content_column].tolist(), cfg))
+                batch[CONTENT_COLUMN].tolist(), cfg))
             if not rows:
                 continue
             yield pd.DataFrame(
@@ -485,9 +497,9 @@ def decode_msgpack_dataframe(
             )
 
     decoded = raw.mapInPandas(_decode, schema=LOG_SCHEMA)
-    if not raw.isStreaming and content_column in raw.columns:
+    if not raw.isStreaming and CONTENT_COLUMN in raw.columns:
         decoded._python_rows = (
-            raw, rdd, raw.columns.index(content_column), cfg)
+            raw, rdd, raw.columns.index(CONTENT_COLUMN), cfg)
     return decoded
 
 
@@ -571,13 +583,20 @@ def _log_tuples(
 # reject rows past it are flagged spilled (decode_dataframe)
 OBSERVED_REJECT_BYTES = 1 << 20
 
+# Columns decode_dataframe(rejects=True) adds: a rejected line, whether it
+# came past its task's OBSERVED_REJECT_BYTES, and the partition and task
+# attempt that decoded the row
+REJECT = "_reject"
+REJECT_SPILLED = f"{REJECT}_spilled"
+REJECT_PARTITION = f"{REJECT}_partition"
+REJECT_ATTEMPT = f"{REJECT}_attempt"
+
 
 def decode_dataframe(
     raw: DataFrame,
     config: EngineConfig | None = None,
-    value_column: str = "value",
     ensure_width: bool = True,
-    reject_column: str | None = None,
+    rejects: bool = False,
 ) -> DataFrame:
     """Vectorized decode: DataFrame[value: string] -> DataFrame[LOG_SCHEMA].
 
@@ -593,23 +612,24 @@ def decode_dataframe(
     ``decode_dataframe`` call over a one-file text frame), pure waste when
     the width is known.
 
-    ``reject_column`` keeps the lines :func:`decode_json_lines` rejects
+    ``rejects=True`` keeps the lines :func:`decode_json_lines` rejects
     (non-JSON, non-object, nested past :data:`MAX_JSON_DEPTH`) from the same
-    pass: the output gains that nullable string column, null on decoded
-    rows and the raw line on reject rows, whose other columns are
-    placeholders (null, and the batch clock as ``timestamp``). Callers
-    split the two row kinds on it (``stream``'s dead-letter channel).
+    pass: the output gains the nullable string column :data:`REJECT`,
+    null on decoded rows and the raw line on reject rows, whose other
+    columns are placeholders (null, and the batch clock as ``timestamp``).
+    Callers split the two row kinds on it (``stream``'s dead-letter
+    channel).
 
-    Three more columns, named after ``reject_column``, let a caller
-    collect the reject lines to the driver with bounded memory and
-    without double-counting a decode task that Spark ran twice:
+    Three more columns let a caller collect the reject lines to the
+    driver with bounded memory and without double-counting a decode task
+    that Spark ran twice:
 
-    - ``<reject_column>_spilled`` (boolean) is true on the reject rows
+    - :data:`REJECT_SPILLED` (boolean) is true on the reject rows
       that come after the first :data:`OBSERVED_REJECT_BYTES` bytes
       (UTF-8) of their task's rejects, false on every other row. A
       collected list is whole only while no row is flagged, so driver
       memory stays within the budget times the number of tasks.
-    - ``<reject_column>_partition`` (int) and ``<reject_column>_attempt``
+    - :data:`REJECT_PARTITION` (int) and :data:`REJECT_ATTEMPT`
       (long) are the decode task's partition and attempt id
       (``TaskContext.partitionId``/``taskAttemptId``), the same on every
       row of a task. A stage retry re-runs a finished task over the same
@@ -619,25 +639,16 @@ def decode_dataframe(
     cfg = config or _DEFAULT_CONFIG
     names = LOG_SCHEMA.fieldNames()
     schema = LOG_SCHEMA
-    if reject_column is not None:
-        spill_column = f"{reject_column}_spilled"
-        partition_column = f"{reject_column}_partition"
-        attempt_column = f"{reject_column}_attempt"
+    if rejects:
         schema = StructType(LOG_SCHEMA.fields + [
-            StructField(reject_column, StringType()),
-            StructField(spill_column, BooleanType(), False),
-            StructField(partition_column, IntegerType(), False),
-            StructField(attempt_column, LongType(), False),
+            StructField(REJECT, StringType()),
+            StructField(REJECT_SPILLED, BooleanType(), False),
+            StructField(REJECT_PARTITION, IntegerType(), False),
+            StructField(REJECT_ATTEMPT, LongType(), False),
         ])
     budget = OBSERVED_REJECT_BYTES
-
-    if not raw.isStreaming and ensure_width:
-        # batch inputs often arrive as a handful of large files; the decode
-        # is CPU-bound Python, so spread it across the cluster width first
-        # (streaming inputs are partitioned by the source rate instead)
-        parallelism = raw.sparkSession.sparkContext.defaultParallelism
-        if raw.rdd.getNumPartitions() < parallelism:
-            raw = raw.repartition(parallelism)
+    if ensure_width:
+        raw, _ = _widened(raw)
 
     def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -648,25 +659,25 @@ def decode_dataframe(
         spent = 0  # reject bytes of this task so far
         for batch in batches:
             now = datetime.now(timezone.utc).replace(tzinfo=None)
-            rejects: list[str] | None = [] if reject_column else None
+            bad: list[str] | None = [] if rejects else None
             rows = list(decode_json_lines(
-                batch[value_column].tolist(), cfg, now, rejects))
-            if not rows and not rejects:
+                batch[VALUE_COLUMN].tolist(), cfg, now, bad))
+            if not rows and not bad:
                 continue
             out = {name: [r[name] for r in rows] for name in names}
-            if rejects is not None:
+            if bad is not None:
                 for name in names:
                     fill = now if name == "timestamp" else None
-                    out[name] += [fill] * len(rejects)
-                out[reject_column] = [None] * len(rows) + rejects
+                    out[name] += [fill] * len(bad)
+                out[REJECT] = [None] * len(rows) + bad
                 spilled = []
-                for line in rejects:
+                for line in bad:
                     spent += len(line.encode("utf-8", "replace"))
                     spilled.append(spent > budget)
-                out[spill_column] = [False] * len(rows) + spilled
-                n = len(rows) + len(rejects)
-                out[partition_column] = [partition] * n
-                out[attempt_column] = [attempt] * n
+                out[REJECT_SPILLED] = [False] * len(rows) + spilled
+                n = len(rows) + len(bad)
+                out[REJECT_PARTITION] = [partition] * n
+                out[REJECT_ATTEMPT] = [attempt] * n
             yield pd.DataFrame(out)
 
     return raw.mapInPandas(_decode, schema=schema)

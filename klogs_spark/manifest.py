@@ -1300,48 +1300,6 @@ def _finish_rewrite(
     return version
 
 
-def _restore_promotions(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
-    """Re-derive the layout's promoted physical columns on a COW rewrite's
-    row set. A promoted column is BY DEFINITION ``fields_string[key]`` at
-    write time (table.write_logs_promoted / transform.promote_string_field),
-    so recomputing from the map is always exact — and it is the only safe
-    source: on tables marked ``promotions_deficient`` the base snapshot
-    read returns NULL for the column on pre-promotion rows (the table's
-    known schema resolves the column, but plain-history files have no
-    physical values), while selecting only
-    LOG_COLUMNS would rewrite carried-over rows with the promoted column
-    DROPPED or NULL — after a merge, promoted-column reads and
-    ``where_exists`` fast paths would silently return wrong results for
-    every carried row. Dropping any existing copy first keeps this
-    idempotent whether or not the input already carries the column."""
-    from .table import read_layout
-    from .transform import promote_string_field
-
-    promos = read_layout(spark, path).get("promotions") or {}
-    for key, column in promos.items():
-        if column in df.columns:
-            df = df.drop(column)
-        df = promote_string_field(df, key, column)
-    return df
-
-
-def _append_in_layout(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Append rewrite output as NEW files honoring the table's recorded
-    sort layout (cluster key or z-order, `table._layout_sorted`), never
-    touching existing files. The rebalance hint keeps writer parallelism
-    and small-file hygiene identical to `table.write_logs`."""
-    from .table import _layout_sorted, read_layout
-
-    (
-        _layout_sorted(
-            df.hint("rebalance", PARTITION_COLUMN), read_layout(spark, path)
-        )
-        .write.mode("append")
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(path)
-    )
-
-
 def _rewrite_days(
     spark: SparkSession,
     path: str,
@@ -1358,9 +1316,10 @@ def _rewrite_days(
     ``rows`` is the complete new content of the ``day_dirs`` partitions
     (``date=...`` names) of snapshot ``base_version``, whose file list is
     ``live``. The rewrite journals its intent (:func:`_begin_rewrite`),
-    appends ``rows`` as NEW files in the recorded sort layout with the
-    promoted columns re-derived from the maps (:func:`_restore_promotions`,
-    :func:`_append_in_layout`), and publishes ``live`` minus every file of
+    appends ``rows`` as NEW files through the table's one writer
+    (``table._write_in_layout``: the marker's sort, the promoted columns
+    re-derived from the maps; no marker is written, so a table without
+    one keeps inferring its schema), and publishes ``live`` minus every file of
     ``day_dirs`` plus the new files (:func:`_finish_rewrite`, optimistic
     concurrency). ``rows`` None writes nothing: the days just leave the
     file list. The replaced files stay on disk for pinned readers until
@@ -1373,7 +1332,9 @@ def _rewrite_days(
     before any append (:func:`_write_dv_generation`)."""
     before, tok = journal or _begin_rewrite(spark, path, op, base_version)
     if rows is not None:
-        _append_in_layout(spark, _restore_promotions(spark, path, rows), path)
+        from .table import _write_in_layout, read_layout
+
+        _write_in_layout(rows, path, read_layout(spark, path), "append")
     replaced = {f for f in live if _entry_day_dir(f) in day_dirs}
     return _finish_rewrite(
         spark, path, base_version, before, tok, set(live) - replaced,
@@ -1486,7 +1447,7 @@ def cow_update_where(
     delete+insert and cancels carried rows.
 
     Promoted physical columns re-derive from the (possibly updated) map
-    via ``_restore_promotions`` — updating ``fields_string`` transparently
+    in the rewrite's write — updating ``fields_string`` transparently
     refreshes its promoted column. Updating ``timestamp`` or the
     partition column is refused: the rewrite is partition-scoped and a
     date move is a delete+insert (that is :func:`cow_merge_upsert`'s

@@ -48,7 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from .config import EngineConfig
-from .decode import decode_dataframe
+from .decode import (
+    REJECT, REJECT_ATTEMPT, REJECT_PARTITION, REJECT_SPILLED, decode_dataframe,
+)
 from .table import write_logs
 
 
@@ -203,7 +205,7 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
     can never be committed under the marker.
     """
     from .manifest import _must
-    from .table import _hadoop_fs
+    from .table import _hadoop_fs, _write_in_layout, read_layout
 
     def sink_fn(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -222,8 +224,10 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
                         _must(fs.delete(f.getPath(), False),
                               "exactly_once_sink purge-delete", f.getPath())
         staging = hpath_cls(root, f"_staging/batch-{batch_id}")
-        write_logs(batch, f"{path}/_staging/batch-{batch_id}", mode="overwrite",
-                   mark_layout=False)
+        # staged in the table's own layout, so the published files are
+        # the ones write_logs would have appended; staging gets no marker
+        _write_in_layout(batch, f"{path}/_staging/batch-{batch_id}",
+                         read_layout(spark, path), "overwrite")
         for part in fs.listStatus(staging):
             if not (part.isDirectory()
                     and part.getPath().getName().startswith("date=")):
@@ -237,8 +241,7 @@ def exactly_once_sink(path: str) -> Callable[[DataFrame, int], None]:
                     _must(fs.rename(f.getPath(),
                                     hpath_cls(target_dir, prefix + name)),
                           "exactly_once_sink publish-rename", f.getPath())
-        _must(fs.mkdirs(hpath_cls(root, "_commits")),
-              "exactly_once_sink mkdirs", "_commits")
+        # create makes the missing _commits directory and raises on failure
         fs.create(marker, True).close()
         # staging cleanup is best-effort: the marker is already durable, so a
         # false here must NOT fail (and replay) an already-published batch —
@@ -259,15 +262,6 @@ def _resolve_sink(
 
         return sink_fn
     return sink
-
-
-# Columns of decode_dataframe's output: a rejected line, whether it came
-# past its task's budget of reject bytes the driver may collect, and the
-# partition and task attempt that decoded the row
-_REJECT = "_reject"
-_SPILLED = f"{_REJECT}_spilled"
-_PARTITION = f"{_REJECT}_partition"
-_ATTEMPT = f"{_REJECT}_attempt"
 
 
 def _observed(obs, spark: SparkSession) -> dict | None:
@@ -320,7 +314,7 @@ def _write_dead_letters(dead: DataFrame, path: str, batch_id: int,
     import uuid
 
     from .manifest import _must
-    from .table import _hadoop_fs
+    from .table import _hadoop_fs, _write_in_layout, read_layout
 
     fs, hpath_cls, root = _hadoop_fs(dead.sparkSession, path)
     _must(fs.mkdirs(root), "dead-letter mkdirs", root)
@@ -451,28 +445,30 @@ def _make_batch_processor(
                 decoded = decoded.observe(
                     rows_obs, F.count(F.lit(1)).alias("n"))
         else:
-            split = decode_dataframe(raw, cfg, reject_column=_REJECT)
+            split = decode_dataframe(raw, cfg, rejects=True)
             if from_cache:
                 split = cache(split)
             if rows_obs is not None:
-                aggs = [F.count(F.when(F.col(_REJECT).isNull(), 1))
+                aggs = [F.count(F.when(F.col(REJECT).isNull(), 1))
                         .alias("n")]
                 if dead_letter_dir:
-                    observable = F.col(_REJECT).isNotNull() & ~F.col(_SPILLED)
+                    observable = (F.col(REJECT).isNotNull()
+                                  & ~F.col(REJECT_SPILLED))
                     aggs += [
                         F.collect_list(F.when(observable, F.struct(
-                            F.col(_PARTITION).alias("p"),
-                            F.col(_ATTEMPT).alias("a"),
-                            F.col(_REJECT).alias("line"),
+                            F.col(REJECT_PARTITION).alias("p"),
+                            F.col(REJECT_ATTEMPT).alias("a"),
+                            F.col(REJECT).alias("line"),
                         ))).alias("dead"),
-                        F.count(F.when(F.col(_SPILLED), 1)).alias("spilled"),
+                        F.count(F.when(F.col(REJECT_SPILLED), 1))
+                        .alias("spilled"),
                     ]
                 split = split.observe(rows_obs, *aggs)
-            decoded = split.filter(F.col(_REJECT).isNull()).drop(
-                _REJECT, _SPILLED, _PARTITION, _ATTEMPT)
+            decoded = split.filter(F.col(REJECT).isNull()).drop(
+                REJECT, REJECT_SPILLED, REJECT_PARTITION, REJECT_ATTEMPT)
             if dead_letter_dir:
-                dead = split.filter(F.col(_REJECT).isNotNull()).select(
-                    F.col(_REJECT).alias("value"))
+                dead = split.filter(F.col(REJECT).isNotNull()).select(
+                    F.col(REJECT).alias("value"))
         try:
             try:
                 sink_fn(decoded, batch_id)

@@ -14,6 +14,14 @@ Reference schema.sql:16-21 defines the entire performance contract (SURVEY
   (set session-wide in session.py).
 - ``Distributed(..., rand())``         -> Spark's native partitioned write; no code.
 
+The reference declares the layout once, in schema.sql, and every INSERT
+follows it. Here the declaration is the ``_layout.json`` marker at the
+table root (sort layout, z-order columns, promoted columns), and one
+writer, :func:`_write_in_layout`, writes every data file of the table:
+:func:`write_logs` and its promoted and z-order variants, every
+copy-on-write rewrite in ``manifest``, and the exactly-once sink's
+staging batches all pass it the marker.
+
 At 100 TB: daily partitions bound each query's scan set; within a day the
 cluster-key sort gives row-group skipping without any index structure to
 maintain; writes scale horizontally because partitions are independent.
@@ -95,14 +103,24 @@ def _write_layout_marker(spark: SparkSession, path: str, layout: dict) -> None:
 
 
 def _read_marker(spark: SparkSession, path: str) -> dict | None:
-    """The layout marker's contents, or None when the table has none."""
+    """The layout marker's contents, or None when the table has none.
+    One FileSystem call: the open itself answers whether the marker
+    exists."""
     import json
 
+    from py4j.java_gateway import is_instance_of
+    from py4j.protocol import Py4JJavaError
+
     fs, hpath_cls, _ = _hadoop_fs(spark, path)
-    mf = hpath_cls(f"{path}/{LAYOUT_MARKER}")
-    if not fs.exists(mf):
-        return None
-    stream = fs.open(mf)
+    try:
+        stream = fs.open(hpath_cls(f"{path}/{LAYOUT_MARKER}"))
+    except Py4JJavaError as e:
+        if is_instance_of(
+            spark.sparkContext._gateway, e.java_exception,
+            "java.io.FileNotFoundException",
+        ):
+            return None
+        raise
     try:
         data = bytes(stream.readAllBytes())
     finally:
@@ -140,88 +158,91 @@ def read_schema(spark: SparkSession, path: str) -> StructType | None:
     return known_schema(_read_marker(spark, path))
 
 
-def _layout_sorted(df: DataFrame, layout: dict) -> DataFrame:
-    """Sort ``df`` per the table's layout contract, the date column
-    leading (FileFormatWriter requires ordering by the partition column
-    when the frame spans partitions)."""
+# the most rows one data file holds
+MAX_RECORDS_PER_FILE = 4_000_000
+
+
+def _write_in_layout(
+    df: DataFrame, out_dir: str, layout: dict, mode: str
+) -> None:
+    """Write logs rows under ``out_dir`` as the layout marker ``layout``
+    prescribes: the one writer of logs-table data files (:func:`write_logs`
+    and its variants, every copy-on-write rewrite in ``manifest``, the
+    exactly-once sink's staging batches). It writes no marker.
+
+    Equivalent of one MergeTree part flush: daily partition dirs
+    (schema.sql:17), rows sorted by the table's sort key within each file
+    (schema.sql:18). Every promoted column the marker records is
+    recomputed from the map (``withColumn`` replaces a copy the frame
+    already carries: a promoted column is by definition
+    ``fields_string[key]``, and a carried copy may be stale, or NULL on
+    pre-promotion rows); ``date`` is derived from ``timestamp`` when the
+    frame lacks it.
+
+    The shuffle is an AQE REBALANCE on the date: small days coalesce to
+    one writer (small-file hygiene), while a hot day is SPLIT across many
+    writer tasks by advisory partition size
+    (``spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled``, on
+    by default) — so at 100 TB/day the day's data fans out over parallel
+    writers instead of funnelling through one task, the MergeTree
+    parallel-part-write contract (each file is an internally sorted
+    "part"; parts may overlap in key space, and row-group min/max stats
+    still skip granules). A plain ``repartitionByRange`` was rejected
+    because its boundary sampling recomputes the full upstream lineage (a
+    second decode pass on the ingest path); REBALANCE sizes partitions
+    from shuffle statistics instead. Inside each file rows follow the
+    marker's sort: the cluster key, or the Morton value of the z-ordered
+    columns then ``timestamp``. ``date`` leads either sort:
+    FileFormatWriter requires ordering by the partition column and would
+    otherwise inject its own sort on date alone, destroying the order
+    inside each file. :data:`MAX_RECORDS_PER_FILE` caps any single file;
+    ``manifest.maintain`` (``cow_compact_partition`` per fragmented day)
+    handles file-count hygiene."""
+    from .transform import promote_string_field
+
+    for key, column in (layout.get("promotions") or {}).items():
+        df = promote_string_field(df, key, column)
+    if PARTITION_COLUMN not in df.columns:
+        df = df.withColumn(PARTITION_COLUMN, F.to_date(F.col("timestamp")))
+    df = df.hint("rebalance", PARTITION_COLUMN)
     if layout.get("layout") == "zorder":
         from .ext.zorder import add_zorder
 
         cols = df.columns
-        z = add_zorder(df, list(layout["cols"]))
-        return z.sortWithinPartitions(
+        df = add_zorder(df, list(layout["cols"])).sortWithinPartitions(
             PARTITION_COLUMN, "_z", "timestamp"
         ).select(*cols)
-    return df.sortWithinPartitions(PARTITION_COLUMN, *CLUSTER_KEY)
+    else:
+        df = df.sortWithinPartitions(PARTITION_COLUMN, *CLUSTER_KEY)
+    (
+        df.write.mode(mode)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .partitionBy(PARTITION_COLUMN)
+        .parquet(out_dir)
+    )
 
 
-def write_logs(
-    df: DataFrame,
-    path: str,
-    mode: str = "append",
-    max_records_per_file: int = 4_000_000,
-    mark_layout: bool = True,
-) -> None:
-    """Write logs rows as date-partitioned, cluster-sorted parquet.
+def write_logs(df: DataFrame, path: str, mode: str = "append") -> None:
+    """Write logs rows as date-partitioned parquet in the table's layout
+    (:func:`_write_in_layout`).
 
-    Equivalent of one MergeTree part flush: daily partition dirs
-    (schema.sql:17), rows sorted by the cluster key within each file
-    (schema.sql:18).  The shuffle is an AQE REBALANCE on the date: small days
-    coalesce to one writer (small-file hygiene), while a hot day is SPLIT
-    across many writer tasks by advisory partition size
-    (``spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled``, on by
-    default) — so at 100 TB/day the day's data fans out over parallel writers
-    instead of funnelling through one task, the exact MergeTree
-    parallel-part-write contract (schema.sql:16-18; each resulting file is an
-    internally cluster-sorted "part"; parts may overlap in key space, and
-    row-group min/max stats still skip granules).  A plain
-    ``repartitionByRange`` was rejected because its boundary sampling
-    recomputes the full upstream lineage (a second decode pass on the ingest
-    path); REBALANCE sizes partitions from shuffle statistics instead.
-    ``maxRecordsPerFile`` caps any single file; ``manifest.maintain``
-    (``cow_compact_partition`` per fragmented day) handles file-count
-    hygiene.
-
-    Promotion invariant (README.md:69-91 DEFAULT-column parity): when the
-    table's layout marker records promoted columns, ANY append through
-    this writer materializes the missing ones from the map — so every
-    data file carries the physical column and the transparent read-path
+    The layout marker is the table's only layout policy: an append into a
+    z-ordered table is z-ordered, and when the marker records promoted
+    columns every file this writes carries them, materialized from the map
+    (README.md:69-91 DEFAULT-column parity), so the transparent read-path
     rewrite (logs_query) never serves NULLs for rows written by a plain
     append. Tables promoted AFTER accumulating plain history need the
     one-off ``manifest.materialize_promotions`` backfill (the MATERIALIZE
-    COLUMN twin).
+    COLUMN twin). A table without a marker gets the default cluster-key
+    marker; ``mode="overwrite"`` deletes the old marker with the old
+    files, so the marker the new files were written by is put back.
     """
-    if mark_layout:
-        promos = read_layout(df.sparkSession, path).get("promotions") or {}
-        missing = {
-            k: c for k, c in promos.items() if c not in df.columns
-        }
-        if missing:
-            from .transform import promote_string_field
-
-            for key, column in missing.items():
-                df = promote_string_field(df, key, column)
-    (
-        df.withColumn(PARTITION_COLUMN, F.to_date(F.col("timestamp")))
-        .hint("rebalance", PARTITION_COLUMN)
-        # date leads the sort: FileFormatWriter requires ordering by the
-        # partition column and would otherwise inject its own sort on date
-        # alone, destroying the cluster-key order inside each file.
-        .sortWithinPartitions(PARTITION_COLUMN, *CLUSTER_KEY)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(path)
-    )
-    # record the sort contract for maintenance jobs; never clobber an
-    # existing marker (an append into a z-ordered table must not flip it).
-    # mark_layout=False for writes into staging/scratch directories that
-    # are not table roots (stream.exactly_once_sink's _staging batches).
-    if mark_layout:
-        spark = df.sparkSession
-        fs, hpath_cls, _ = _hadoop_fs(spark, path)
-        if not fs.exists(hpath_cls(f"{path}/{LAYOUT_MARKER}")):
-            _write_layout_marker(spark, path, {"layout": "cluster"})
+    spark = df.sparkSession
+    marker = _read_marker(spark, path)
+    layout = marker or {"layout": "cluster"}
+    _write_in_layout(df, path, layout, mode)
+    if marker is None or mode == "overwrite":
+        _write_layout_marker(spark, path, layout)
 
 
 def read_logs(spark: SparkSession, path: str) -> DataFrame:
@@ -314,51 +335,32 @@ def write_logs_promoted(
     column scan a dictionary-encoded parquet column and benefit from
     row-group stats; the map column is never touched (Catalyst prunes it).
     """
-    from .transform import promote_string_field
-
     spark = df.sparkSession
     layout = read_layout(spark, path)
-    new_keys = {
-        k: c
-        for k, c in promotions.items()
-        if (layout.get("promotions") or {}).get(k) != c
-    }
+    old = layout.get("promotions") or {}
     # deficiency check BEFORE the write: promoting a key on a table that
     # already holds history means the old files lack the physical column —
     # existence fast paths must fall back to the map until
     # materialize_promotions backfills (see LogsQuery.where_exists)
     had_history = False
-    if new_keys:
+    if any(old.get(k) != c for k, c in promotions.items()):
         fs, hpath_cls, root = _hadoop_fs(spark, path)
         prefix = f"{PARTITION_COLUMN}="
         had_history = fs.exists(root) and any(
             s.isDirectory() and s.getPath().getName().startswith(prefix)
             for s in fs.listStatus(root)
         )
-    out = df
-    for key, column in promotions.items():
-        out = promote_string_field(out, key, column)
-    write_logs(out, path, mode)
-    # record the promotions in the layout marker so read paths
-    # (logs_query, register_view) rewrite map-key access onto the
-    # physical columns without the caller knowing
-    merged = {**(layout.get("promotions") or {}), **promotions}
-    deficient = bool(layout.get("promotions_deficient")) or (
-        bool(new_keys) and had_history
-    )
-    if (
-        layout.get("promotions") != merged
-        or bool(layout.get("promotions_deficient")) != deficient
-    ):
-        _write_layout_marker(
-            spark,
-            path,
-            {
-                **layout,
-                "promotions": merged,
-                "promotions_deficient": deficient,
-            },
-        )
+    # the marker records the promotions so read paths (logs_query,
+    # register_view) rewrite map-key access onto the physical columns
+    # without the caller knowing
+    layout = {
+        **layout,
+        "promotions": {**old, **promotions},
+        "promotions_deficient": bool(layout.get("promotions_deficient"))
+        or had_history,
+    }
+    _write_in_layout(df, path, layout, mode)
+    _write_layout_marker(spark, path, layout)
 
 
 def write_logs_zordered(
@@ -366,40 +368,28 @@ def write_logs_zordered(
     path: str,
     zorder_on: tuple[str, ...] = ("namespace", "app", "host"),
     mode: str = "append",
-    max_records_per_file: int = 4_000_000,
 ) -> None:
     """Write logs z-ordered inside each day partition instead of
-    lexicographically cluster-sorted.
+    lexicographically cluster-sorted, and record the z-order layout in the
+    marker (its promotions kept), so later writes and maintenance
+    rewrites keep the layout.
 
     The lexicographic cluster key (schema.sql:18, :func:`write_logs`) gives
     all of its row-group-skipping power to leading columns; an equality
     filter on a trailing dimension (host) touches every row group. Sorting
-    by the Morton interleave of the dimensions' hashes
-    (:func:`klogs_spark.ext.zorder.zorder_value`) spreads the locality so
+    by the Morton interleave of the dimensions' ranks
+    (:func:`klogs_spark.ext.zorder.add_zorder`) spreads the locality so
     min/max stats skip for ANY of the z-ordered columns — the right layout
     when the query mix filters on several dimensions none of which
     dominates. Timestamp remains the final sort component so time ranges
     stay locally ordered within a z-run.
     """
-    from .ext.zorder import add_zorder
-
-    dated = df.withColumn(PARTITION_COLUMN, F.to_date(F.col("timestamp")))
-    (
-        add_zorder(dated, list(zorder_on))
-        .hint("rebalance", PARTITION_COLUMN)
-        .sortWithinPartitions(PARTITION_COLUMN, "_z", "timestamp")
-        .drop("_z")
-        .select(*dated.columns)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(PARTITION_COLUMN)
-        .parquet(path)
-    )
-    # the z-order writer is the layout authority: maintenance jobs re-sort
-    # rewritten partitions by this marker, not the lexicographic default
-    _write_layout_marker(
-        df.sparkSession, path, {"layout": "zorder", "cols": list(zorder_on)}
-    )
+    spark = df.sparkSession
+    layout = {
+        **read_layout(spark, path), "layout": "zorder", "cols": list(zorder_on)
+    }
+    _write_in_layout(df, path, layout, mode)
+    _write_layout_marker(spark, path, layout)
 
 
 def write_bucketed(

@@ -34,6 +34,43 @@ def job_count(spark, action):
     return len(job_ids(spark, action))
 
 
+def fs_calls(spark, action):
+    """Calls ``action()`` makes on the cached Hadoop FileSystem handles
+    (``table._hadoop_fs``), as a Counter of method names. Each handle is
+    swapped for a counting proxy while ``action`` runs; driver-side calls
+    only (Spark's own writers and readers use their own handles). The
+    default FileSystem's handle, which scheme-less paths use, is cached
+    first."""
+    from collections import Counter
+
+    from klogs_spark.table import _hadoop_fs
+
+    calls = Counter()
+    _hadoop_fs(spark, "/")
+    handles = spark.sparkContext._klogs_hadoop_fs[1]
+    saved = dict(handles)
+
+    class Counting:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            method = getattr(self._fs, name)
+
+            def call(*args):
+                calls[name] += 1
+                return method(*args)
+
+            return call
+
+    handles.update({key: Counting(fs) for key, fs in saved.items()})
+    try:
+        action()
+    finally:
+        handles.update(saved)
+    return calls
+
+
 def stage_operations(spark, job_id) -> set[str]:
     """Names of the operation clusters (SQL operators such as
     ``MapInPandas``, RDD transformations) in the stages of one job, from

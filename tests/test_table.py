@@ -420,3 +420,192 @@ def test_hadoop_fs_handle_never_outlives_its_session(tmp_path):
         "first", "ok", "second", "ok", "vanilla", "ok"
     ]
     assert (tmp_path / "vanilla" / "part").read_text() == "vanilla"
+
+
+# --- one writer: every write follows the layout marker -------------------
+
+_ZCOLS = ["app", "host"]
+_PROMOTED = {"level": "level_p"}
+_KINDS = {
+    "cluster": {"layout": "cluster"},
+    "promoted": {"layout": "cluster", "promotions": _PROMOTED,
+                 "promotions_deficient": False},
+    "zorder": {"layout": "zorder", "cols": _ZCOLS},
+}
+
+
+def _grid(spark, days, hour):
+    """Every (app, host, pod) combination once per day: each day and
+    every write or rewrite of whole days holds the same distinct z-order
+    values, so a file's own values rank its rows as its write did. The
+    z-order and the cluster-key order of these rows differ."""
+    rows = [
+        (datetime(2026, 1, d, hour, i // 8, i % 8), "prod", "ns", f"a{a}",
+         f"pod-{p}", "c", f"h{h}",
+         {"level": f"l{(a + h + p) % 3}", "src": f"s{i}"},
+         {"v": float(i)}, f"d{d} line {i}")
+        for d in days
+        for i, (a, h, p) in enumerate(
+            (a, h, p) for a in range(4) for h in range(4) for p in range(2)
+        )
+    ]
+    return spark.createDataFrame(
+        rows,
+        "timestamp timestamp, cluster string, namespace string, app string, "
+        "pod_name string, container_name string, host string, "
+        "fields_string map<string,string>, fields_number map<string,double>, "
+        "log string",
+    )
+
+
+def _live_files(spark, path) -> set:
+    from klogs_spark import manifest
+
+    versions = manifest.snapshot_versions(spark, path)
+    head = (
+        manifest._manifest_files(spark, path, versions[-1]) if versions
+        else []
+    )
+    return set(head) | manifest._unmanifested_files(spark, path)
+
+
+def _zvalues(table) -> list:
+    """ext.zorder.add_zorder's Morton value of each row, ranked over the
+    file's own distinct values."""
+    from klogs_spark.ext.zorder import ZORDER_BITS
+
+    n, width = len(_ZCOLS), 1 << ZORDER_BITS
+    ranks = []
+    for c in _ZCOLS:
+        values = table.column(c).to_pylist()
+        distinct = sorted(set(values))
+        rank = {v: i * width // len(distinct) for i, v in enumerate(distinct)}
+        ranks.append([rank[v] for v in values])
+    return [
+        sum(
+            ((r[j] >> i) & 1) << (i * n + (n - 1 - j))
+            for i in range(ZORDER_BITS) for j in range(n)
+        )
+        for r in zip(*ranks)
+    ]
+
+
+def _assert_in_layout(path, f, marker, check_sort):
+    """Data file ``f`` carries every promoted column of ``marker`` equal
+    to its map value and, when ``check_sort``, follows its sort."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{path}/{f}")
+    maps = [dict(m) for m in t.column("fields_string").to_pylist()]
+    for key, column in (marker.get("promotions") or {}).items():
+        assert column in t.column_names, f"{f} lacks {column}"
+        assert t.column(column).to_pylist() == [m.get(key) for m in maps]
+    if not check_sort:
+        return
+    ts = t.column("timestamp").to_pylist()
+    if marker["layout"] == "zorder":
+        order = list(zip(_zvalues(t), ts))
+    else:
+        order = list(zip(*(t.column(c).to_pylist() for c in CLUSTER_KEY)))
+    assert order == sorted(order), f"{f} is not in {marker['layout']} order"
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+@pytest.mark.parametrize("write", [
+    "write_logs", "write_logs_overwrite", "write_logs_promoted",
+    "write_logs_zordered", "exactly_once_sink", "cow_delete_where",
+    "cow_merge_upsert",
+])
+def test_every_write_follows_the_layout_marker(spark, tmp_path, kind, write):
+    """After any write into a cluster, promoted or z-ordered table, the
+    marker keeps its promotions (and takes the layout or promotion the
+    write asked for), every file the write added follows the marker's
+    sort, and every live file carries the promoted columns; a table left
+    ``promotions_deficient`` has them in the files just written."""
+    from pyspark.sql import functions as F
+
+    from klogs_spark import manifest, stream
+    from klogs_spark.table import (
+        read_layout, write_logs_promoted, write_logs_zordered,
+    )
+
+    path = str(tmp_path / "t")
+    base = _grid(spark, (1, 2), 0)
+    if kind == "cluster":
+        write_logs(base, path)
+    elif kind == "promoted":
+        write_logs_promoted(base, path, _PROMOTED)
+    else:
+        write_logs_zordered(base, path, tuple(_ZCOLS))
+    manifest.publish_snapshot(spark, path)
+    expected = dict(_KINDS[kind])
+    assert read_layout(spark, path) == expected
+    before = _live_files(spark, path)
+    batch = _grid(spark, (2, 3), 1)
+
+    if write == "write_logs":
+        write_logs(batch, path)
+    elif write == "write_logs_overwrite":
+        write_logs(batch, path, mode="overwrite")
+    elif write == "write_logs_promoted":
+        write_logs_promoted(batch, path, _PROMOTED)
+        if kind != "promoted":
+            expected.update(promotions=_PROMOTED, promotions_deficient=True)
+    elif write == "write_logs_zordered":
+        write_logs_zordered(batch, path, tuple(_ZCOLS))
+        expected.update(layout="zorder", cols=_ZCOLS)
+    elif write == "exactly_once_sink":
+        stream.exactly_once_sink(path)(batch, 0)
+    elif write == "cow_delete_where":
+        manifest.cow_delete_where(spark, path, F.col("pod_name") == "pod-1")
+    else:
+        day1 = read_logs(spark, path).filter("date = DATE'2026-01-01'")
+        updates = day1.filter("app = 'a0'").drop("date").withColumn(
+            "fields_string", F.create_map(
+                F.lit("level"), F.lit("changed"),
+                F.lit("src"), F.col("fields_string")["src"],
+            ),
+        )
+        manifest.cow_merge_upsert(
+            spark, path, updates, ["timestamp", "pod_name"]
+        )
+
+    marker = read_layout(spark, path)
+    assert marker == expected
+    live = _live_files(spark, path)
+    added = live - before
+    assert added
+    for f in live if not marker.get("promotions_deficient") else added:
+        _assert_in_layout(path, f, marker, check_sort=f in added)
+
+
+# --- driver-side FileSystem calls per verb ------------------------------
+
+
+def test_write_verbs_filesystem_calls(spark, logs_df, tmp_path):
+    """Hadoop FileSystem calls the driver makes per write, pinned so a
+    change cannot add round trips to an object store unseen. An append
+    reads the marker with one ``open``; an exactly-once batch reads the
+    table's marker and lets ``create`` make its ``_commits`` directory; a
+    rewrite reads the marker once."""
+    from pyspark.sql import functions as F
+
+    from klogs_spark import manifest, stream
+    from klogs_spark.views import derive_logs_from_events
+    from tests.conftest import SF_SMOKE, fs_calls
+
+    logs = derive_logs_from_events(spark, SF_SMOKE)
+    path = str(tmp_path / "t")
+    write_logs(logs.filter("pod_name != 'pod-7'"), path)
+
+    def total(action):
+        return sum(fs_calls(spark, action).values())
+
+    assert total(lambda: write_logs(logs.filter("pod_name = 'pod-7'"),
+                                    path)) == 1
+    sink = stream.exactly_once_sink(path)
+    assert total(lambda: sink(logs.filter("pod_name = 'pod-3'"), 0)) == 118
+    manifest.publish_snapshot(spark, path)
+    assert total(lambda: manifest.cow_delete_where(
+        spark, path, F.col("pod_name") == "pod-5"
+    )) == 179

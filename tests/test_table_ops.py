@@ -806,17 +806,17 @@ def test_cow_delete_writes_nothing_for_fully_matched_days(
     """A day whose every row matches just leaves the file list: its rows
     are read once, for the count, and no survivor write runs for it,
     while a partly matched day is rewritten."""
-    from klogs_spark import manifest
+    from klogs_spark import manifest, table
 
     path = str(tmp_path / "t")
     _two_file_days(spark, path)
     total = read_logs(spark, path).count()
     appended = []
-    real_append = manifest._append_in_layout
+    real_write = table._write_in_layout
     monkeypatch.setattr(
-        manifest, "_append_in_layout",
-        lambda spark, df, path: appended.append(df) or real_append(
-            spark, df, path
+        table, "_write_in_layout",
+        lambda df, out_dir, layout, mode: appended.append(df) or real_write(
+            df, out_dir, layout, mode
         ),
     )
 
@@ -1414,6 +1414,7 @@ def test_cow_compact_crash_and_recovery_paths(spark, tmp_path, monkeypatch):
     import pytest as _pytest
 
     from klogs_spark import manifest as M
+    from klogs_spark import table as T
 
     from pyspark.sql import functions as F
 
@@ -1433,10 +1434,10 @@ def test_cow_compact_crash_and_recovery_paths(spark, tmp_path, monkeypatch):
     v1 = M.publish_snapshot(spark, path)
 
     # window 1: crash right after the journal write, before any append
-    def exploding_append(spark_, df_, path_):
+    def exploding_append(df_, out_dir_, layout_, mode_):
         raise RuntimeError("injected crash before survivor append")
 
-    monkeypatch.setattr(M, "_append_in_layout", exploding_append)
+    monkeypatch.setattr(T, "_write_in_layout", exploding_append)
     with _pytest.raises(RuntimeError, match="injected crash"):
         M.cow_compact_partition(spark, path, day)
     monkeypatch.undo()
@@ -1600,7 +1601,7 @@ def test_restore_snapshot_reverses_delete_and_respects_vacuum_horizon(
 
 # ---------------------------------------------------------------------------
 # VERDICT r11 #1: COW rewrites on PROMOTED tables must re-derive the promoted
-# physical columns for every carried row (manifest._restore_promotions). The
+# physical columns for every carried row (table._write_in_layout). The
 # r10 bug: a COW delete on a write_logs_promoted table dropped the promoted
 # column from the rewritten files entirely, so promoted reads and
 # where_exists fast paths silently returned wrong results afterwards.
@@ -1801,18 +1802,18 @@ def _inject_after_append(monkeypatch, competitor):
     """Run ``competitor`` once, right after the racing rewrite appends its
     survivor files but before it validates/publishes — the classic
     read-modify-write race window."""
-    from klogs_spark import manifest as M
+    from klogs_spark import table as T
 
-    orig = M._append_in_layout
+    orig = T._write_in_layout
     state = {"fired": False}
 
-    def wrapped(spark, df, path):
-        orig(spark, df, path)
+    def wrapped(df, out_dir, layout, mode):
+        orig(df, out_dir, layout, mode)
         if not state["fired"]:
             state["fired"] = True
             competitor()
 
-    monkeypatch.setattr(M, "_append_in_layout", wrapped)
+    monkeypatch.setattr(T, "_write_in_layout", wrapped)
 
 
 def test_cow_delete_loses_race_to_compact_then_retries(
@@ -2235,15 +2236,16 @@ def test_finish_rewrite_publish_collision_aborts_and_cleans_up(
     import pytest as _pytest
 
     from klogs_spark import manifest as M
-    from klogs_spark.table import _hadoop_fs
+    from klogs_spark.table import _hadoop_fs, _write_in_layout, read_layout
 
     path, n_total = _race_setup(spark, tmp_path)
     base = M._cow_base_version(spark, path)
     keep = set(M._manifest_files(spark, path, base))
     before, tok = M._begin_rewrite(spark, path, "cow_delete_where", base)
     # the rewrite appends its survivor files...
-    M._append_in_layout(
-        spark, M.read_logs_at(spark, path, base).limit(10), path
+    _write_in_layout(
+        M.read_logs_at(spark, path, base).limit(10), path,
+        read_layout(spark, path), "append",
     )
 
     def lost_rename(_spark, _path, files=None):
@@ -4011,7 +4013,7 @@ def test_mor_delete_on_promoted_table_keeps_promotions_through_fold(
     """The promoted-column contract survives the MOR tier: deletes under
     a vector read the promoted physical column correctly, and dv_compact
     re-derives promotions on the materialized survivors (the
-    _restore_promotions path every COW rewrite takes)."""
+    table._write_in_layout path every COW rewrite takes)."""
     from klogs_spark.manifest import (
         dv_compact,
         mor_delete_where,
@@ -5446,7 +5448,7 @@ def test_lost_race_spares_survivors_of_the_journal_holder(spark, tmp_path):
     import json
 
     from klogs_spark import manifest as M
-    from klogs_spark.table import _hadoop_fs
+    from klogs_spark.table import _hadoop_fs, _write_in_layout, read_layout
 
     path, n_total = _race_setup(spark, tmp_path)
     base = M._cow_base_version(spark, path)
@@ -5457,8 +5459,9 @@ def test_lost_race_spares_survivors_of_the_journal_holder(spark, tmp_path):
         {"op": "competitor", "base_version": base,
          "before": sorted(before), "token": "competitor"},
     )
-    M._append_in_layout(
-        spark, M.read_logs_at(spark, path, base).limit(10), path
+    _write_in_layout(
+        M.read_logs_at(spark, path, base).limit(10), path,
+        read_layout(spark, path), "append",
     )
     theirs = set(M._list_data_files(fs, root, hpath_cls)) - before
     assert theirs
